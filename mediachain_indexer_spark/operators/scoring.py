@@ -45,11 +45,6 @@ class ScoringConfig:
     hamming_radius: int = 8
     text_floor: float = 0.40
     text_only_threshold: float = 0.99
-    # fan-out width for the score stage; None → 2 × defaultParallelism.
-    # The upstream pair table is AQE-coalesced to few partitions (it is
-    # byte-small), but scoring is CPU-heavy per row (2× levenshtein O(mn) +
-    # JW batch) — without an explicit repartition most cores idle.
-    score_partitions: int | None = None
 
 
 def min_hamming(a_hashes, b_hashes) -> "F.Column":
@@ -90,19 +85,13 @@ def score_pairs(
     is cascade-gated (functions/simtext.make_gated_jw): null on rows where
     no jw value could change ``is_match``.
     """
-    # NO entry repartition by default (round-5 A/B, 2M docs / 24.9M pairs,
-    # 2 alternating reps each): the historical round-robin
-    # repartition(2×parallelism) was wall-neutral at the score stage
-    # (47.5/48.3 s with vs 49.3/47.8 s without, outputs bit-identical) —
-    # the doc_a feature join re-shuffles the pair table by key immediately,
-    # so the round-robin exchange balances nothing the join exchange
-    # doesn't.  Locally that extra shuffle hides in tmpfs+lz4; on a real
-    # cluster it is a full network pass over the biggest table in the
-    # pipeline.  cfg.score_partitions stays honored for callers that need
-    # an explicit width (e.g. to override a pathological upstream AQE
-    # coalesce).
-    if cfg.score_partitions:
-        pairs = pairs.repartition(cfg.score_partitions)
+    # No entry repartition (round-5 A/B, 2M docs / 24.9M pairs, 2
+    # alternating reps each): a round-robin repartition(2×parallelism) was
+    # wall-neutral (47.5/48.3 s with vs 49.3/47.8 s without, outputs
+    # bit-identical) — the doc_a feature join re-shuffles the pair table by
+    # key immediately, so the round-robin exchange balances nothing the join
+    # exchange doesn't, and on a real cluster it is a full network pass
+    # over the biggest table in the pipeline.
     fa = features.select(
         F.col("doc_id").alias("doc_a"),
         F.col("norm_text").alias("text_a"),
@@ -173,8 +162,12 @@ def score_pairs(
     #
     # Emitted values are bit-identical in every branch (er_matches /
     # er_matches_grouped oracle hash-match; decision-invariance suite).
-    smax_len = F.greatest(F.length("text_a"), F.length("text_b"))
-    slen_gap = F.abs(F.length("text_a") - F.length("text_b"))
+    # A null text counts as '' here, as concat_ws made it before the gating:
+    # a null side scores lev_sim_sorted 0.0 (1.0 if both are null), not NULL.
+    la = F.length(F.coalesce(F.col("text_a"), F.lit("")))
+    lb = F.length(F.coalesce(F.col("text_b"), F.lit("")))
+    smax_len = F.greatest(la, lb)
+    slen_gap = F.abs(la - lb)
     sorted_ub = F.when(smax_len == 0, F.lit(1.0)).otherwise(
         1.0 - slen_gap / smax_len
     )

@@ -44,6 +44,14 @@ def test_f1_gate_3000(spark):
     assert m["f1"] >= 0.99, m
 
 
+def test_scored_cache_coalesced_below_shuffle_width(spark, result500):
+    """AQE may coalesce inside persist()ed plans: the 500-doc scored cache
+    runs narrower than spark.sql.shuffle.partitions."""
+    result500.scored.count()
+    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert result500.scored.rdd.getNumPartitions() < width
+
+
 def test_no_row_python_in_plan(spark, result500):
     """BASELINE.md row 6: plan may contain ArrowEvalPython (pandas_udf),
     never BatchEvalPython (row-at-a-time Python UDF)."""

@@ -189,13 +189,14 @@ def test_score_cascade_sorted_channel_matches_ungated_reference(spark):
         ("d1", "x", far),                     # junk vs a1: far media + gap
         ("e1", "", near),                     # empty text
         ("f1", "hello world extra", None),    # no media → HAMMING_FAR
+        ("g1", "world hello", far),           # token reorder of a1, far media
     ]
     feats = spark.createDataFrame(
         feats_rows, "doc_id string, norm_text string, phashes array<long>"
     )
     pair_rows = [
         ("a1", "a2"), ("a1", "b1"), ("a1", "c1"), ("a1", "d1"),
-        ("a1", "e1"), ("a1", "f1"), ("d1", "e1"),
+        ("a1", "e1"), ("a1", "f1"), ("d1", "e1"), ("a1", "g1"),
     ]
     pairs = spark.createDataFrame(pair_rows, "doc_a string, doc_b string")
     got = {
@@ -226,6 +227,36 @@ def test_score_cascade_sorted_channel_matches_ungated_reference(spark):
         row = got[(da, db)]
         assert row["min_hamming"] == mh, (da, db, row)
         assert row["lev_sim_sorted"] == exp, (da, db, exp, row)
+    # far media: only the sorted-equal ub (= 1.0 ≥ τ) lets the pair into
+    # the DP-need branch, where the memcmp short-circuit answers it
+    assert got[("a1", "g1")]["min_hamming"] > cfg.hamming_radius
+    assert got[("a1", "g1")]["lev_sim_sorted"] == 1.0
+
+
+def test_score_pairs_null_text_scores_as_empty(spark):
+    """A null norm_text scores every decision column as '' does — never
+    NULL — on far-media, in-radius and both-null pairs."""
+    from mediachain_indexer_spark.operators.scoring import score_pairs
+
+    near, far = [1], [1022]
+    pairs = spark.createDataFrame(
+        [("a1", "n1"), ("a1", "n2"), ("n1", "n2")], "doc_a string, doc_b string"
+    )
+
+    def scored(null_as):
+        feats = spark.createDataFrame(
+            [("a1", "hello world", near), ("n1", null_as, far), ("n2", null_as, near)],
+            "doc_id string, norm_text string, phashes array<long>",
+        )
+        cols = ["lev_sim_sorted", "text_sim", "score", "is_match"]
+        return {
+            (r["doc_a"], r["doc_b"]): tuple(r[c] for c in cols)
+            for r in score_pairs(pairs, feats).collect()
+        }
+
+    got, ref = scored(None), scored("")
+    assert got == ref
+    assert all(v is not None for row in got.values() for v in row), got
 
 
 def test_lsh_band_keys_match_transform_reference(spark):
