@@ -9,12 +9,12 @@ components) emits the entity table.
 
 ``queries()`` / ``oracle_sql()`` — operator catalog from SURVEY.md §2.2
 (mediachain_indexer_spark/catalog.py) checked against DuckDB.  Since round
-5 ALL NINE er_* pipeline surfaces carry full DuckDB oracles over the
+5 ALL EIGHT er_* pipeline surfaces carry full DuckDB oracles over the
 fixture spans parquet itself: normalize, blocks (bit-exact xxhash64 band
-keys via catalog._xxh64_any_cte_chain), candidate pairs, both scorers
-(er_matches with its cascade replicated, er_matches_grouped exact — the
-reference Jaro-Winkler kernel is re-derived bit-exact as a recursive CTE
-in mediachain_indexer_spark/er_oracle.py), transitive clusters (min-label
+keys via catalog._xxh64_any_cte_chain), candidate pairs, the scorer
+(er_matches with its cascade replicated — the reference Jaro-Winkler
+kernel is re-derived bit-exact as a recursive CTE in
+mediachain_indexer_spark/er_oracle.py), transitive clusters (min-label
 closure), the F1 metric row, and the incremental/deletion stores (their
 results are proven ≡ one-shot batch clustering, so the batch chain IS
 their oracle).  Only agg_approx_distinct_users stays rows-only (HLL).
@@ -70,7 +70,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # ER-pipeline entries over the seeded spans corpus (FIXTURES.md §B);
-# all nine carry full DuckDB oracles since round 5 (er_oracle.py)
+# all eight carry full DuckDB oracles since round 5 (er_oracle.py)
 #
 # The full PipelineResult is memoized PER SESSION and every er_* entry is a
 # slice of it: a driver correctness sweep over all 8 entries used to re-run
@@ -96,10 +96,10 @@ def _er_pipeline(spark: SparkSession):
     """One fx2000 run_pipeline per session, stages persisted for slicing.
 
     run_pipeline already persists features + scored; blocks is additionally
-    persisted here because two entries (er_candidate_pairs via res.pairs and
-    er_matches_grouped) traverse it independently, and the CC loop inside
-    run_pipeline has already materialized the cluster edges
-    (localCheckpoint), so every slice below is cheap."""
+    persisted here because two entries (er_blocks and er_eval_f1) traverse
+    it independently, and the CC loop inside run_pipeline has already
+    materialized the cluster edges (localCheckpoint), so every slice below
+    is cheap."""
     key = spark.sparkContext.applicationId
     if key not in _ER_CACHE:
         from mediachain_indexer_spark.plans.pipeline import run_pipeline
@@ -131,18 +131,6 @@ def _er_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _er_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _er_pipeline(spark).matches
-
-
-def _er_matches_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-block in-worker scoring fallback (block-sorted mapInPandas: pairs
-    + exact scores inside the Python worker) — decision-equivalent to er_matches
-    (tests/test_scoring_grouped.py asserts bit-identical is_match).  Reuses
-    the memoized pipeline's persisted features/blocks; only the grouped
-    scorer itself runs fresh."""
-    from mediachain_indexer_spark.operators.scoring import score_pairs_in_blocks
-
-    res = _er_pipeline(spark)
-    return score_pairs_in_blocks(res.blocks, res.features).where(F.col("is_match"))
 
 
 def _er_incremental_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -271,10 +259,10 @@ def _er_eval_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The driver's correctness ledger records exactly the FIRST 50 registered
 # queries in dict order (established round 3: r03's 50 keys were precisely
 # registration positions 1-50 of 54, silently dropping the four flagship
-# er_* surfaces).  So: the 9 er_* pipeline entries register FIRST, and four
+# er_* surfaces).  So: the 8 er_* pipeline entries register FIRST, and five
 # catalog entries whose operator family already has another green hash-match
 # row are withheld from registration (still implemented + pytest-covered in
-# catalog.py) to land at exactly 50.
+# catalog.py) to stay within 50 (49 registered).
 #
 # The withheld set ROTATES per round (round-4 verdict #8) so every catalog
 # entry has a recorded driver hash-match within the last two rounds.  Round
@@ -344,7 +332,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "er_blocks": _er_blocks,
         "er_candidate_pairs": _er_candidate_pairs,
         "er_matches": _er_matches,
-        "er_matches_grouped": _er_matches_grouped,
     }
     for name, fn in catalog.queries().items():
         if name not in _WITHHELD:
@@ -468,7 +455,7 @@ _CHAIN_FLAT_VALUES = (
 def oracle_sql() -> dict[str, str]:
     """ANSI-SQL oracles for every ``queries()`` entry except the HLL one.
 
-    All nine er_* surfaces are DuckDB-oracled over the fixture spans
+    All eight er_* surfaces are DuckDB-oracled over the fixture spans
     parquet (mediachain_indexer_spark/er_oracle.py builders):
 
     - ``er_normalize_features`` — pure SQL (UNNEST + ORDER BY offset,
@@ -480,7 +467,6 @@ def oracle_sql() -> dict[str, str]:
     - ``er_matches`` — the cascade scorer replicated exactly (bound-emitting
       Levenshtein branches, gated Jaro-Winkler re-derived bit-exact as a
       recursive CTE over the 64-char-truncated inputs);
-    - ``er_matches_grouped`` — the exact-kernel variant;
     - ``er_clusters`` — match edges → recursive min-label closure (the
       large-star/small-star loop's order-free RESULT);
     - ``er_eval_f1`` — labels × block keys × SQL clusters → P/R/F1;
@@ -517,7 +503,6 @@ def oracle_sql() -> dict[str, str]:
         "er_blocks": _er_blocks_oracle(),
         "er_candidate_pairs": _er_candidate_pairs_oracle(),
         "er_matches": er_oracle.matches_sql(fx),
-        "er_matches_grouped": er_oracle.matches_grouped_sql(fx),
     }
     out.update(
         {k: v for k, v in catalog.oracle_sql().items() if k not in _WITHHELD}

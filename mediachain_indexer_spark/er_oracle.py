@@ -369,40 +369,6 @@ final AS (
 
 
 # ---------------------------------------------------------------------------
-# exact scorer (grouped path: operators/scoring.score_pairs_in_blocks)
-# ---------------------------------------------------------------------------
-def exact_scored_ctes() -> str:
-    """The grouped scorer computes EXACT kernels everywhere (no cascade
-    bounds, no jw gating) with the equality fast path presetting all three
-    similarities to 1.0 — so the oracle needs the JW kernel on every
-    non-equal pair and coalesces the equal pairs to 1.0."""
-    return f"""lv AS (
-  SELECT doc_a, doc_b, mh, ta, tb,
-    CASE WHEN ta = tb OR greatest(length(ta), length(tb)) = 0 THEN 1.0{_D}
-         ELSE 1.0{_D} - levenshtein(ta, tb) / greatest(length(ta), length(tb))
-    END AS lev_sim,
-    CASE WHEN ta = tb OR greatest(length(sa), length(sb)) = 0 THEN 1.0{_D}
-         ELSE 1.0{_D} - levenshtein(sa, sb) / greatest(length(sa), length(sb))
-    END AS lev_sim_sorted
-  FROM base
-),
-{_jwin_cte("lv", "ta != tb")},
-{jw_ctes()},
-final AS (
-  SELECT doc_a, doc_b, text_sim, min_hamming,
-    0.6{_D} * text_sim + 0.4{_D} * (1.0{_D} - least(min_hamming, 16) / 16.0{_D}) AS score,
-    ((min_hamming <= 8 AND text_sim >= 0.4{_D}) OR text_sim >= 0.99{_D}) AS is_match
-  FROM (
-    SELECT g.doc_a, g.doc_b,
-      greatest((COALESCE(jwv.jw, 1.0{_D}) + g.lev_sim) / 2.0{_D},
-               g.lev_sim_sorted) AS text_sim,
-      g.mh AS min_hamming
-    FROM lv g LEFT JOIN jwv ON jwv.doc_a = g.doc_a AND jwv.doc_b = g.doc_b
-  )
-)"""
-
-
-# ---------------------------------------------------------------------------
 # connected components (operators/cluster.py large-star/small-star result)
 # ---------------------------------------------------------------------------
 def cc_ctes() -> str:
@@ -437,17 +403,6 @@ WITH RECURSIVE {kernel_ctes(spans_path)},
 {cascade_scored_ctes()}
 SELECT doc_a, doc_b, jw, lev_sim, lev_sim_sorted, text_sim, min_hamming,
        score, is_match
-FROM final WHERE is_match
-"""
-
-
-def matches_grouped_sql(spans_path: str) -> str:
-    """er_matches_grouped: exact-scored pairs WHERE is_match (6 columns)."""
-    return f"""
-WITH RECURSIVE {kernel_ctes(spans_path)},
-{pairs_feats_ctes("er_matches_grouped oracle")},
-{exact_scored_ctes()}
-SELECT doc_a, doc_b, text_sim, min_hamming, score, is_match
 FROM final WHERE is_match
 """
 

@@ -1,17 +1,25 @@
-"""MinHash signatures entirely in JVM via higher-order array functions.
+"""MinHash signatures as a vectorized numpy Arrow ``pandas_udf``.
 
 Parity: the reference's next-gen dedupe model blocks candidates by hashing
 substrings/bands of a binary signature so near-duplicates collide in ≥1 band
 (``mediachain/indexer/mc_dedupe.py`` / ``mc_models.py``, the ``baseline_ng``
 banding model).  Here the signature is a classic MinHash over character
-n-gram shingles, built with ``transform``/``sequence``/``array_min`` so the
-whole computation stays inside whole-stage codegen — zero Python, zero UDF.
+n-grams, computed batch-wide in numpy (one Arrow crossing, no per-row
+Python):
 
-Hash family: h_j(t) = (A_j * (xxhash64(t) mod P) + B_j) mod P with
-P = 2^31 - 1 (Mersenne prime).  Keeping the inner value < P before the
-multiply bounds products at < 2^62, so the expressions are safe under ANSI
-overflow checking (Spark 4 default).  A_j/B_j are seeded literals → Catalyst
-constant-folds them.
+- strings → (batch, maxlen) uint64 code-point matrix;
+- 3-gram rolling hash via three shifted views + avalanche mix (one pass);
+- ``num_hashes`` permutations (a_j · h + b_j) mod P as vectorized sweeps.
+
+Hash family: h_j(t) = (A_j * (h(t) mod P) + B_j) mod P with P = 2^31 - 1
+(Mersenne prime).  Keeping the inner value < P before the multiply bounds
+products at < 2^62.  Deterministic: fixed coefficients from ``seed``, pure
+integer math.  Scale: no shuffle, embarrassingly parallel, Arrow-batched.
+A pure-JVM higher-order-function variant was measured slower (Spark
+evaluates HOF lambdas interpreted, per array element, outside whole-stage
+codegen — minutes for 100k docs) and removed.
+
+The band keys (``lsh_band_keys``) stay JVM-side codegen expressions.
 """
 
 from __future__ import annotations
@@ -32,74 +40,6 @@ def _coefficients(num_hashes: int, seed: int) -> tuple[list[int], list[int]]:
     a = [rng.randrange(1, MERSENNE_P) for _ in range(num_hashes)]
     b = [rng.randrange(0, MERSENNE_P) for _ in range(num_hashes)]
     return a, b
-
-
-def shingles(text: Column, n: int = 3) -> Column:
-    """Character n-gram shingles of ``text`` (array<string>).
-
-    shingle_i = substring(text, i+1, n) for i in 0..len-n; short strings
-    yield the string itself as a single shingle so no doc is unblockable.
-    """
-    count = F.greatest(F.length(text) - F.lit(n), F.lit(0))
-    return F.transform(
-        F.sequence(F.lit(0), count),
-        lambda i: text.substr(i + F.lit(1), F.lit(n)),
-    )
-
-
-def minhash_signature(
-    text: Column, num_hashes: int = 64, n: int = 3, seed: int = 42
-) -> Column:
-    """MinHash signature (array<long>, length ``num_hashes``) of ``text``.
-
-    slot_j = min over shingles t of (A_j * (xxhash64(t) mod P) + B_j) mod P.
-    Empty/null text → null signature (callers filter those docs out of
-    text-blocking; they may still block via media hashes).
-
-    Plan-size note: built as ONE nested higher-order expression
-    (transform over a j-sequence, coefficients via element_at on literal
-    arrays) rather than ``num_hashes`` sibling expressions — an O(k)-branch
-    projection blows up Catalyst analysis/codegen time, which dominated
-    wall-clock before tasks even launched.
-    """
-    a_coef, b_coef = _coefficients(num_hashes, seed)
-    a_lit = F.array(*[F.lit(a) for a in a_coef])
-    b_lit = F.array(*[F.lit(b) for b in b_coef])
-    sh = shingles(text, n)
-    # hash each shingle once; derive all k permutation-mins from that base
-    base = F.transform(sh, lambda t: F.pmod(F.xxhash64(t), F.lit(MERSENNE_P)))
-    sig = F.transform(
-        F.sequence(F.lit(1), F.lit(num_hashes)),
-        lambda j: F.array_min(
-            F.transform(
-                base,
-                lambda h: F.pmod(
-                    F.element_at(a_lit, j) * h + F.element_at(b_lit, j),
-                    F.lit(MERSENNE_P),
-                ),
-            )
-        ),
-    )
-    return F.when(text.isNotNull() & (F.length(text) > 0), sig)
-
-
-# ---------------------------------------------------------------------------
-# Vectorized numpy MinHash (the hot-path implementation)
-# ---------------------------------------------------------------------------
-#
-# The pure-HOF version above is semantically clean but Spark evaluates
-# higher-order lambda functions INTERPRETED, per array element, outside
-# whole-stage codegen — at 64 slots × ~40 shingles × re-evaluated base that
-# was the pipeline bottleneck (minutes for 100k docs).  The production path
-# is an Arrow ``pandas_udf`` whose whole batch is numpy matrix math:
-#
-# - strings → (batch, maxlen) uint64 code-point matrix;
-# - 3-gram rolling hash via three shifted views + avalanche mix (one pass);
-# - 64 permutations (a_j · h + b_j) mod P as 64 vectorized sweeps.
-#
-# Deterministic: fixed coefficients from `seed`, pure integer math.
-# Scale: no shuffle, embarrassingly parallel, Arrow-batched — exactly the
-# "vectorized pandas/Arrow UDFs, no per-row Python" contract.
 
 
 def _mix64(h: np.ndarray) -> np.ndarray:
@@ -137,9 +77,8 @@ def _shingle_hashes(texts: pd.Series, n: int) -> tuple[np.ndarray, np.ndarray]:
 def make_minhash_udf(num_hashes: int = 64, n: int = 3, seed: int = 42):
     """Factory: Arrow pandas_udf computing MinHash signatures (array<long>).
 
-    Same (b, r) banding semantics as the HOF version; hash family differs
-    (numpy rolling hash vs xxhash64) — irrelevant, signatures only need
-    self-consistency.
+    Empty/null text → null signature (those docs skip text blocking; they
+    may still block via media hashes).
     """
     a_coef, b_coef = _coefficients(num_hashes, seed)
     a_np = np.array(a_coef, dtype=np.uint64)
@@ -193,8 +132,8 @@ def lsh_band_keys(
     unrolled form is pure codegen — measured at the 100k bench corpus
     (12×6 banding): block-stage noop 0.80-0.95s → 0.61-0.67s, byte-identical
     keys (round 6).  The expression count is bands×rows (≤ ~10² for every
-    documented config) — far below the O(num_hashes)-sibling-projection
-    blowup the MinHash HOF variant's docstring warns about.
+    documented config), small enough that Catalyst analysis and codegen
+    time stay negligible.
     """
     keys = []
     for b in range(bands):

@@ -179,69 +179,6 @@ def make_gated_jw(hamming_radius: int, text_floor: float, text_only: float):
 
 
 # ---------------------------------------------------------------------------
-# Vectorized Levenshtein (numpy batch DP) — used by the per-block
-# in-worker scoring fallback (operators/scoring.score_pairs_in_blocks),
-# where the JVM levenshtein built-in isn't reachable.  No truncation: pads to
-# the batch max length.
-# ---------------------------------------------------------------------------
-def _encode_width(s: pd.Series, width: int) -> np.ndarray:
-    arr = np.asarray(s.to_numpy(), dtype=f"U{width}")
-    codes = arr.view(np.uint32).reshape(len(s), width).astype(np.int32)
-    codes[codes == 0] = _PAD
-    return codes
-
-
-def levenshtein_batch(a: pd.Series, b: pd.Series) -> np.ndarray:
-    """Exact edit distance over a batch of string pairs → int64 array.
-
-    Row-at-a-time DP vectorized across the batch: one loop over character
-    positions of `a` (≤ batch max length), each step O(batch × len_b) numpy.
-    The insertion recurrence curr[j] = min(..., curr[j-1]+1) is sequential in
-    j; it folds into a prefix scan —
-        curr[j] = j + min_{k<=j}(t[k] - k)  via np.minimum.accumulate —
-    where t[] holds the deletion/substitution candidates.
-    """
-    a = a.fillna("")
-    b = b.fillna("")
-    n = len(a)
-    if n == 0:
-        return np.zeros(0, dtype=np.int64)
-    width = max(int(a.str.len().max()), int(b.str.len().max()), 1)
-    A = _encode_width(a, width)
-    B = _encode_width(b, width)
-    la = (A != _PAD).sum(axis=1)
-    lb = (B != _PAD).sum(axis=1)
-
-    ar = np.arange(width + 1, dtype=np.int64)[None, :]
-    prev = np.broadcast_to(ar, (n, width + 1)).copy()  # D[0, j] = j
-    final_row = prev.copy()  # rows with la == 0 finish here
-    for i in range(1, width + 1):
-        cost = (B != A[:, i - 1][:, None]).astype(np.int64)  # (n, width)
-        t = np.empty((n, width + 1), dtype=np.int64)
-        t[:, 0] = i
-        t[:, 1:] = np.minimum(prev[:, 1:] + 1, prev[:, :-1] + cost)
-        curr = np.minimum.accumulate(t - ar, axis=1) + ar
-        done = la == i
-        if done.any():
-            final_row[done] = curr[done]
-        prev = curr
-    return final_row[np.arange(n), lb]
-
-
-def levenshtein_sim_batch(a: pd.Series, b: pd.Series) -> np.ndarray:
-    """1 - dist/maxlen (1.0 when both empty) — mirrors the JVM-side
-    ``1 - levenshtein(a, b) / greatest(length(a), length(b))`` in
-    operators/scoring.score_pairs."""
-    a = a.fillna("")
-    b = b.fillna("")
-    d = levenshtein_batch(a, b).astype(np.float64)
-    m = np.maximum(a.str.len().to_numpy(), b.str.len().to_numpy()).astype(np.float64)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        sim = 1.0 - d / m
-    return np.where(m == 0, 1.0, sim)
-
-
-# ---------------------------------------------------------------------------
 # Pure-Python scalar reference (oracle for tests — FIXTURES.md B5)
 # ---------------------------------------------------------------------------
 def jaro_winkler_ref(s1: str, s2: str) -> float:

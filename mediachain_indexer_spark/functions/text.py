@@ -17,7 +17,7 @@ def norm_text(col: Column | str) -> Column:
 
     Deterministic and locale-independent: anything outside [a-z0-9] becomes a
     space, runs of spaces collapse.  Keeps the comparison alphabet tiny so
-    MinHash shingles and Jaro-Winkler operate on stable input.
+    MinHash n-grams and Jaro-Winkler operate on stable input.
     """
     c = F.col(col) if isinstance(col, str) else col
     c = F.lower(c)

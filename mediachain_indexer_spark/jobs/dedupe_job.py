@@ -11,7 +11,7 @@ spark-submit job:
         --input  /path/spans_documents.parquet \
         --entity-sink /path/entity_table \
         --run-dir /path/runs --run-id nightly-2026-08-16 \
-        [--labels /path/labeled_pairs.parquet] [--scoring-strategy join]
+        [--labels /path/labeled_pairs.parquet]
 
 - the cluster master comes from spark-submit (``get_spark(set_master=False)``);
 - every stage checkpoints through ``plans/checkpoint.StageRunner`` →
@@ -51,7 +51,6 @@ def run(spark, args) -> dict:
     from mediachain_indexer_spark.operators.pairs import PairsConfig
 
     cfg = PipelineConfig(
-        scoring_strategy=args.scoring_strategy,
         pairs=PairsConfig(exact_strategy=getattr(args, "exact_strategy", "clique")),
     )
     res = run_pipeline(docs, cfg, runner=runner, entity_sink=args.entity_sink)
@@ -94,9 +93,6 @@ def main() -> None:
     ap.add_argument("--run-dir", default=None, help="checkpoint root (resume)")
     ap.add_argument("--run-id", default=None, help="checkpoint run id (resume)")
     ap.add_argument("--labels", default=None, help="labeled pairs parquet (eval)")
-    ap.add_argument(
-        "--scoring-strategy", default="join", choices=("join", "grouped")
-    )
     ap.add_argument(
         "--exact-strategy",
         default="clique",

@@ -30,11 +30,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from mediachain_indexer_spark.functions.minhash import (
-    lsh_band_keys,
-    make_minhash_udf,
-    minhash_signature,
-)
+from mediachain_indexer_spark.functions.minhash import lsh_band_keys, make_minhash_udf
 
 PHASH_BANDS = 3  # see BlockingConfig.phash_bands
 
@@ -58,9 +54,6 @@ class BlockingConfig:
     shingle_n: int = 3
     seed: int = 42
     use_exact_text_key: bool = True
-    # vectorized numpy pandas_udf (hot path) vs pure-JVM HOF expression
-    # (reference implementation; interpreted lambda eval — slow at scale)
-    jvm_minhash: bool = False
     # pHash banding: `phash_bands` contiguous bit ranges of the 64-bit hash.
     # Collision is GUARANTEED when pairwise Hamming < phash_bands, and the
     # junk-collision rate is n² / (2 · 2^(64/bands)) per band — band width
@@ -110,14 +103,9 @@ def build_blocks(norm_df: DataFrame, cfg: BlockingConfig = BlockingConfig()) -> 
     ``explode`` flattens it — Catalyst keeps this in a single codegen stage
     up to the downstream shuffle.
     """
-    if cfg.jvm_minhash:
-        sig_expr = minhash_signature(
-            F.col("norm_text"), cfg.num_hashes, cfg.shingle_n, cfg.seed
-        )
-    else:
-        sig_expr = make_minhash_udf(cfg.num_hashes, cfg.shingle_n, cfg.seed)(
-            F.col("norm_text")
-        )
+    sig_expr = make_minhash_udf(cfg.num_hashes, cfg.shingle_n, cfg.seed)(
+        F.col("norm_text")
+    )
     # project the signature once before fanning out into band keys
     norm_df = norm_df.select(
         "doc_id", "norm_text", "phashes", sig_expr.alias("minhash_sig")
@@ -151,7 +139,7 @@ def build_blocks(norm_df: DataFrame, cfg: BlockingConfig = BlockingConfig()) -> 
     # full shuffle of the exploded block table (docs × ~16 keys — the block
     # stage's only wide exchange); the narrow form dedups before the explode
     # for free and every downstream consumer re-partitions by block_key
-    # itself anyway (pairs cap-window, grouped-scorer cap, ingest upsert).
+    # itself anyway (pairs cap-window, ingest upsert).
     keys = F.array_distinct(F.concat(*families))
     out = norm_df.select(
         F.col("doc_id"),

@@ -42,44 +42,6 @@ _CC_LOCK = threading.Lock()
 _CC_FINAL_CACHES: list[DataFrame] = []
 
 
-def _large_star(edges: DataFrame) -> DataFrame:
-    """Connect every strictly-larger neighbor of u to min(N(u) ∪ {u})."""
-    und = edges.select("u", "v").unionByName(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
-    mins = und.groupBy("u").agg(F.min("v").alias("mn"))
-    mins = mins.select("u", F.least("mn", "u").alias("m"))
-    # no distinct here: duplicates are absorbed by small-star's groupBy
-    # (min is duplicate-insensitive) — saves one full shuffle per iteration
-    return (
-        und.join(mins, "u")
-        .where(F.col("v") > F.col("u"))
-        .select(F.col("v").alias("u"), F.col("m").alias("v"))
-    )
-
-
-def _small_star(edges: DataFrame) -> DataFrame:
-    """Orient edges large→small; connect all smaller neighbors (and u) to min.
-
-    No ``distinct`` on the output (it used to cost one full exchange per
-    round): duplicates are absorbed by the NEXT round's groupBy minima on
-    both star sides, the convergence test is duplicate-insensitive by
-    construction, and the final member/root extraction dedups once at the
-    end.  Measured on the 100k bench graph: 4.6s → 3.9s for the loop.
-    """
-    oriented = edges.select(
-        F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-    ).where(F.col("u") != F.col("v"))
-    mins = oriented.groupBy("u").agg(F.min("v").alias("m"))
-    to_min = (
-        oriented.join(mins, "u")
-        .where(F.col("v") != F.col("m"))
-        .select(F.col("v").alias("u"), F.col("m").alias("v"))
-    )
-    u_to_min = mins.select(F.col("u"), F.col("m").alias("v"))
-    return to_min.unionByName(u_to_min)
-
-
 def _star_stats(edges: DataFrame) -> DataFrame:
     """Per-node min/max UNDIRECTED neighbor — the one aggregate each star op
     needs (see the loop in ``connected_components``): ``(u, mn, mx)``."""
@@ -89,53 +51,19 @@ def _star_stats(edges: DataFrame) -> DataFrame:
     return und.groupBy("u").agg(F.min("v").alias("mn"), F.max("v").alias("mx"))
 
 
-def _star_degrees(edges: DataFrame) -> DataFrame:
-    """Per-node star-forest state, via ONE groupBy:
-    ``(k, mn=min parent, mx=max parent, ind=#inbound edges)``.
+def _non_star_nodes(stats: DataFrame) -> DataFrame:
+    """Rows of a ``_star_stats`` frame that break the star-forest property.
 
-    This frame answers BOTH questions the loop asks:
-
-    - convergence (``_violations``): a node violates the star-forest
-      property iff it has more than one DISTINCT parent (mn ≠ mx) or a
-      parent AND an inbound edge (a 2-hop chain u→v→w);
-    - the final assignment: once converged, every node appears exactly once
-      here, members carry their root in ``mn`` and roots carry ``mn`` null —
-      so ``(k, coalesce(mn, k))`` IS the component table, and the old
-      members∪roots ``distinct`` extraction (one more full shuffle of the
-      edge set) is unnecessary.
+    Zero rows ⇔ the edge set is a min-rooted star forest (the loop's
+    fixpoint): a node with a smaller neighbor is a member, and a member
+    must have exactly one distinct neighbor (its root).  The test covers
+    both failure shapes — a 2-hop chain u→v→w (v has a smaller AND a
+    larger neighbor) and a multi-parent member with no chain (e.g.
+    {(3,1),(5,1),(3,2),(6,2)}: node 3 has neighbors 1 and 2, yet no v
+    appears as a u; that state is not a fixpoint).  min≠max rather than a
+    count keeps it correct on duplicate edges left in the stream.
     """
-    nodes = edges.select(
-        F.col("u").alias("k"), F.col("v").alias("pv"), F.lit(0).alias("i")
-    ).unionByName(
-        edges.select(
-            F.col("v").alias("k"),
-            F.lit(None).cast(edges.schema["v"].dataType).alias("pv"),
-            F.lit(1).alias("i"),
-        )
-    )
-    return nodes.groupBy("k").agg(
-        F.min("pv").alias("mn"), F.max("pv").alias("mx"), F.sum("i").alias("ind")
-    )
-
-
-def _violations(deg: DataFrame) -> DataFrame:
-    """Star-forest violations from a ``_star_degrees`` frame.
-
-    Zero rows ⇔ every component is a single star.  The chain test alone is
-    NOT enough: small★ can emit a multi-parent vertex with no chain (e.g.
-    {(3,1),(5,1),(3,2),(6,2)} — node 3 has parents 1 and 2, yet no v
-    appears as a u), and that state is not a fixpoint.  Distinct parents
-    via min≠max (not a count) keeps the test correct on the duplicate edges
-    ``_small_star`` leaves in the stream.
-    """
-    return deg.where(
-        (F.col("mn") != F.col("mx"))
-        | (F.col("mn").isNotNull() & (F.col("ind") > 0))
-    )
-
-
-def _n_star_violations(edges: DataFrame) -> int:
-    return _violations(_star_degrees(edges)).count()
+    return stats.where((F.col("mn") < F.col("u")) & (F.col("mn") != F.col("mx")))
 
 
 def connected_components(
@@ -158,7 +86,7 @@ def connected_components(
     (a) convergence is the STAR-FOREST property itself, not fingerprint
         stability across rounds: after any large★/small★ round every edge
         points larger→smaller, so an edge set with no 2-hop chain and no
-        multi-parent member (``_n_star_violations`` == 0) is a min-rooted
+        multi-parent member (``_non_star_nodes`` empty) is a min-rooted
         star forest — which is exactly the algorithm's fixpoint (both
         operators preserve connectivity, so each star is a whole component,
         and the root, being smaller than every member, is the component
@@ -183,11 +111,6 @@ def connected_components(
         whole job over the match table — disappears.  At real scale pass
         ``shuffle_partitions`` explicitly (conf restored after).
     """
-    import os as _os
-    import time as _time
-
-    _dbg = bool(_os.environ.get("SPARK_GRAFT_CC_DEBUG"))
-    _t_enter = _time.monotonic()
     spark = edges.sparkSession
     old_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
     old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
@@ -222,8 +145,6 @@ def connected_components(
             )
             cc_parts = min(width_cap, max(8, -(-n_edges // 300_000)))
         spark.conf.set("spark.sql.shuffle.partitions", str(cc_parts))
-        if _dbg:
-            print(f"[cc] setup: {_time.monotonic() - _t_enter:.2f}s", flush=True)
 
         # Ground BOTH the plan and the statistics each op.  localCheckpoint
         # truncates the logical plan — REQUIRED every op, not periodically:
@@ -257,7 +178,6 @@ def connected_components(
         # 1.9s vs 2.6s), and on path graphs large★ is a no-op anyway.
         op_large = False
         for _op in range(2 * max_iter):
-            _t0 = _time.monotonic()
             # ONE undirected groupBy per star op, triple duty:
             # (a) convergence check — min-rooted star forest ⇔ no node has
             #     a smaller neighbor AND distinct min/max neighbors
@@ -277,17 +197,7 @@ def connected_components(
             # persist still grounds sizeInBytes for JoinSelection.
             stats = _star_stats(e).persist()
             _cached.append(stats)
-            _nv = stats.where(
-                (F.col("mn") < F.col("u")) & (F.col("mn") != F.col("mx"))
-            ).count()
-            if _dbg:
-                print(
-                    f"[cc] op {_op} ({'large' if op_large else 'small'}): "
-                    f"{_time.monotonic() - _t0:.2f}s viol={_nv} parts={cc_parts} "
-                    f"abs={_time.monotonic() - _t_enter:.2f}",
-                    flush=True,
-                )
-            if _nv == 0:
+            if _non_star_nodes(stats).count() == 0:
                 # stats has every node exactly once; members (mn < u) carry
                 # their root in mn, roots (mn > u) map to themselves.  The
                 # result is a narrow projection of the cached aggregate:
@@ -302,21 +212,11 @@ def connected_components(
                     F.least("u", "mn").alias("entity_id"),
                 )
                 _cached.remove(stats)
-                if _dbg:
-                    print(
-                        f"[cc] comp built: {_time.monotonic() - _t0:.2f}s",
-                        flush=True,
-                    )
                 with _CC_LOCK:
                     for _old in _CC_FINAL_CACHES:
                         _old.unpersist()
                     _CC_FINAL_CACHES.clear()
                     _CC_FINAL_CACHES.append(stats)
-                if _dbg:
-                    print(
-                        f"[cc] registry swap: {_time.monotonic() - _t0:.2f}s",
-                        flush=True,
-                    )
                 break
             if op_large:
                 und = e.select("u", "v").unionByName(
@@ -353,15 +253,10 @@ def connected_components(
                 f"connected_components: no convergence in {max_iter} iters"
             )
     finally:
-        _t_fin = _time.monotonic()
         spark.conf.set("spark.sql.shuffle.partitions", old_shuffle)
         spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
         for _df in _cached:
             _df.unpersist()
-        if _dbg:
-            print(f"[cc] finally: {_time.monotonic() - _t_fin:.2f}s", flush=True)
-    if _dbg:
-        print(f"[cc] total: {_time.monotonic() - _t_enter:.2f}s", flush=True)
     return comp
 
 

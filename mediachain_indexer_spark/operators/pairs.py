@@ -46,6 +46,9 @@ from pyspark.sql import functions as F
 _STAGED_LOCK = threading.Lock()
 _STAGED_CACHES: list[DataFrame] = []
 
+# largest cap whose unsalted blocks stay healthy tasks (1024²/2 ≈ 5×10⁵ pairs)
+SALT_REQUIRED_ABOVE = 1024
+
 
 @dataclass(frozen=True)
 class PairsConfig:
@@ -61,8 +64,8 @@ class PairsConfig:
     # cache scans + grid joins + an SMJ + union, pairs stage 2.2-3.9 s →
     # 1.7-2.0 s with it off; pair set identical).  Callers that RAISE the
     # cap past the point where cap²/2 pairs stops being a healthy task
-    # (~10³ members ⇒ ~10⁶ pairs) should set an explicit threshold — the
-    # machinery and its equivalence tests stay (tests/test_blocking_pairs).
+    # (~10³ members ⇒ ~10⁶ pairs) must set an explicit threshold:
+    # __post_init__ rejects a cap above SALT_REQUIRED_ABOVE without one.
     salt_threshold: int | None = None
     n_salts: int = 8
     # How exact-text (e:) blocks turn into pairs:
@@ -81,30 +84,31 @@ class PairsConfig:
     #     ledger no longer contains every within-group pair (documented
     #     difference; tests/test_blocking_pairs.py proves cluster equality).
     exact_strategy: str = "clique"
-    # materialize the capped/sized block table once before fanning into the
-    # small/salted join branches.  The staged subtree feeds FOUR join inputs
-    # (left/right × plain/salted) and Spark's exchange reuse does NOT fire
-    # across them (verified on the executed plan: 4 full recomputations of
-    # scan→MinHash→window, zero ReusedExchange) — measured 9.4s → 5.3s for
-    # the pairs stage at the 100k bench.  Since round 6 the materialization
-    # is a persist() (last-call registry, see _STAGED_CACHES) rather than a
-    # lazy localCheckpoint: the cache preserves the cap window's
-    # partitioning + sort so the self-join needs no exchange, no sort and no
-    # broadcast build (the checkpoint RDD's UnknownPartitioning made the
-    # planner broadcast the ~1M-row small side every run).
-    materialize_staged: bool = True
+
+    def __post_init__(self) -> None:
+        # a cap below 2 leaves no block that can form a pair; a cap raised
+        # past SALT_REQUIRED_ABOVE without a salt threshold would run every
+        # hot block as one unsalted task of up to cap²/2 pairs — both are
+        # config mistakes that silently change the result or its cost
+        if self.max_block_size < 2:
+            raise ValueError(
+                f"max_block_size must be >= 2, got {self.max_block_size}"
+            )
+        if self.max_block_size > SALT_REQUIRED_ABOVE and self.salt_threshold is None:
+            raise ValueError(
+                f"max_block_size {self.max_block_size} > {SALT_REQUIRED_ABOVE} "
+                "needs an explicit salt_threshold (blocks above the threshold "
+                "are salted before the self-join)"
+            )
 
 
 def cap_blocks(blocks: DataFrame, max_block_size: int) -> DataFrame:
-    """Drop singleton blocks and cap membership per block — THE shared cap
-    rule for every scorer strategy.
+    """Drop singleton blocks and cap membership per block.
 
     Members are kept by ``xxhash64(doc_id)`` rank (an unbiased
     pseudo-random but stable sample — not first-seen or lexicographic
-    order), so the join path (candidate_pairs → score_pairs) and the
-    grouped fallback (score_pairs_in_blocks) sample EXACTLY the same
-    members on over-cap blocks and stay bit-identical everywhere, not just
-    on under-cap corpora.
+    order), so over-cap blocks keep the same members on every run and
+    every partitioning.
 
     Shuffle shape — a measured round-4 dead end is recorded here so it is
     not retried: both count and rank windows share ONE
@@ -144,10 +148,6 @@ def cap_blocks(blocks: DataFrame, max_block_size: int) -> DataFrame:
         .withColumn("bsize", F.least(F.col("bsize"), F.lit(max_block_size)))
         .drop("brank", "_rk")
     )
-
-
-def _with_block_stats(blocks: DataFrame, cfg: PairsConfig) -> DataFrame:
-    return cap_blocks(blocks, cfg.max_block_size)
 
 
 def _exact_suppression_filter() -> "F.Column":
@@ -273,14 +273,21 @@ def candidate_pairs(blocks: DataFrame, cfg: PairsConfig = PairsConfig()) -> Data
             .select("doc_a", F.col("doc_id").alias("doc_b"))
         )
         blocks = blocks.where(~F.col("block_key").startswith("e:"))
-    staged = _with_block_stats(blocks, cfg)
-    if cfg.materialize_staged:
-        staged = staged.persist()
-        with _STAGED_LOCK:
-            for _old in _STAGED_CACHES:
-                _old.unpersist()
-            _STAGED_CACHES.clear()
-            _STAGED_CACHES.append(staged)
+    # materialize the capped block table once before fanning into the
+    # small/salted join inputs: the staged subtree feeds up to FOUR join
+    # inputs (left/right × plain/salted) and Spark's exchange reuse does NOT
+    # fire across them (verified on the executed plan: 4 full recomputations
+    # of scan→MinHash→window, zero ReusedExchange) — measured 9.4s → 5.3s
+    # for the pairs stage at the 100k bench.  A persist() (last-call
+    # registry, see _STAGED_CACHES), not a localCheckpoint: the cache keeps
+    # the cap window's partitioning + sort, so the self-join needs no
+    # exchange, no sort and no broadcast build.
+    staged = cap_blocks(blocks, cfg.max_block_size).persist()
+    with _STAGED_LOCK:
+        for _old in _STAGED_CACHES:
+            _old.unpersist()
+        _STAGED_CACHES.clear()
+        _STAGED_CACHES.append(staged)
     # None → "= cap": post-cap block size never exceeds max_block_size, so
     # the salted branch is provably empty — elide the whole subtree (and
     # the routing filter) instead of planning dead scans/joins over it
@@ -296,16 +303,13 @@ def candidate_pairs(blocks: DataFrame, cfg: PairsConfig = PairsConfig()) -> Data
     else:
         small = staged.where(F.col("bsize") <= thr).select(*cols)
         big = staged.where(F.col("bsize") > thr).select(*cols)
-    if cfg.materialize_staged:
-        # pin the self-join strategy to sort-merge: the cached staged table
-        # is already hash-partitioned AND sorted by block_key (cap window),
-        # so this SMJ has zero exchanges and zero sorts — strictly cheaper
-        # than the planner's stats-driven pick, a broadcast hash join that
-        # collects and hash-builds the ~1M-row capped table every run
-        # (measured at the 100k bench: see OPTIMIZATION_r06.md).  Without
-        # materialization the window subtree recomputes per input and the
-        # planner's choice is left alone.
-        small = small.hint("merge")
+    # pin the self-join strategy to sort-merge: the cached staged table is
+    # already hash-partitioned AND sorted by block_key (cap window), so this
+    # SMJ has zero exchanges and zero sorts — strictly cheaper than the
+    # planner's stats-driven pick, a broadcast hash join that collects and
+    # hash-builds the ~1M-row capped table every run (measured at the 100k
+    # bench: see OPTIMIZATION_r06.md)
+    small = small.hint("merge")
     pairs = _plain_pairs(small, with_exact)
     if big is not None:
         pairs = pairs.unionByName(_salted_pairs(big, cfg, with_exact))

@@ -80,7 +80,7 @@ def rolling_fingerprint(
     docs: DataFrame, text_col: str = "text", window: int = 8, impl: str = "numpy"
 ) -> DataFrame:
     """Winnowing-style fingerprint: min/max rolling-window hash over the
-    normalized text's character shingles (one stable 64-bit id per doc).
+    normalized text's character n-grams (one stable 64-bit id per doc).
 
     ``impl="numpy"`` (default): a true O(len) rolling polynomial hash over
     the whole Arrow batch — ``window`` shifted multiply-adds on a

@@ -32,12 +32,6 @@ class PipelineConfig:
     blocking: BlockingConfig = field(default_factory=BlockingConfig)
     pairs: PairsConfig = field(default_factory=PairsConfig)
     scoring: ScoringConfig = field(default_factory=ScoringConfig)
-    # "join" (default): candidate_pairs self-join + score_pairs — salted,
-    # size-capped, the 100-TB path.  "grouped": per-block in-worker scoring
-    # (operators/scoring.score_pairs_in_blocks — block-sorted mapInPandas) —
-    # pair generation + scoring inside the Python worker; same is_match
-    # bits, no pair shuffle, but whole-block memory + hard cap.
-    scoring_strategy: str = "join"
 
 
 @dataclass
@@ -72,44 +66,7 @@ def run_pipeline(
     norm = normalize_documents(docs)
     features = norm.select("doc_id", "norm_text", "phashes")
 
-    if cfg.scoring_strategy == "grouped":
-        from mediachain_indexer_spark.operators.scoring import score_pairs_in_blocks
-
-        if runner is not None:
-            # same checkpoint/lineage contract as the join path; there is no
-            # separate "pairs" stage — pair generation happens inside the
-            # per-block scorer, so the scored table IS the pair ledger
-            features = runner.run("normalize", lambda: features, key_col="doc_id")
-            blocks = runner.run(
-                "block", lambda: build_blocks(features, cfg.blocking),
-                key_col="block_key",
-            )
-            scored = runner.run(
-                "score",
-                lambda: score_pairs_in_blocks(
-                    blocks, features, cfg.scoring, cfg.pairs.max_block_size,
-                    exact_strategy=cfg.pairs.exact_strategy,
-                ),
-                key_col="doc_a",
-            )
-        else:
-            features = features.persist()
-            blocks = build_blocks(features, cfg.blocking)
-            scored = score_pairs_in_blocks(
-                blocks, features, cfg.scoring, cfg.pairs.max_block_size,
-                exact_strategy=cfg.pairs.exact_strategy,
-            ).persist()
-        pairs = scored.select("doc_a", "doc_b")
-        matches = scored.where(F.col("is_match"))
-        if runner is not None:
-            clusters = runner.run(
-                "cluster",
-                lambda: attach_components(features, connected_components(matches)),
-                key_col="entity_id",
-            )
-        else:
-            clusters = attach_components(features, connected_components(matches))
-    elif runner is not None:
+    if runner is not None:
         features = runner.run("normalize", lambda: features, key_col="doc_id")
         blocks = runner.run(
             "block", lambda: build_blocks(features, cfg.blocking), key_col="block_key"

@@ -5,14 +5,15 @@ Scale rationale (tuned for a 1000-executor cluster, tested on local[N]):
 - AQE on, with skew-join splitting and partition coalescing: the LSH-band
   self-join has power-law block sizes; AQE splits oversized shuffle
   partitions at runtime, on top of our explicit salting/size-cap
-  (operators/blocking.py).  Coalescing also reaches the plans of
+  (operators/pairs.py).  Coalescing also reaches the plans of
   ``persist()``ed frames (the pipeline's features / staged / scored
   caches), so each cached ER stage runs at a width sized to its data
   rather than at ``spark.sql.shuffle.partitions``.
 - Driver heap sized from the host: about 40% of MemTotal, capped at 16g
   (``SPARK_DRIVER_MEM`` overrides).
-- Arrow everything: the only JVM→Python crossings are Arrow-batched
-  pandas_udfs (Jaro-Winkler) — never row-at-a-time Python.
+- Arrow everything: the pipeline's only JVM→Python crossings are the
+  Arrow-batched MinHash and Jaro-Winkler pandas_udfs — never
+  row-at-a-time Python.
 - Nested-schema pruning: the blocking stage must read only `spans.text`
   / `spans.media_ref` leaves out of the interleaved spans struct, not the
   whole array blob.

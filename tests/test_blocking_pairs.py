@@ -64,10 +64,31 @@ def test_exact_suppression_preserves_pair_set(spark, docs500):
 
     def raw_count(b, with_exact):
         cols = ["block_key", "doc_id"] + (["exact_hash"] if with_exact else [])
-        staged = P._with_block_stats(b, P.PairsConfig()).select(*cols)
+        staged = P.cap_blocks(b, P.PairsConfig().max_block_size).select(*cols)
         return P._plain_pairs(staged, with_exact).count()
 
     assert raw_count(blocks, True) < raw_count(blocks, False)
+
+
+def test_exact_suppression_keeps_textless_media_pairs(spark):
+    """Docs with NO text co-block only via p: media bands and compare
+    equal-on-empty-text — the exact-pair suppression (null exact_hash for
+    empty text) must NOT drop them, and the scorer must match them on
+    media alone."""
+    from mediachain_indexer_spark.operators.scoring import score_pairs
+
+    feats = spark.createDataFrame(
+        [("m1", "", [17]), ("m2", "", [17]), ("t1", "some real title here", None)],
+        "doc_id string, norm_text string, phashes array<long>",
+    ).persist()
+    blocks = build_blocks(feats).persist()
+    rows = {
+        (r["doc_a"], r["doc_b"]): r["is_match"]
+        for r in score_pairs(candidate_pairs(blocks), feats).collect()
+    }
+    assert rows == {("m1", "m2"): True}
+    feats.unpersist()
+    blocks.unpersist()
 
 
 def test_star_exact_strategy_same_clusters(spark, docs500):
@@ -135,6 +156,29 @@ def test_size_cap_bounds_block_contribution(spark):
     assert pairs.count() == 45  # C(10,2)
 
 
+def test_pairs_config_rejects_unusable_cap():
+    """A cap below 2 forms no pair, and a cap raised past 1024 without a
+    salt threshold would run every hot block unsalted: both fail loudly."""
+    import pytest
+
+    for cap in (1, 0, -5):
+        with pytest.raises(ValueError, match="max_block_size must be >= 2"):
+            PairsConfig(max_block_size=cap)
+    with pytest.raises(ValueError, match="salt_threshold"):
+        PairsConfig(max_block_size=1025)
+    with pytest.raises(ValueError, match="salt_threshold"):
+        PairsConfig(max_block_size=4096, n_salts=16)
+
+
+def test_pairs_config_explicit_salt_allows_raised_cap():
+    """An explicit salt_threshold licenses a cap above 1024; the edges of
+    the accepted range stay valid without one."""
+    cfg = PairsConfig(max_block_size=4096, salt_threshold=512)
+    assert (cfg.max_block_size, cfg.salt_threshold) == (4096, 512)
+    assert PairsConfig(max_block_size=2).max_block_size == 2
+    assert PairsConfig(max_block_size=1024).salt_threshold is None
+
+
 def test_cap_is_deterministic(spark):
     rows = [("hot", f"d{i:03d}") for i in range(50)]
     blocks = spark.createDataFrame(rows, "block_key string, doc_id string")
@@ -145,17 +189,16 @@ def test_cap_is_deterministic(spark):
 
 
 def test_banding_decisions_agree_across_minhash_impls(spark):
-    """Property: the numpy pandas_udf MinHash (hot path) and the pure-JVM
-    HOF MinHash (reference impl) use DIFFERENT hash families, so signatures
-    differ — but their BANDING DECISIONS must agree where the S-curve is
-    deterministic: exact-duplicate texts always co-block (identical text →
-    identical signature → every band collides), and strongly-distinct texts
-    co-block under neither (collision probability ≈ bands · 2⁻⁶⁴ per hash
-    family).  Pairs in the probabilistic middle of the S-curve (moderate
-    Jaccard) are deliberately NOT generated — there the two hash families
-    may legitimately disagree (hypothesis found exactly that with
-    repeated-word texts whose cross-index shingle Jaccard ≈ 0.45).
-    Guards the hot-path swap (BlockingConfig.jvm_minhash)."""
+    """Property: the numpy MinHash kernel (the one implementation left; its
+    signatures are pinned by the ``er_blocks`` DuckDB oracle) makes the
+    expected BANDING DECISIONS where the S-curve is deterministic:
+    exact-duplicate texts always co-block (identical text → identical
+    signature → every band collides), and strongly-distinct texts never do
+    (collision probability ≈ bands · 2⁻⁶⁴).
+    Pairs in the probabilistic middle of the S-curve (moderate Jaccard) are
+    deliberately NOT generated — there a band collision is a coin flip
+    (hypothesis found repeated-word texts whose cross-index shingle
+    Jaccard ≈ 0.45)."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
@@ -164,7 +207,7 @@ def test_banding_decisions_agree_across_minhash_impls(spark):
     vocab = ["amber", "birch", "cobalt", "dune", "ember", "fjord", "grove"]
 
     def caesar(word: str, k: int) -> str:
-        # per-index alphabet: distinct texts share (almost) no shingles,
+        # per-index alphabet: distinct texts share (almost) no n-grams,
         # pushing band-collision probability to ~J^r ≈ 0
         return "".join(chr((ord(c) - 97 + k) % 26 + 97) for c in word)
 
@@ -188,24 +231,18 @@ def test_banding_decisions_agree_across_minhash_impls(spark):
             rows, "doc_id string, norm_text string, phashes array<long>"
         )
 
-        def coblocked(jvm: bool) -> set:
-            cfg = BlockingConfig(jvm_minhash=jvm, use_exact_text_key=False)
-            b = build_blocks(feats, cfg)
-            left = b.select("block_key", F.col("doc_id").alias("doc_a"))
-            right = b.select("block_key", F.col("doc_id").alias("doc_b"))
-            return {
-                (r["doc_a"], r["doc_b"])
-                for r in left.join(right, "block_key")
-                .where(F.col("doc_a") < F.col("doc_b"))
-                .select("doc_a", "doc_b")
-                .distinct()
-                .collect()
-            }
-
-        jvm_pairs = coblocked(True)
-        np_pairs = coblocked(False)
-        assert jvm_pairs == expected_pairs
-        assert np_pairs == expected_pairs
+        b = build_blocks(feats, BlockingConfig(use_exact_text_key=False))
+        left = b.select("block_key", F.col("doc_id").alias("doc_a"))
+        right = b.select("block_key", F.col("doc_id").alias("doc_b"))
+        coblocked = {
+            (r["doc_a"], r["doc_b"])
+            for r in left.join(right, "block_key")
+            .where(F.col("doc_a") < F.col("doc_b"))
+            .select("doc_a", "doc_b")
+            .distinct()
+            .collect()
+        }
+        assert coblocked == expected_pairs
 
     prop()
 

@@ -13,7 +13,6 @@ def _args(**kw):
         run_dir=None,
         run_id=None,
         labels=None,
-        scoring_strategy="join",
         exact_strategy="clique",
     )
     base.update(kw)
@@ -47,32 +46,6 @@ def test_job_end_to_end_with_resume(spark, corpus500_paths, tmp_path):
     assert m2["wall_sec"] < m1["wall_sec"]
     t1 = {r["doc_id"]: r["entity_id"] for r in read_entities(spark, sink).collect()}
     assert len(t1) == 500
-
-
-def test_job_grouped_strategy_with_checkpointing(spark, corpus500_paths, tmp_path):
-    """--scoring-strategy grouped + --run-dir/--run-id used to crash after
-    the pipeline finished: the grouped branch bypassed StageRunner, so
-    stage_metrics() read a nonexistent lineage path (PATH_NOT_FOUND) and the
-    metrics report was lost.  The grouped branch now checkpoints
-    normalize/block/score/cluster (no separate pairs stage — pair generation
-    happens inside the per-block scorer)."""
-    from mediachain_indexer_spark.jobs.dedupe_job import run
-
-    args = _args(
-        input=corpus500_paths["spans_documents"],
-        run_dir=str(tmp_path / "runs"),
-        run_id="grouped-run",
-        scoring_strategy="grouped",
-    )
-    m = run(spark, args)
-    assert m["n_docs"] == 500
-    stages = {s["stage"] for s in m["stages"]}
-    assert {"normalize", "block", "score", "cluster"} <= stages
-
-    # resume works for the grouped path too
-    m2 = run(spark, args)
-    assert m2["n_docs"] == 500
-    assert m2["wall_sec"] < m["wall_sec"]
 
 
 def test_job_via_real_spark_submit(corpus500_paths, tmp_path):
@@ -129,29 +102,3 @@ def test_job_via_real_spark_submit(corpus500_paths, tmp_path):
     assert m["n_docs"] == 500
     assert m["eval"]["f1"] >= 0.99
     assert m["sink_stats"]["n_upserted"] == 500
-
-
-def test_job_grouped_star_combination(spark, corpus500_paths, tmp_path):
-    """--scoring-strategy grouped --exact-strategy star (rejected until
-    round 5) runs end-to-end with checkpointing and produces the same
-    entity partition as join+clique on the 500-doc corpus (star drops
-    within-group pair rows, never connectivity; no fx500 exact group is
-    over-cap, so clique and star agree exactly)."""
-    from mediachain_indexer_spark.jobs.dedupe_job import run
-
-    base = run(
-        spark,
-        _args(input=corpus500_paths["spans_documents"]),
-    )
-    m = run(
-        spark,
-        _args(
-            input=corpus500_paths["spans_documents"],
-            run_dir=str(tmp_path / "runs"),
-            run_id="grouped-star",
-            scoring_strategy="grouped",
-            exact_strategy="star",
-        ),
-    )
-    assert m["n_docs"] == 500
-    assert m["n_entities"] == base["n_entities"]

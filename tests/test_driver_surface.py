@@ -26,9 +26,33 @@ def test_catalog_entry_schema_is_atomic(spark, name):
     )
 
 
+def test_approx_distinct_users_within_hll_error(spark):
+    """agg_approx_distinct_users is the one driver entry without a DuckDB
+    hash-match (HLL++ is not replicable there), so its values are checked
+    here instead: every event_type's estimate lies within 3 x rsd (6%) of
+    DuckDB's exact COUNT(DISTINCT user_id) over the same parquet."""
+    import duckdb
+
+    got = {
+        r["event_type"]: r["approx_users"]
+        for r in catalog.queries()["agg_approx_distinct_users"](spark, SF_DIR).collect()
+    }
+    exact = dict(
+        duckdb.connect()
+        .execute(
+            "SELECT event_type, COUNT(DISTINCT user_id) "
+            f"FROM read_parquet('{SF_DIR}/events.parquet') GROUP BY event_type"
+        )
+        .fetchall()
+    )
+    assert set(got) == set(exact) and exact
+    for event_type, n in exact.items():
+        assert abs(got[event_type] - n) <= 0.06 * n, (event_type, got[event_type], n)
+
+
 def test_entry_registration_window():
     """The driver ledger records exactly the first 50 registered queries in
-    dict order (round-3 verdict): the 9 er_* flagship surfaces must register
+    dict order (round-3 verdict): the 8 er_* flagship surfaces must register
     FIRST and the total must be <=50 so none is silently unverified."""
     import importlib
     import os

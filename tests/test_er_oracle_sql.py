@@ -127,26 +127,6 @@ def test_matches_sql_bit_exact_fx500(pipe500):
     ).all()
 
 
-def test_grouped_matches_sql_bit_exact_fx500(pipe500):
-    from pyspark.sql import functions as F
-
-    from mediachain_indexer_spark.operators.scoring import score_pairs_in_blocks
-
-    spark_m = _sorted(
-        score_pairs_in_blocks(pipe500.blocks, pipe500.features)
-        .where(F.col("is_match"))
-        .toPandas()
-    )
-    duck_m = _sorted(_duck(er_oracle.matches_grouped_sql(FX500)))
-    assert list(spark_m.columns) == list(duck_m.columns)
-    assert len(spark_m) == len(duck_m) > 0
-    for col in ("text_sim", "score"):
-        assert (_bits(spark_m[col]) == _bits(duck_m[col])).all(), col
-    assert (
-        spark_m["min_hamming"].to_numpy() == duck_m["min_hamming"].to_numpy()
-    ).all()
-
-
 def test_clusters_sql_exact_fx500(pipe500):
     spark_c = pipe500.clusters.toPandas().sort_values("doc_id").reset_index(drop=True)
     duck_c = (

@@ -5,6 +5,18 @@ from __future__ import annotations
 from mediachain_indexer_spark.plans.eval import grid_search_thresholds, pairwise_f1
 
 
+def _ref_lev(s1: str, s2: str) -> int:
+    """Scalar Levenshtein DP (one rolling row) — the test-side oracle."""
+    d = list(range(len(s2) + 1))
+    for i in range(1, len(s1) + 1):
+        prev, d[0] = d[0], i
+        for j in range(1, len(s2) + 1):
+            cur = d[j]
+            d[j] = min(d[j] + 1, d[j - 1] + 1, prev + (s1[i - 1] != s2[j - 1]))
+            prev = cur
+    return d[len(s2)]
+
+
 def test_pairwise_f1_counts(spark):
     labels = spark.createDataFrame(
         [("a", "b", True), ("a", "c", True), ("x", "y", False), ("p", "q", True)],
@@ -99,19 +111,11 @@ def test_grid_search_floor_sweep_matches_rescoring(spark):
     )
 
     # exact (ungated) reference decision per floor, from the Python oracles
-    from mediachain_indexer_spark.functions.simtext import (
-        jaro_winkler_ref,
-        levenshtein_batch,
-    )
-    import pandas as pd
+    from mediachain_indexer_spark.functions.simtext import jaro_winkler_ref
 
-    lev = 1 - levenshtein_batch(pd.Series([ta]), pd.Series([tb]))[0] / max(
-        len(ta), len(tb)
-    )
+    lev = 1 - _ref_lev(ta, tb) / max(len(ta), len(tb))
     sa, sb = " ".join(sorted(ta.split(" "))), " ".join(sorted(tb.split(" ")))
-    lev_sorted = 1 - levenshtein_batch(pd.Series([sa]), pd.Series([sb]))[0] / max(
-        len(sa), len(sb)
-    )
+    lev_sorted = 1 - _ref_lev(sa, sb) / max(len(sa), len(sb))
     jw = jaro_winkler_ref(ta, tb)
     text_sim = max((jw + lev) / 2, lev_sorted)
     assert 0.4 <= lev_sorted < 0.6 < text_sim  # the trap configuration

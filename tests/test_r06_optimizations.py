@@ -98,13 +98,32 @@ def test_candidate_pairs_self_join_is_smj_over_cache(spark):
 
 
 def test_candidate_pairs_rows_unchanged_on_overcap_fixture(spark):
-    """Same distinct pair set as an unmaterialized (checkpoint-free) run —
-    the materialization/hint must never change results."""
+    """The materialized, merge-hinted self-join must emit exactly the
+    distinct pairs built on the driver from the reference cap: all member
+    pairs per capped block, minus exact-pair suppression (a pair whose two
+    exact_hash values are equal is kept only from an e: block — the
+    fixture has none, so its equal-hash pairs in "big" and every s<b>
+    block are dropped)."""
+    from itertools import combinations
+
     blocks = _block_fixture(spark)
-    a = candidate_pairs(blocks, PairsConfig())
-    b = candidate_pairs(blocks, PairsConfig(materialize_staged=False))
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
+    members: dict[str, list[tuple[str, int | None]]] = {}
+    for r in _cap_reference(blocks, 8).collect():
+        members.setdefault(r["block_key"], []).append((r["doc_id"], r["exact_hash"]))
+    want = set()
+    for key, docs in members.items():
+        for (a, ha), (b, hb) in combinations(sorted(docs), 2):
+            suppressed = (
+                not key.startswith("e:")
+                and ha is not None
+                and hb is not None
+                and ha == hb
+            )
+            if not suppressed:
+                want.add((a, b))
+    got = [tuple(r) for r in candidate_pairs(blocks, PairsConfig(max_block_size=8)).collect()]
+    assert len(got) == len(set(got))
+    assert want and set(got) == want
 
 
 def test_minhash_kernel_matches_dense_reference(spark):

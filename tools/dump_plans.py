@@ -19,12 +19,12 @@ Generated by `tools/dump_plans.py` from `.explain('formatted')` on the
 runtime).  What to look for:
 - normalize: single WholeStageCodegen projection over the scan, no shuffle;
 - block: ArrowEvalPython = the ONE vectorized MinHash UDF, then explode;
-- pairs: exchange hashpartitioning(block_key) for the cap-window, reused by
-  the self-join (ReusedExchange); salted branch joins the broadcast grid;
+- pairs: the cap window (exchange hashpartitioning(block_key) → sort →
+  Window) runs once inside the persisted staged table (InMemoryRelation),
+  and both sides of the merge-hinted SortMergeJoin read that cache — no
+  broadcast of the staged table;
 - score: BroadcastHashJoin for the two feature attachments (flips to SMJ at
   scale via AQE stats), ArrowEvalPython = the gated Jaro-Winkler only;
-- scored (grouped fallback): ONE exchange hashpartitioning(block_key) into
-  FlatMapGroupsInPandas — no pair table ever shuffles;
 - ngram_jaccard: equi-joins only (no CartesianProduct / nested-loop);
 - ivf_topk: ArrowEvalPython cell assignment + BroadcastHashJoin probe —
   the corpus never shuffles before the per-query top-k window.
@@ -44,10 +44,7 @@ def main() -> None:
     from mediachain_indexer_spark.operators.dedup import ngram_jaccard_pairs
     from mediachain_indexer_spark.operators.normalize import normalize_documents
     from mediachain_indexer_spark.operators.pairs import candidate_pairs
-    from mediachain_indexer_spark.operators.scoring import (
-        score_pairs,
-        score_pairs_in_blocks,
-    )
+    from mediachain_indexer_spark.operators.scoring import score_pairs
     from mediachain_indexer_spark.operators.similarity import ivf_topk
     from mediachain_indexer_spark.session import get_spark
     from mediachain_indexer_spark.sources.fixtures import write_corpus
@@ -58,17 +55,10 @@ def main() -> None:
     paths = write_corpus(os.path.join(REPO, ".cache", "fx500"), 500)
     docs = read_documents(spark, paths["spans_documents"])
 
-    from mediachain_indexer_spark.operators.pairs import PairsConfig
-
     feats = normalize_documents(docs).select("doc_id", "norm_text", "phashes")
     blocks = build_blocks(feats)
-    # materialize_staged=False for the DUMP ONLY: the default lazy
-    # localCheckpoint truncates the plan at an ExistingRDD scan, hiding the
-    # cap-window/self-join shape this document exists to show.  The runtime
-    # default computes the identical plan once and fans it out.
-    pairs = candidate_pairs(blocks, PairsConfig(materialize_staged=False))
+    pairs = candidate_pairs(blocks)
     scored = score_pairs(pairs, feats)
-    grouped = score_pairs_in_blocks(blocks, feats)
 
     flat = docs.select(
         "doc_id", F.expr("spans[0].text").alias("text")
@@ -91,7 +81,6 @@ def main() -> None:
         ("blocks", blocks),
         ("candidate_pairs", pairs),
         ("scored", scored),
-        ("scored (grouped applyInPandas fallback)", grouped),
         ("ngram_jaccard (co-gram equi-join)", ngram),
         ("ivf_topk (probe join + refine)", ivf),
     ]
