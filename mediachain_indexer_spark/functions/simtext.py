@@ -4,8 +4,8 @@ Parity: the reference reranks candidate pairs with string similarity on
 title/artist plus Hamming distance on perceptual hashes
 (``mediachain/indexer/mc_dedupe.py`` / ``mc_models.py`` pairwise scoring).
 Levenshtein and Hamming stay JVM-side (built-ins); Jaro-Winkler has no Spark
-built-in and no rapidfuzz/jellyfish in this environment, so it is the ONE
-Python crossing in the hot path — an Arrow-batched ``pandas_udf`` whose inner
+built-in and no rapidfuzz/jellyfish in this environment, so it is the score
+stage's one Python crossing — an Arrow-batched ``pandas_udf`` whose inner
 loop is bounded by max string length (≤ ``MAXLEN``), with all per-pair work
 done as numpy array ops across the whole batch:
 

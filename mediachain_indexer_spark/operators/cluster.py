@@ -8,6 +8,12 @@ is the **large-star / small-star** alternating algorithm (Kiveris et al.,
 "Connected Components in MapReduce and Beyond", SoCC'14): O(log n) rounds of
 pure DataFrame joins + min-aggregations, shuffling by node id each round.
 
+Before the loop, each partition of the edge set is contracted in place by a
+numpy union-find (``_local_roots``, one ``mapInPandas`` pass, no shuffle):
+every node that is not its partition-local component minimum is re-pointed
+straight at that minimum.  The loop then starts from a star forest on ER
+near-cliques and stops at its first convergence check.
+
 Critical scale details:
 
 - ``localCheckpoint`` every round truncates the logical plan — without it
@@ -24,7 +30,10 @@ Critical scale details:
 from __future__ import annotations
 
 import threading
+from collections.abc import Iterator
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -40,6 +49,70 @@ from pyspark.sql import functions as F
 # (correct, just slower).
 _CC_LOCK = threading.Lock()
 _CC_FINAL_CACHES: list[DataFrame] = []
+
+
+def _local_roots(edges: pd.DataFrame) -> pd.DataFrame:
+    """Union-find over one chunk of edges ``(u, v)`` → ``(u, v)`` rows
+    ``(node, root)``, one for every node that is not the minimum of its
+    component within the chunk; ``root`` is that minimum.
+
+    Ids are coded with ``pd.factorize(sort=True)``, so code order is id order
+    (code-point order for strings, which is Spark's UTF-8 byte order) and
+    the smallest code of a component is its smallest id.  Min-label hooking
+    plus pointer jumping, numpy only: each round every edge whose endpoints
+    have different roots hooks the larger root under the smaller one
+    (``np.minimum.at`` keeps the least candidate), then pointer jumping
+    flattens every tree to depth one.  Parents only ever point at smaller
+    codes, so no cycle can form; each live round removes at least one root,
+    and edges whose endpoints already share a root are dropped for good.
+    """
+    n_edges = len(edges)
+    codes, ids = pd.factorize(
+        pd.concat([edges["u"], edges["v"]], ignore_index=True), sort=True
+    )
+    ids = np.asarray(ids)
+    a, b = codes[:n_edges], codes[n_edges:]
+    parent = np.arange(len(ids))
+    while True:
+        ra, rb = parent[a], parent[b]
+        live = ra != rb
+        if not live.any():
+            break
+        a, b, ra, rb = a[live], b[live], ra[live], rb[live]
+        np.minimum.at(parent, np.maximum(ra, rb), np.minimum(ra, rb))
+        while True:
+            grand = parent[parent]
+            if np.array_equal(grand, parent):
+                break
+            parent = grand
+    members = np.flatnonzero(parent != np.arange(len(ids)))
+    return pd.DataFrame({"u": ids[members], "v": ids[parent[members]]})
+
+
+def _contract_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """``mapInPandas`` worker: one partition's edges → its ``_local_roots``
+    (an empty partition yields no rows)."""
+    frames = list(batches)
+    if frames:
+        yield _local_roots(pd.concat(frames, ignore_index=True))
+
+
+def _contracted_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """The loop's entry edge set: ``(src, dst)`` renamed to ``(u, v)``,
+    self-loops dropped, and each partition contracted by ``_local_roots``.
+
+    Exact for ANY partitioning: every emitted edge joins two nodes of one
+    component (a local component lies inside a global one), and the two
+    endpoints of every input edge share a local root, so each input edge
+    stays connected through the output.  Components, and so their minima,
+    are unchanged; a component split across partitions just leaves the
+    loop more than one star to merge.  The pass runs in the partitioning
+    the edges arrive in: no exchange.
+    """
+    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).where(
+        F.col("u") != F.col("v")
+    )
+    return e.mapInPandas(_contract_partition, e.schema)
 
 
 def _star_stats(edges: DataFrame) -> DataFrame:
@@ -81,8 +154,20 @@ def connected_components(
 
     Latency engineering: the loop is round-trip-bound, not data-bound —
     each round is a handful of small shuffles whose cost is task-launch
-    latency.  Two levers:
+    latency.  Three levers:
 
+    (0) fewer ops: the entry edges are contracted partition by partition
+        (``_contracted_edges``: one ``mapInPandas`` numpy union-find in the
+        partitioning the edges arrive in, so no exchange and no option).
+        Exact for any partitioning — see ``_contracted_edges``.  A
+        component whose edges all sit in one partition arrives as a
+        finished min-rooted star, so on ER near-cliques the loop's first
+        check already passes: over ``run_pipeline``'s AQE-coalesced scored
+        cache (one partition at 2,000 and 20,000 docs) the loop runs ONE
+        convergence check instead of three (with two star ops between
+        them), and the whole call is two Spark jobs (entry count + check).
+        Components split across partitions leave stars for the loop to
+        merge, as before.
     (a) convergence is the STAR-FOREST property itself, not fingerprint
         stability across rounds: after any large★/small★ round every edge
         points larger→smaller, so an edge set with no 2-hop chain and no
@@ -105,10 +190,12 @@ def connected_components(
         300k edges, clamped to [8, max(16, 2×parallelism)] — a 340k-edge
         graph loops at 8 partitions instead of 32+, roughly halving
         per-round task-launch overhead, while a 6.7M-edge graph still gets
-        the full width.  Callers that already know the edge count (the
-        bench counts matches right before clustering; incremental ingest
-        counts its delta) pass ``n_edges`` and the sizing count() — one
-        whole job over the match table — disappears.  At real scale pass
+        the full width.  Callers that already know the edge count (bench.py
+        counts matches right before clustering) pass ``n_edges`` and the
+        sizing count() — one whole job over the match table — disappears.
+        Such a count is an upper bound on the loop's edges after
+        contraction, so the width it gives is never narrower than the
+        contracted edge set needs.  At real scale pass
         ``shuffle_partitions`` explicitly (conf restored after).
     """
     spark = edges.sparkSession
@@ -124,22 +211,18 @@ def connected_components(
         # on hot node ids never concentrates a shuffle, and the loop width
         # is already data-sized below.
         spark.conf.set("spark.sql.adaptive.enabled", "false")
-        # no entry distinct (it was a full shuffle of the edge set): the
-        # rounds are duplicate-insensitive end to end — groupBy minima
-        # absorb dup edges, the violations test counts DISTINCT parents,
-        # and the final assignment reads the converged groupBy — so
-        # duplicate input edges only pad round 1's volume.  ER callers pass
-        # already-distinct pairs.
-        e = (
-            edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-            .where(F.col("u") != F.col("v"))
-            .localCheckpoint(eager=False)
-        )
+        # no entry distinct (it would be a full shuffle of the edge set):
+        # the partition-local contraction emits each node at most once per
+        # partition, and the rounds are duplicate-insensitive end to end —
+        # groupBy minima absorb dup edges, the violations test compares
+        # min/max parents, and the final assignment reads the converged
+        # groupBy.
+        e = _contracted_edges(edges, src, dst).localCheckpoint(eager=False)
         if shuffle_partitions:
             cc_parts = shuffle_partitions
         else:
             if n_edges is None:
-                n_edges = e.count()  # materializes the entry checkpoint
+                n_edges = e.count()  # contracted edges; materializes the checkpoint
             width_cap = min(
                 int(old_shuffle), max(16, spark.sparkContext.defaultParallelism * 2)
             )

@@ -9,7 +9,7 @@ Spark-first split of the work:
 - JVM (whole-stage codegen): ``levenshtein`` built-in, min-Hamming between
   the two docs' phash arrays via nested higher-order ``transform`` +
   ``bit_count(xor)``, all ratio arithmetic;
-- Python (Arrow-vectorized, the ONLY crossing): Jaro-Winkler pandas_udf
+- Python (Arrow-vectorized, the stage's only crossing): Jaro-Winkler pandas_udf
   (functions/simtext.py).
 
 The two feature joins (pair → doc features, twice) shuffle by doc_id; the

@@ -11,9 +11,9 @@ Scale rationale (tuned for a 1000-executor cluster, tested on local[N]):
   rather than at ``spark.sql.shuffle.partitions``.
 - Driver heap sized from the host: about 40% of MemTotal, capped at 16g
   (``SPARK_DRIVER_MEM`` overrides).
-- Arrow everything: the pipeline's only JVM→Python crossings are the
-  Arrow-batched MinHash and Jaro-Winkler pandas_udfs — never
-  row-at-a-time Python.
+- Arrow everything: the pipeline's only JVM→Python crossings are
+  Arrow-batched — the MinHash and Jaro-Winkler pandas_udfs and the CC
+  contraction's mapInPandas union-find — never row-at-a-time Python.
 - Nested-schema pruning: the blocking stage must read only `spans.text`
   / `spans.media_ref` leaves out of the interleaved spans struct, not the
   whole array blob.
