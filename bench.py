@@ -176,9 +176,7 @@ def _bench_er_once(
     # attach against the PERSISTED features frame (same doc set, 1:1 with
     # the raw docs) — the raw-docs variant re-scans the spans parquet for a
     # doc_id projection the cache already holds
-    clusters = attach_components(
-        feats, connected_components(matches, n_edges=n_matches)
-    )
+    clusters = attach_components(feats, connected_components(matches))
     n_clustered = clusters.count()
     walls["cluster"] = round(time.monotonic() - t_c, 3)
     wall = time.monotonic() - t0

@@ -1225,101 +1225,21 @@ def dedup_minhash_verified_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _xxh64_ascii_cte_chain(src: str, out: str) -> str:
-    """DuckDB CTE chain computing ``xh = xxhash64(tok)`` (Spark seed 42)
-    for every row of ``src(doc_id, tok)`` — value-exact vs Spark's XXH64.
-
-    Domain: ASCII tokens of 1..8 bytes (the normalized-alphabet tokenizer
-    guarantees [a-z0-9]+; 8 is the max token length in every driver
-    fixture, asserted loudly by an ``error()`` guard below).
-
-    FIXTURE-COUPLING HAZARD (round-4 advice): the guard makes a 9+-byte
-    token a hard oracle failure (ledger ``err``), not a rows-only fallback —
-    intentionally loud, because a silent hash mismatch would read as an
-    engine bug.  The invariant is a property of the DRIVER's testdata
-    generator (every sf tier's documents.parquet, re-checked round 4); if a
-    future round's fixtures add longer tokens, extend the small-input path
-    with the 9..16-byte branch (one more 8-byte word mix CTE in the chain
-    below) rather than relaxing the guard.  Within it the
-    full XXH64 small-input path is expressed in SQL: one little-endian
-    8-byte word mix OR a 4-byte word mix plus up to three tail-byte mixes,
-    then the 33/29/32 avalanche.  64×64-bit products run as HUGEINT with
-    the multiplier split hi32/lo32 so partial products fit INT128; each
-    step is its own CTE column so the SQL stays linear in size (inlining
-    the steps doubles the expression per level — exponential).
-    """
-    m64, m32 = "18446744073709551616", "4294967296"
-
-    def mul(x: str, p: int) -> str:
-        hi, lo = p >> 32, p & 0xFFFFFFFF
-        return (
-            f"(({x})::HUGEINT * {lo} % {m64} + "
-            f"((({x}) % {m32})::HUGEINT * {hi} % {m32}) * {m32}) % {m64}"
-        )
-
-    def rotl(x: str, r: int) -> str:
-        return f"((({x})::HUGEINT * {1 << r} % {m64}) + (({x})::UBIGINT >> {64 - r}))"
-
-    def xor(a: str, b: str) -> str:
-        return f"xor(({a})::UBIGINT, ({b})::UBIGINT)"
-
-    p1, p2, p3 = 0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9
-    p4, p5 = 0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5
-    le64 = " + ".join(f"cs[{i + 1}] * {1 << (8 * i)}::UBIGINT" for i in range(8))
-    le32 = " + ".join(f"cs[{i + 1}] * {1 << (8 * i)}::UBIGINT" for i in range(4))
-    w8 = mul(rotl(mul(f"({le64})", p2), 31), p1)
-    mix8 = f"({mul(rotl(xor('h0', w8), 27), p1)} + {p4}) % {m64}"
-    w4 = mul(f"({le32})", p1)
-    mix4 = f"({mul(rotl(xor('h0', w4), 23), p2)} + {p3}) % {m64}"
-    steps = [
-        f"""{src}_q0 AS (
-  SELECT doc_id, tok, CASE WHEN len(tok) BETWEEN 1 AND 8 THEN len(tok)
-      ELSE error('xxh64 oracle domain: token not in 1..8 bytes') END AS ln,
-    list_transform(range(1,9), i -> CASE WHEN i <= len(tok)
-        THEN unicode(substr(tok,i,1))::UBIGINT ELSE 0::UBIGINT END) AS cs,
-    ((42::UBIGINT + {p5} + len(tok)) % {m64})::UBIGINT AS h0,
-    CASE WHEN len(tok) = 8 THEN 9 WHEN len(tok) >= 4 THEN 5 ELSE 1 END AS ts
-  FROM {src})""",
-        f"""{src}_q1 AS (
-  SELECT *, (CASE WHEN ln = 8 THEN {mix8}
-                  WHEN ln >= 4 THEN {mix4}
-                  ELSE h0 END)::UBIGINT AS h1 FROM {src}_q0)""",
-    ]
-    h = "h1"
-    for j in range(3):
-        nh = f"h{j + 2}"
-        stepped = mul(rotl(xor(h, f"(cs[ts+{j}]::HUGEINT * {p5} % {m64})"), 11), p1)
-        steps.append(
-            f"""{src}_q{j + 2} AS (
-  SELECT *, (CASE WHEN ts+{j} <= ln THEN {stepped} ELSE {h} END)::UBIGINT AS {nh}
-  FROM {src}_q{j + 1})"""
-        )
-        h = nh
-    a1 = mul(xor(h, f"({h})::UBIGINT >> 33"), p2)
-    steps.append(f"{src}_q5 AS (SELECT *, ({a1})::UBIGINT AS ha FROM {src}_q4)")
-    a2 = mul(xor("ha", "(ha)::UBIGINT >> 29"), p3)
-    steps.append(f"{src}_q6 AS (SELECT *, ({a2})::UBIGINT AS hb FROM {src}_q5)")
-    steps.append(
-        f"{out} AS (SELECT doc_id, tok, "
-        f"{xor('hb', '(hb)::UBIGINT >> 32')}::UBIGINT AS xh FROM {src}_q6)"
-    )
-    return ",\n".join(steps)
-
-
 # ---------------------------------------------------------------------------
-# Full-length XXH64 (Spark seed 42) as a DuckDB CTE chain — the ARBITRARY-
-# length companion of ``_xxh64_ascii_cte_chain`` above.  Implements the
-# complete public XXH64 algorithm: the >=32-byte stripe loop runs via
-# ``list_reduce`` with the four lanes packed as a UBIGINT[4] accumulator
+# Full-length XXH64 (Spark seed 42) as a DuckDB CTE chain, for inputs of
+# any length.  Implements the complete public XXH64 algorithm: the
+# >=32-byte stripe loop runs via ``list_reduce`` with the four lanes
+# packed as a UBIGINT[4] accumulator
 # (DuckDB 1.0 list_reduce seeds from the first element, so the initial
 # lanes are list_prepend-ed), then lane merge, tail 8/4/1-byte rounds and
 # the 33/29/32 avalanche, each as its own CTE column (linear SQL size).
 # 64x64 products split the CONSTANT multiplier hi32/lo32 so partials fit
 # HUGEINT; every multiply in XXH64 is variable-x-constant, so this covers
 # all of them.  Validated value-exact against Spark's xxhash64 on ASCII
-# inputs of length 0..300 (.cache/proto_xxh_any.py) — used by the
+# inputs of length 0..300 (tests/test_oracle_xxh64.py) — used by the
 # er_blocks oracle in __spark_entry__.py, where band keys embed xxhash64
-# of ~60-char slice strings and exact_hash is xxhash64 of full norm_text.
+# of ~60-char slice strings and exact_hash is xxhash64 of full norm_text,
+# and by the dedup_simhash_docs oracle below (per-token hashes).
 # ---------------------------------------------------------------------------
 
 _M64X = "18446744073709551616"
@@ -1480,10 +1400,10 @@ def _simhash_oracle() -> str:
       FROM t WHERE length(nt) > 0
     ),
     tkf AS (SELECT doc_id, tok FROM tk WHERE len(tok) > 0),
-    {_xxh64_ascii_cte_chain("tkf", "hx")},
+    {_xxh64_any_cte_chain("tkf")},
     v AS (SELECT doc_id, count(*) AS cnt,
     {sums}
-    FROM hx GROUP BY doc_id)
+    FROM tkf_f GROUP BY doc_id)
     SELECT doc_id, {fold} AS simhash FROM v
     """
 
@@ -1491,7 +1411,7 @@ def _simhash_oracle() -> str:
 @_q("dedup_simhash_docs", oracle=_simhash_oracle())
 def dedup_simhash_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full-oracle entry since round 4: DuckDB re-derives every token's
-    Spark-exact xxhash64 (``_xxh64_ascii_cte_chain``) and the 64-bit
+    Spark-exact xxhash64 (``_xxh64_any_cte_chain``) and the 64-bit
     majority fold, hash-matching the signed simhash values."""
     from mediachain_indexer_spark.operators.dedup import simhash64
 

@@ -118,9 +118,6 @@ def _gather_b(B: np.ndarray, b_pos: np.ndarray, maxlen: int) -> np.ndarray:
     return np.where(b_pos < maxlen, gathered, _PAD)
 
 
-jaro_winkler = pandas_udf(jaro_winkler_batch, returnType=DoubleType())
-
-
 def make_gated_jw(hamming_radius: int, text_floor: float, text_only: float):
     """Cascade-scoring JW: compute Jaro-Winkler ONLY where it can flip the
     match decision; other rows return NaN (→ null).

@@ -55,10 +55,6 @@ def cosine_batch_np(a: pd.Series, b: pd.Series) -> pd.Series:
     return pd.Series(np.where(den == 0.0, 0.0, out))
 
 
-def dot_batch_np(a: pd.Series, b: pd.Series) -> pd.Series:
-    return pd.Series(_dot_np(_stack(a), _stack(b)))
-
-
 def norm_batch_np(a: pd.Series) -> pd.Series:
     A = _stack(a)
     return pd.Series(np.sqrt(_dot_np(A, A)))
@@ -70,7 +66,6 @@ def norm_batch_np(a: pd.Series) -> pd.Series:
 # TWICE (observed in .explain: two ArrowEvalPython nodes computing the same
 # assign()/cosine for isnotnull + the real consumer).
 cosine_batch = pandas_udf(cosine_batch_np, returnType=DoubleType()).asNondeterministic()
-dot_batch = pandas_udf(dot_batch_np, returnType=DoubleType())
 norm_batch = pandas_udf(norm_batch_np, returnType=DoubleType())
 
 

@@ -1,4 +1,4 @@
-"""Blocking stage: documents → (block_key, doc_id) candidate buckets.
+"""Blocking stage: documents → (block_key, doc_id, exact_hash) candidate buckets.
 
 Parity: the reference's baseline dedupe model looks up candidates by exact
 perceptual-hash term match, and its next-gen model by multi-band substrings
@@ -53,7 +53,6 @@ class BlockingConfig:
     minhash_rows: int = 6  # signature length = bands * rows
     shingle_n: int = 3
     seed: int = 42
-    use_exact_text_key: bool = True
     # pHash banding: `phash_bands` contiguous bit ranges of the 64-bit hash.
     # Collision is GUARANTEED when pairwise Hamming < phash_bands, and the
     # junk-collision rate is n² / (2 · 2^(64/bands)) per band — band width
@@ -97,7 +96,11 @@ def phash_band_keys(phashes_col, bands: int = PHASH_BANDS) -> "F.Column":
 
 
 def build_blocks(norm_df: DataFrame, cfg: BlockingConfig = BlockingConfig()) -> DataFrame:
-    """(doc_id, norm_text, phashes) → (block_key, doc_id), distinct.
+    """(doc_id, norm_text, phashes) → (block_key, doc_id, exact_hash), distinct.
+
+    ``exact_hash`` is xxhash64 of ``norm_text`` (null for empty text) — the
+    value the ``e:`` key embeds; the incremental store persists it too, so
+    every caller of ``candidate_pairs`` hands it the same table shape.
 
     One projection computes every key family into a single array column, one
     ``explode`` flattens it — Catalyst keeps this in a single codegen stage
@@ -123,13 +126,10 @@ def build_blocks(norm_df: DataFrame, cfg: BlockingConfig = BlockingConfig()) -> 
 
     has_text = F.col("norm_text").isNotNull() & (F.length("norm_text") > 0)
     exact_hash = F.when(has_text, F.xxhash64("norm_text"))
-    families = [text_keys, media_keys]
-    if cfg.use_exact_text_key:
-        exact_key = F.when(
-            has_text,
-            F.array(F.concat(F.lit("e:"), exact_hash.cast("string"))),
-        ).otherwise(F.array().cast("array<string>"))
-        families.append(exact_key)
+    exact_key = F.when(
+        has_text,
+        F.array(F.concat(F.lit("e:"), exact_hash.cast("string"))),
+    ).otherwise(F.array().cast("array<string>"))
 
     # per-row array_distinct, NOT a table-wide dropDuplicates: a duplicate
     # (block_key, doc_id) row can only come from duplicate keys inside ONE
@@ -140,20 +140,15 @@ def build_blocks(norm_df: DataFrame, cfg: BlockingConfig = BlockingConfig()) -> 
     # stage's only wide exchange); the narrow form dedups before the explode
     # for free and every downstream consumer re-partitions by block_key
     # itself anyway (pairs cap-window, ingest upsert).
-    keys = F.array_distinct(F.concat(*families))
-    out = norm_df.select(
-        F.col("doc_id"),
-        F.explode(keys).alias("block_key"),
-        exact_hash.alias("exact_hash"),
-    )
+    keys = F.array_distinct(F.concat(text_keys, media_keys, exact_key))
     # exact_hash rides along (8 bytes/row) so pair generation can suppress
     # duplicate emissions of exact-text pairs from the t:/p: families — an
     # identical-text pair collides in EVERY MinHash band (identical
     # signatures) plus the e: key, so without suppression it enters the raw
     # pair table ~(1 + bands) times and dominates the cross-band dedup
-    # shuffle (operators/pairs.candidate_pairs).  Only emitted when the e:
-    # family exists to cover those pairs.
-    if not cfg.use_exact_text_key:
-        out = out.drop("exact_hash")
-        return out.select("block_key", "doc_id")
-    return out.select("block_key", "doc_id", "exact_hash")
+    # shuffle (operators/pairs.candidate_pairs).
+    return norm_df.select(
+        F.col("doc_id"),
+        F.explode(keys).alias("block_key"),
+        exact_hash.alias("exact_hash"),
+    ).select("block_key", "doc_id", "exact_hash")

@@ -144,8 +144,6 @@ def connected_components(
     src: str = "doc_a",
     dst: str = "doc_b",
     max_iter: int = 50,
-    shuffle_partitions: int | None = None,
-    n_edges: int | None = None,
 ) -> DataFrame:
     """edges(src, dst) → (doc_id, entity_id) for every node in the edge set.
 
@@ -190,13 +188,8 @@ def connected_components(
         300k edges, clamped to [8, max(16, 2×parallelism)] — a 340k-edge
         graph loops at 8 partitions instead of 32+, roughly halving
         per-round task-launch overhead, while a 6.7M-edge graph still gets
-        the full width.  Callers that already know the edge count (bench.py
-        counts matches right before clustering) pass ``n_edges`` and the
-        sizing count() — one whole job over the match table — disappears.
-        Such a count is an upper bound on the loop's edges after
-        contraction, so the width it gives is never narrower than the
-        contracted edge set needs.  At real scale pass
-        ``shuffle_partitions`` explicitly (conf restored after).
+        the full width.  The sizing count() runs over the CONTRACTED edges
+        and doubles as the action that materializes the entry checkpoint.
     """
     spark = edges.sparkSession
     old_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
@@ -209,7 +202,9 @@ def connected_components(
         # 3.7s → 2.4s warm on the 337k-edge graph) while buying nothing —
         # the aggregations are partial-agg (map-side combine) so value skew
         # on hot node ids never concentrates a shuffle, and the loop width
-        # is already data-sized below.
+        # is already data-sized below.  Re-tried after the union-find
+        # contraction (4-core host): neutral on the 2,000-doc pipeline,
+        # and the 100k-doc bench cluster stage went 5.69 → 6.84 s median.
         spark.conf.set("spark.sql.adaptive.enabled", "false")
         # no entry distinct (it would be a full shuffle of the edge set):
         # the partition-local contraction emits each node at most once per
@@ -218,15 +213,11 @@ def connected_components(
         # min/max parents, and the final assignment reads the converged
         # groupBy.
         e = _contracted_edges(edges, src, dst).localCheckpoint(eager=False)
-        if shuffle_partitions:
-            cc_parts = shuffle_partitions
-        else:
-            if n_edges is None:
-                n_edges = e.count()  # contracted edges; materializes the checkpoint
-            width_cap = min(
-                int(old_shuffle), max(16, spark.sparkContext.defaultParallelism * 2)
-            )
-            cc_parts = min(width_cap, max(8, -(-n_edges // 300_000)))
+        n_edges = e.count()  # contracted edges; materializes the checkpoint
+        width_cap = min(
+            int(old_shuffle), max(16, spark.sparkContext.defaultParallelism * 2)
+        )
+        cc_parts = min(width_cap, max(8, -(-n_edges // 300_000)))
         spark.conf.set("spark.sql.shuffle.partitions", str(cc_parts))
 
         # Ground BOTH the plan and the statistics each op.  localCheckpoint

@@ -100,6 +100,16 @@ class PairsConfig:
                 "needs an explicit salt_threshold (blocks above the threshold "
                 "are salted before the self-join)"
             )
+        # n_salts < 1 leaves the salted triangle grid empty, so every
+        # salted block silently yields no pairs; an unknown strategy name
+        # would silently run clique
+        if self.n_salts < 1:
+            raise ValueError(f"n_salts must be >= 1, got {self.n_salts}")
+        if self.exact_strategy not in ("clique", "star"):
+            raise ValueError(
+                "exact_strategy must be 'clique' or 'star', "
+                f"got {self.exact_strategy!r}"
+            )
 
 
 def cap_blocks(blocks: DataFrame, max_block_size: int) -> DataFrame:
@@ -174,7 +184,7 @@ def _exact_suppression_filter() -> "F.Column":
     )
 
 
-def _plain_pairs(blocks: DataFrame, with_exact: bool) -> DataFrame:
+def _plain_pairs(blocks: DataFrame) -> DataFrame:
     """Equi self-join inside small blocks; strict < gives each pair once.
 
     No explicit repartition: the upstream cap-window already hash-partitioned
@@ -182,22 +192,18 @@ def _plain_pairs(blocks: DataFrame, with_exact: bool) -> DataFrame:
     (self-join of one subtree → ReusedExchange), and an explicit
     ``repartition`` would force a SECOND full shuffle of the block table.
     """
-    lcols = ["block_key", F.col("doc_id").alias("doc_a")]
-    rcols = ["block_key", F.col("doc_id").alias("doc_b")]
-    if with_exact:
-        lcols.append(F.col("exact_hash").alias("exact_a"))
-        rcols.append(F.col("exact_hash").alias("exact_b"))
-    out = (
+    lcols = ["block_key", F.col("doc_id").alias("doc_a"), F.col("exact_hash").alias("exact_a")]
+    rcols = ["block_key", F.col("doc_id").alias("doc_b"), F.col("exact_hash").alias("exact_b")]
+    return (
         blocks.select(*lcols)
         .join(blocks.select(*rcols), "block_key")
         .where(F.col("doc_a") < F.col("doc_b"))
+        .where(_exact_suppression_filter())
+        .select("doc_a", "doc_b")
     )
-    if with_exact:
-        out = out.where(_exact_suppression_filter())
-    return out.select("doc_a", "doc_b")
 
 
-def _salted_pairs(blocks: DataFrame, cfg: PairsConfig, with_exact: bool) -> DataFrame:
+def _salted_pairs(blocks: DataFrame, cfg: PairsConfig) -> DataFrame:
     """Triangle-decomposed self-join for oversized blocks."""
     spark = blocks.sparkSession
     s = cfg.n_salts
@@ -207,16 +213,15 @@ def _salted_pairs(blocks: DataFrame, cfg: PairsConfig, with_exact: bool) -> Data
     salted = blocks.withColumn(
         "salt", F.pmod(F.xxhash64("doc_id"), F.lit(s)).cast("int")
     )
-    lcols = ["block_key", "g1", "g2", F.col("doc_id").alias("doc_a")]
+    lcols = ["block_key", "g1", "g2", F.col("doc_id").alias("doc_a"),
+             F.col("exact_hash").alias("exact_a")]
     rcols = [
         F.col("block_key").alias("r_block_key"),
         F.col("g1").alias("r_g1"),
         F.col("r_g2"),
         F.col("doc_id").alias("doc_b"),
+        F.col("exact_hash").alias("exact_b"),
     ]
-    if with_exact:
-        lcols.append(F.col("exact_hash").alias("exact_a"))
-        rcols.append(F.col("exact_hash").alias("exact_b"))
     left = salted.join(F.broadcast(grid), salted["salt"] == grid["g1"]).select(*lcols)
     right = salted.join(
         F.broadcast(grid.withColumnRenamed("g2", "r_g2")),
@@ -233,9 +238,7 @@ def _salted_pairs(blocks: DataFrame, cfg: PairsConfig, with_exact: bool) -> Data
     out = joined.where(
         ((F.col("g1") == F.col("g2")) & (F.col("doc_a") < F.col("doc_b")))
         | (F.col("g1") < F.col("g2"))
-    )
-    if with_exact:
-        out = out.where(_exact_suppression_filter())
+    ).where(_exact_suppression_filter())
     return out.select(
         F.least("doc_a", "doc_b").alias("doc_a"),
         F.greatest("doc_a", "doc_b").alias("doc_b"),
@@ -243,20 +246,18 @@ def _salted_pairs(blocks: DataFrame, cfg: PairsConfig, with_exact: bool) -> Data
 
 
 def candidate_pairs(blocks: DataFrame, cfg: PairsConfig = PairsConfig()) -> DataFrame:
-    """blocks(block_key, doc_id[, exact_hash]) → distinct pairs (doc_a < doc_b).
+    """blocks(block_key, doc_id, exact_hash) → distinct pairs (doc_a < doc_b).
 
-    When the optional ``exact_hash`` column is present (build_blocks with the
-    exact-text family on), duplicate emissions of identical-text pairs are
-    suppressed map-side in the non-``e:`` families (``_exact_suppression_
-    filter``) — same distinct pair set, far smaller raw pair table into the
-    cross-band dedup.  Callers whose block table lacks the column (e.g. the
-    incremental store's persisted 2-column layout) get the original
-    dedup-everything behavior.
+    The one input shape is ``build_blocks``' output — the batch pipeline
+    passes it directly, the incremental store persists and reads it back.
+    Duplicate emissions of identical-text pairs are suppressed map-side in
+    the non-``e:`` families (``_exact_suppression_filter``): same distinct
+    pair set, far smaller raw pair table into the cross-band dedup.  A null
+    ``exact_hash`` (empty text) suppresses nothing.
     """
-    with_exact = "exact_hash" in blocks.columns
-    cols = ["block_key", "doc_id"] + (["exact_hash"] if with_exact else [])
+    cols = ["block_key", "doc_id", "exact_hash"]
     star = None
-    if cfg.exact_strategy == "star" and with_exact:
+    if cfg.exact_strategy == "star":
         # e: blocks become uncapped min-rooted stars (see PairsConfig).  One
         # groupBy + join on block_key (shared exchange); the join of a hot
         # boilerplate key is skew-split by AQE — output is linear in the
@@ -310,9 +311,9 @@ def candidate_pairs(blocks: DataFrame, cfg: PairsConfig = PairsConfig()) -> Data
     # hash-builds the ~1M-row capped table every run (measured at the 100k
     # bench: see OPTIMIZATION_r06.md)
     small = small.hint("merge")
-    pairs = _plain_pairs(small, with_exact)
+    pairs = _plain_pairs(small)
     if big is not None:
-        pairs = pairs.unionByName(_salted_pairs(big, cfg, with_exact))
+        pairs = pairs.unionByName(_salted_pairs(big, cfg))
     if star is not None:
         pairs = pairs.unionByName(star)
     return pairs.dropDuplicates(["doc_a", "doc_b"])

@@ -10,7 +10,9 @@ increment in WITHOUT re-scoring the existing corpus:
 store layout (each table MERGE-upserted via sources/merge.py — Iceberg
 tables in prod):
     <root>/features  (doc_id, norm_text, phashes)
-    <root>/blocks    (block_key, doc_id, bk_doc)     bk_doc = composite key
+    <root>/blocks    (block_key, doc_id, exact_hash, bk_doc)
+                     bk_doc = composite key; exact_hash as build_blocks emits
+                     it, so the pair stage sees the batch block-table shape
     <root>/entities  (doc_id, entity_id)
 
 per increment:
@@ -86,7 +88,7 @@ class EntityStore:
         return os.path.join(self.root, "entities")
 
 
-_BLOCKS_SCHEMA = "block_key string, doc_id string, bk_doc string"
+_BLOCKS_SCHEMA = "block_key string, doc_id string, exact_hash long, bk_doc string"
 _FEATURES_SCHEMA = "doc_id string, norm_text string, phashes array<long>"
 
 
@@ -119,19 +121,16 @@ def ingest_increment(
     n_inc = feats_inc.count()
     upsert_entities(feats_inc, store.features, "doc_id", store.n_buckets)
 
-    # the store's persisted block layout stays 2-column (+ composite key):
-    # exact_hash is a transient pair-generation hint (operators/pairs), and
-    # store blocks read back without it simply take the dedup-everything path
-    blocks_inc = build_blocks(feats_inc, cfg.blocking).select(
-        "block_key", "doc_id"
-    ).persist()
+    blocks_inc = build_blocks(feats_inc, cfg.blocking).persist()
     blocks_keyed = blocks_inc.withColumn(
         "bk_doc", F.concat_ws("|", "block_key", "doc_id")
     )
     upsert_entities(blocks_keyed, store.blocks, "bk_doc", store.n_buckets)
 
     # candidates: stored docs sharing any block key the increment touched
-    blocks_all = read_entities(spark, store.blocks).select("block_key", "doc_id")
+    blocks_all = read_entities(spark, store.blocks).select(
+        "block_key", "doc_id", "exact_hash"
+    )
     touched_keys = blocks_inc.select("block_key").distinct()
     cand_blocks = blocks_all.join(touched_keys, "block_key", "left_semi")
     pairs = candidate_pairs(cand_blocks, cfg.pairs)
@@ -228,7 +227,7 @@ def delete_docs(
     )
 
     blocks_all = _read_or_empty(spark, store.blocks, _BLOCKS_SCHEMA).select(
-        "block_key", "doc_id"
+        "block_key", "doc_id", "exact_hash"
     )
     rem_blocks = blocks_all.join(remaining, "doc_id", "left_semi")
     pairs = candidate_pairs(rem_blocks, cfg.pairs)

@@ -174,11 +174,6 @@ def read_documents(
     return spark.read.schema(schema).parquet(path)
 
 
-def write_documents(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Sink for spans-shaped tables (parquet sandbox / Iceberg append prod)."""
-    df.write.mode(mode).parquet(path)
-
-
 def write_bucketed(
     df: DataFrame,
     table_name: str,

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from mediachain_indexer_spark.operators.blocking import BlockingConfig, build_blocks
+from mediachain_indexer_spark.operators.blocking import build_blocks
 from mediachain_indexer_spark.operators.normalize import normalize_documents
 from mediachain_indexer_spark.operators.pairs import PairsConfig, candidate_pairs
 from mediachain_indexer_spark.plans.eval import blocking_recall
@@ -50,24 +50,28 @@ def test_salted_path_equals_plain_path(spark, docs500):
 
 
 def test_exact_suppression_preserves_pair_set(spark, docs500):
-    """The exact_hash suppression path must emit EXACTLY the pair set of the
-    dedup-everything path (blocks stripped of the hint column) — suppression
-    only removes duplicate emissions, never a pair (under-cap corpora)."""
-    blocks = build_blocks(normalize_documents(docs500))
-    with_hint = candidate_pairs(blocks)
-    without = candidate_pairs(blocks.select("block_key", "doc_id"))
-    assert with_hint.exceptAll(without).count() == 0
-    assert without.exceptAll(with_hint).count() == 0
-    # and the raw (pre-dedup) emission count must actually shrink: exact-dup
-    # pairs leave only their e:-keyed emission
+    """The exact_hash suppression must emit EXACTLY the pair set of this
+    test's unsuppressed reference, the distinct strict-< self-join of the
+    capped block table — suppression only removes duplicate emissions,
+    never a pair (under-cap corpora)."""
     import mediachain_indexer_spark.operators.pairs as P
 
-    def raw_count(b, with_exact):
-        cols = ["block_key", "doc_id"] + (["exact_hash"] if with_exact else [])
-        staged = P.cap_blocks(b, P.PairsConfig().max_block_size).select(*cols)
-        return P._plain_pairs(staged, with_exact).count()
-
-    assert raw_count(blocks, True) < raw_count(blocks, False)
+    blocks = build_blocks(normalize_documents(docs500))
+    staged = P.cap_blocks(blocks, P.PairsConfig().max_block_size).persist()
+    raw_reference = (
+        staged.select("block_key", F.col("doc_id").alias("doc_a"))
+        .join(staged.select("block_key", F.col("doc_id").alias("doc_b")), "block_key")
+        .where(F.col("doc_a") < F.col("doc_b"))
+        .select("doc_a", "doc_b")
+    )
+    reference = raw_reference.distinct()
+    got = candidate_pairs(blocks)
+    assert got.exceptAll(reference).count() == 0
+    assert reference.exceptAll(got).count() == 0
+    # and the raw (pre-dedup) emission count must actually shrink: exact-dup
+    # pairs leave only their e:-keyed emission
+    assert P._plain_pairs(staged).count() < raw_reference.count()
+    staged.unpersist()
 
 
 def test_exact_suppression_keeps_textless_media_pairs(spark):
@@ -150,15 +154,16 @@ def test_star_exact_strategy_keeps_overcap_groups_whole(spark):
 
 def test_size_cap_bounds_block_contribution(spark):
     """A block of n docs capped at K contributes at most C(K,2) pairs."""
-    rows = [("hot", f"d{i:03d}") for i in range(50)]
-    blocks = spark.createDataFrame(rows, "block_key string, doc_id string")
+    rows = [("hot", f"d{i:03d}", None) for i in range(50)]
+    blocks = spark.createDataFrame(rows, "block_key string, doc_id string, exact_hash long")
     pairs = candidate_pairs(blocks, PairsConfig(max_block_size=10, salt_threshold=4, n_salts=3))
     assert pairs.count() == 45  # C(10,2)
 
 
 def test_pairs_config_rejects_unusable_cap():
-    """A cap below 2 forms no pair, and a cap raised past 1024 without a
-    salt threshold would run every hot block unsalted: both fail loudly."""
+    """A cap below 2 forms no pair, a cap raised past 1024 without a salt
+    threshold would run every hot block unsalted, no salts empty the salted
+    grid, and an unknown exact strategy would run clique: all fail loudly."""
     import pytest
 
     for cap in (1, 0, -5):
@@ -168,6 +173,12 @@ def test_pairs_config_rejects_unusable_cap():
         PairsConfig(max_block_size=1025)
     with pytest.raises(ValueError, match="salt_threshold"):
         PairsConfig(max_block_size=4096, n_salts=16)
+    for n_salts in (0, -1):
+        with pytest.raises(ValueError, match="n_salts must be >= 1"):
+            PairsConfig(salt_threshold=4, n_salts=n_salts)
+    for strategy in ("stars", "Clique", ""):
+        with pytest.raises(ValueError, match="exact_strategy"):
+            PairsConfig(exact_strategy=strategy)
 
 
 def test_pairs_config_explicit_salt_allows_raised_cap():
@@ -180,8 +191,8 @@ def test_pairs_config_explicit_salt_allows_raised_cap():
 
 
 def test_cap_is_deterministic(spark):
-    rows = [("hot", f"d{i:03d}") for i in range(50)]
-    blocks = spark.createDataFrame(rows, "block_key string, doc_id string")
+    rows = [("hot", f"d{i:03d}", None) for i in range(50)]
+    blocks = spark.createDataFrame(rows, "block_key string, doc_id string, exact_hash long")
     cfg = PairsConfig(max_block_size=10)
     a = sorted(map(tuple, candidate_pairs(blocks, cfg).collect()))
     b = sorted(map(tuple, candidate_pairs(blocks, cfg).collect()))
@@ -201,8 +212,6 @@ def test_banding_decisions_agree_across_minhash_impls(spark):
     Jaccard ≈ 0.45)."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
-
-    from mediachain_indexer_spark.operators.blocking import BlockingConfig
 
     vocab = ["amber", "birch", "cobalt", "dune", "ember", "fjord", "grove"]
 
@@ -231,7 +240,8 @@ def test_banding_decisions_agree_across_minhash_impls(spark):
             rows, "doc_id string, norm_text string, phashes array<long>"
         )
 
-        b = build_blocks(feats, BlockingConfig(use_exact_text_key=False))
+        # text bands only: the e: key would co-block the duplicates by itself
+        b = build_blocks(feats).where(~F.col("block_key").startswith("e:"))
         left = b.select("block_key", F.col("doc_id").alias("doc_a"))
         right = b.select("block_key", F.col("doc_id").alias("doc_b"))
         coblocked = {

@@ -84,8 +84,7 @@ def test_clustering_is_a_partition(spark, docs500):
     assert clusters.where("entity_id is null").count() == 0
 
 
-@pytest.mark.parametrize("n_edges", [0])
-def test_empty_edges(spark, n_edges):
+def test_empty_edges(spark):
     df = spark.createDataFrame([], "doc_a string, doc_b string")
     assert connected_components(df).count() == 0
 

@@ -55,6 +55,23 @@ def test_increment_idempotent_replay(spark, docs500, tmp_path):
     assert again == first
 
 
+def test_store_blocks_keep_exact_hash(spark, docs500, tmp_path):
+    """The stored block table carries the exact_hash build_blocks gives, so
+    ingest and delete hand candidate_pairs the batch block-table shape."""
+    from mediachain_indexer_spark.operators.blocking import build_blocks
+    from mediachain_indexer_spark.operators.normalize import normalize_documents
+    from mediachain_indexer_spark.sources.merge import read_entities
+
+    docs = docs500.where(F.xxhash64("doc_id") % 8 == 0)
+    store = EntityStore(str(tmp_path / "store"))
+    ingest_increment(docs, store)
+    cols = ["block_key", "doc_id", "exact_hash"]
+    stored = {tuple(r) for r in read_entities(spark, store.blocks).select(*cols).collect()}
+    want = {tuple(r) for r in build_blocks(normalize_documents(docs)).select(*cols).collect()}
+    assert stored == want
+    assert any(r[2] is not None for r in stored)
+
+
 def test_entity_ingest_stream_two_files(spark, corpus500_paths, tmp_path):
     """Streaming wrapper: two files arriving as separate micro-batches end
     with every doc assigned in the store's entity table."""
