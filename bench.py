@@ -10,8 +10,7 @@ Measures:
 
 Usage:
     python bench.py                    # full bench, one JSON line to stdout
-    python bench.py --cores 8 --er-only --json-file out.json
-        (used by tools/bench_scaling.py for the N vs 4N evidence)
+    python bench.py --er-only --n-docs 5000 --er-reps 1 --json-file out.json
 """
 
 from __future__ import annotations
@@ -39,8 +38,6 @@ def bench_er(
     n_docs: int,
     warmup_docs: int = 3000,
     reps: int = 5,
-    block_storage: str = "memory",
-    minhash_rows: int | None = None,
 ) -> dict:
     """Stage-by-stage timed run: each stage is persisted + counted before the
     next starts, so every wall number measures exactly one stage's work.
@@ -75,10 +72,7 @@ def bench_er(
         wres.features.unpersist()
         wres.scored.unpersist()
 
-    runs = [
-        _bench_er_once(spark, n_docs, block_storage, minhash_rows)
-        for _ in range(max(1, reps))
-    ]
+    runs = [_bench_er_once(spark, n_docs) for _ in range(max(1, reps))]
     # adaptive extension: the sandbox host shows episodic multi-ten-second
     # degradation windows (BENCH/BASELINE.md host-state note) that can
     # poison most of a fixed rep budget.  When the spread says a window hit
@@ -86,10 +80,7 @@ def bench_er(
     # variance-triggered resampling; EVERY rep stays in the recorded arrays
     es = [r["e2e_wall_sec"] for r in runs]
     if reps > 1 and max(es) / max(min(es), 1e-9) > 2.0:
-        runs += [
-            _bench_er_once(spark, n_docs, block_storage, minhash_rows)
-            for _ in range(3)
-        ]
+        runs += [_bench_er_once(spark, n_docs) for _ in range(3)]
     ordered = sorted(runs, key=lambda r: r["e2e_wall_sec"])
     med = dict(ordered[(len(ordered) - 1) // 2])
     med["reps"] = len(runs)
@@ -99,88 +90,32 @@ def bench_er(
     return med
 
 
-def _bench_er_once(
-    spark, n_docs: int, block_storage: str = "memory", minhash_rows: int | None = None
-) -> dict:
-    """One timed end-to-end rep (see bench_er).
-
-    ``block_storage`` controls how the BAND table (the block stage's
-    output, the widest intermediate: ~17 rows/doc) is held between the
-    timed stages — the single-box memory ladder for 10⁷+-doc probes
-    (round-4 verdict #3; the 8M probe OOM'd a 16 GB heap and needed 64 GB
-    under on-heap caching):
-
-    - ``memory``  — on-heap columnar cache (persist default); right at
-      bench scale (100k: ~1.7M rows), measures steady-state stage walls.
-    - ``disk``    — StorageLevel.DISK_ONLY: columnar batches live OUTSIDE
-      the JVM heap (on this sandbox spark.local.dir is tmpfs, so "disk" is
-      RAM without heap/GC pressure — the analog of NVMe on an executor).
-    - ``none``    — no persist: the block wall times one un-cached count
-      and the pairs stage recomputes the band table into its OWN staged
-      checkpoint (candidate_pairs materializes the capped table anyway —
-      this is exactly run_pipeline's production shape, which never
-      persists raw bands; costs one extra MinHash pass, holds zero band
-      rows anywhere).
-    """
-    from pyspark.sql import functions as F
-
-    from mediachain_indexer_spark.operators.blocking import build_blocks
-    from mediachain_indexer_spark.operators.cluster import (
-        attach_components,
-        connected_components,
-    )
-    from mediachain_indexer_spark.operators.normalize import normalize_documents
-    from mediachain_indexer_spark.operators.pairs import candidate_pairs
-    from mediachain_indexer_spark.operators.scoring import score_pairs
+def _bench_er_once(spark, n_docs: int) -> dict:
+    """One timed end-to-end rep (see bench_er): ``run_pipeline`` with a stage
+    hook that persists each stage's frame and counts it before the next
+    stage starts, so every stage wall measures exactly one stage's work."""
+    from mediachain_indexer_spark.plans.pipeline import run_pipeline
     from mediachain_indexer_spark.sources.io import read_documents
 
-    paths = _corpus_path(n_docs)
-    docs = read_documents(spark, paths["spans_documents"])
-
-    t0 = time.monotonic()
+    docs = read_documents(spark, _corpus_path(n_docs)["spans_documents"])
     walls: dict[str, float] = {}
     counts: dict[str, int] = {}
+    cached = []
 
-    def timed(name: str, df, storage: str = "memory"):
-        from pyspark import StorageLevel
-
+    def timed(name: str, build, key_col: str):
         t = time.monotonic()
-        if storage == "memory":
-            df = df.persist()
-        elif storage == "disk":
-            df = df.persist(StorageLevel.DISK_ONLY)
+        df = build().persist()
+        cached.append(df)
         counts[name] = df.count()
         walls[name] = round(time.monotonic() - t, 3)
         return df
 
-    feats = timed(
-        "normalize", normalize_documents(docs).select("doc_id", "norm_text", "phashes")
-    )
-    # banding override for 10^7+ probes: the documented ladder moves to
-    # (12,7) at junk-dense scale (BENCH/BASELINE.md S-curve study)
-    from mediachain_indexer_spark.operators.blocking import BlockingConfig
-
-    if minhash_rows is not None and minhash_rows < 1:
-        raise ValueError(f"--minhash-rows must be >= 1, got {minhash_rows}")
-    bcfg = (
-        BlockingConfig(minhash_rows=minhash_rows)
-        if minhash_rows is not None
-        else BlockingConfig()
-    )
-    blocks = timed("block", build_blocks(feats, bcfg), storage=block_storage)
-    pairs = timed("pairs", candidate_pairs(blocks))
-    scored = timed("score", score_pairs(pairs, feats))
-    matches = scored.where(F.col("is_match"))
-    n_matches = matches.count()
-    t_c = time.monotonic()
-    # attach against the PERSISTED features frame (same doc set, 1:1 with
-    # the raw docs) — the raw-docs variant re-scans the spans parquet for a
-    # doc_id projection the cache already holds
-    clusters = attach_components(feats, connected_components(matches))
-    n_clustered = clusters.count()
-    walls["cluster"] = round(time.monotonic() - t_c, 3)
+    t0 = time.monotonic()
+    res = run_pipeline(docs, stage=timed)
+    n_matches = res.matches.count()
     wall = time.monotonic() - t0
-    for df in (feats, blocks, pairs, scored):
+    n_clustered = counts.pop("cluster")
+    for df in cached:
         df.unpersist()
 
     n_pairs = counts["score"]
@@ -237,25 +172,10 @@ def main() -> None:
     ap.add_argument("--n-docs", type=int, default=BENCH_DOCS)
     ap.add_argument("--json-file", default=None)
     ap.add_argument(
-        "--block-storage",
-        default="memory",
-        choices=("memory", "disk", "none"),
-        help="how the band table is held between timed stages (the 10M+ "
-        "single-box memory ladder — see _bench_er_once docstring)",
-    )
-    ap.add_argument(
-        "--minhash-rows",
-        type=int,
-        default=None,
-        help="override the LSH banding's rows-per-band (e.g. 7 for the "
-        "documented 10^7+ junk-density setting); default = BlockingConfig",
-    )
-    ap.add_argument(
         "--er-reps",
         type=int,
         default=int(os.environ.get("SPARK_GRAFT_ER_REPS", "5")),
-        help="in-process timed ER pipeline reps; median rep is reported "
-        "(tools/bench_scaling.py passes 1 — it medians across JVMs instead). "
+        help="in-process timed ER pipeline reps; median rep is reported. "
         "Default 5 since round 5: the sandbox host shows episodic multi-ten-"
         "second degradation windows (BENCH/BASELINE.md host-state note), and "
         "a 5-rep median rides one out where a 3-rep median cannot",
@@ -286,14 +206,10 @@ def main() -> None:
     queries: dict[str, float] = {}
     if not args.er_only:
         queries.update(bench_queries(spark, sf_dir))
-    er = bench_er(
-        spark,
-        args.n_docs,
-        reps=args.er_reps,
-        block_storage=args.block_storage,
-        minhash_rows=args.minhash_rows,
-    )
-    er["block_storage"] = args.block_storage
+    er = bench_er(spark, args.n_docs, reps=args.er_reps)
+    # the band table is always held in the on-heap cache; the key stays so
+    # earlier BENCH_*.json files compare key for key
+    er["block_storage"] = "memory"
     queries["er_pipeline_e2e"] = er["e2e_wall_sec"]
     queries["er_score_stage"] = er["score_wall_sec"]
     queries["er_cluster_stage"] = er["cluster_wall_sec"]

@@ -14,9 +14,10 @@ spark-submit job:
         [--labels /path/labeled_pairs.parquet]
 
 - the cluster master comes from spark-submit (``get_spark(set_master=False)``);
-- every stage checkpoints through ``plans/checkpoint.StageRunner`` →
-  per-partition lineage + metrics, resumable at block/score/cluster
-  granularity by re-running with the SAME --run-dir/--run-id;
+- every stage checkpoints through ``plans/checkpoint.StageRunner.run``,
+  passed to ``run_pipeline`` as its stage hook → per-partition lineage +
+  metrics, resumable at block/score/cluster granularity by re-running with
+  the SAME --run-dir/--run-id;
 - the final assignments MERGE-upsert into --entity-sink
   (``sources/merge.upsert_entities``; Iceberg ``MERGE INTO`` in prod);
 - if --labels is given, pairwise P/R/F1 at shared blocking keys (the
@@ -53,7 +54,12 @@ def run(spark, args) -> dict:
     cfg = PipelineConfig(
         pairs=PairsConfig(exact_strategy=getattr(args, "exact_strategy", "clique")),
     )
-    res = run_pipeline(docs, cfg, runner=runner, entity_sink=args.entity_sink)
+    res = run_pipeline(
+        docs,
+        cfg,
+        stage=runner.run if runner is not None else None,
+        entity_sink=args.entity_sink,
+    )
 
     metrics: dict = {
         "job": "dedupe",

@@ -11,6 +11,7 @@ data, no per-row Python.
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
@@ -24,7 +25,13 @@ from mediachain_indexer_spark.operators.cluster import (
 from mediachain_indexer_spark.operators.normalize import normalize_documents
 from mediachain_indexer_spark.operators.pairs import PairsConfig, candidate_pairs
 from mediachain_indexer_spark.operators.scoring import ScoringConfig, score_pairs
-from mediachain_indexer_spark.plans.checkpoint import StageRunner
+
+# stage(name, build, key_col) -> frame; StageRunner.run has this shape
+StageHook = Callable[[str, Callable[[], DataFrame], str], DataFrame]
+
+
+def _build(name: str, build: Callable[[], DataFrame], key_col: str) -> DataFrame:
+    return build()
 
 
 @dataclass(frozen=True)
@@ -37,7 +44,7 @@ class PipelineConfig:
 @dataclass
 class PipelineResult:
     features: DataFrame  # (doc_id, norm_text, phashes)
-    blocks: DataFrame  # (block_key, doc_id)
+    blocks: DataFrame  # (block_key, doc_id, exact_hash)
     pairs: DataFrame  # (doc_a, doc_b)
     scored: DataFrame  # (doc_a, doc_b, jw, lev_sim, text_sim, min_hamming, ...)
     matches: DataFrame  # scored.filter(is_match)
@@ -48,14 +55,21 @@ class PipelineResult:
 def run_pipeline(
     docs: DataFrame,
     cfg: PipelineConfig = PipelineConfig(),
-    runner: StageRunner | None = None,
+    stage: StageHook | None = None,
     entity_sink: str | None = None,
 ) -> PipelineResult:
     """documents(doc_id, spans) → PipelineResult.
 
-    With a ``runner`` every stage checkpoints (resume at block / score /
-    cluster granularity); without, stages stay lazy except the CC loop and
-    the features cache.
+    Each stage's frame comes from ``stage(name, build, key_col)``, called
+    in the order normalize, block, pairs, score, cluster.  ``build`` is a
+    thunk, so a hook that already holds the stage's output never builds it
+    (the cluster thunk runs the eager CC loop).  The default hook returns
+    ``build()``: every stage stays lazy except the CC loop.  Pass
+    ``stage=StageRunner(...).run`` to checkpoint every stage and resume at
+    block / score / cluster granularity.  Whatever the hook returns,
+    ``features`` and ``scored`` are persisted: the CC loop, the match
+    filter and the cluster attach all re-read them, and without the cache
+    the whole scan→block→pair→score DAG re-executes per action.
 
     ``entity_sink``: optional path of the canonical entity table; the final
     (doc_id, entity_id) assignments are MERGE-upserted into it by doc_id
@@ -63,36 +77,23 @@ def run_pipeline(
     writeback, Iceberg MERGE INTO in prod), so successive incremental runs
     converge on one table instead of overwriting it wholesale.
     """
-    norm = normalize_documents(docs)
-    features = norm.select("doc_id", "norm_text", "phashes")
-
-    if runner is not None:
-        features = runner.run("normalize", lambda: features, key_col="doc_id")
-        blocks = runner.run(
-            "block", lambda: build_blocks(features, cfg.blocking), key_col="block_key"
-        )
-        pairs = runner.run(
-            "pairs", lambda: candidate_pairs(blocks, cfg.pairs), key_col="doc_a"
-        )
-        scored = runner.run(
-            "score", lambda: score_pairs(pairs, features, cfg.scoring), key_col="doc_a"
-        )
-        matches = scored.where(F.col("is_match"))
-        clusters = runner.run(
-            "cluster",
-            lambda: attach_components(features, connected_components(matches)),
-            key_col="entity_id",
-        )
-    else:
-        features = features.persist()
-        blocks = build_blocks(features, cfg.blocking)
-        pairs = candidate_pairs(blocks, cfg.pairs)
-        # persist the scored edges: the CC loop, the match filter, and any
-        # caller-side count all re-read them — without this the whole
-        # scan→block→pair→score DAG re-executes per action
-        scored = score_pairs(pairs, features, cfg.scoring).persist()
-        matches = scored.where(F.col("is_match"))
-        clusters = attach_components(features, connected_components(matches))
+    stage = stage or _build
+    features = stage(
+        "normalize",
+        lambda: normalize_documents(docs).select("doc_id", "norm_text", "phashes"),
+        "doc_id",
+    ).persist()
+    blocks = stage("block", lambda: build_blocks(features, cfg.blocking), "block_key")
+    pairs = stage("pairs", lambda: candidate_pairs(blocks, cfg.pairs), "doc_a")
+    scored = stage(
+        "score", lambda: score_pairs(pairs, features, cfg.scoring), "doc_a"
+    ).persist()
+    matches = scored.where(F.col("is_match"))
+    clusters = stage(
+        "cluster",
+        lambda: attach_components(features, connected_components(matches)),
+        "entity_id",
+    )
 
     sink_stats = None
     if entity_sink is not None:

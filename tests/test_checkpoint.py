@@ -44,7 +44,7 @@ def test_pipeline_resume_identical_clusters(spark, docs500):
     tmp = tempfile.mkdtemp(prefix="ckpt-")
     try:
         r1 = StageRunner(spark, tmp, "runA")
-        res1 = run_pipeline(docs500, runner=r1)
+        res1 = run_pipeline(docs500, stage=r1.run)
         clusters1 = sorted(map(tuple, res1.clusters.collect()))
 
         # simulate a crash after 'score': drop cluster-stage marker only
@@ -54,11 +54,43 @@ def test_pipeline_resume_identical_clusters(spark, docs500):
         r2 = StageRunner(spark, tmp, "runA")
         assert r2.completed("block") and r2.completed("score")
         assert not r2.completed("cluster")
-        res2 = run_pipeline(docs500, runner=r2)
+        built = []
+
+        def resume(name, build, key_col):
+            def recorded():
+                built.append(name)
+                return build()
+
+            return r2.run(name, recorded, key_col)
+
+        res2 = run_pipeline(docs500, stage=resume)
         clusters2 = sorted(map(tuple, res2.clusters.collect()))
         assert clusters1 == clusters2
+        # completed stages are read back, never built: only cluster runs
+        assert built == ["cluster"]
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_stage_hook_sees_every_stage_in_order(spark, docs500):
+    """The hook is called once per stage, in pipeline order, with each
+    stage's key column; a hook that only builds changes no output."""
+    seen = []
+
+    def record(name, build, key_col):
+        seen.append((name, key_col))
+        return build()
+
+    hooked = sorted(map(tuple, run_pipeline(docs500, stage=record).clusters.collect()))
+    assert seen == [
+        ("normalize", "doc_id"),
+        ("block", "block_key"),
+        ("pairs", "doc_a"),
+        ("score", "doc_a"),
+        ("cluster", "entity_id"),
+    ]
+    default = sorted(map(tuple, run_pipeline(docs500).clusters.collect()))
+    assert hooked == default
 
 
 def test_lineage_schema_matches_contract(spark):

@@ -2,24 +2,23 @@
 
 The north rule's literal wording is "run via spark-submit --py-files on a
 multi-executor cluster at two cluster sizes (N and 4N executors) with
-throughput scaling efficiency >= 0.8".  Studies D-I measure the same code
-through in-process ``bench.py`` subprocesses; this tool runs the actual
-production entrypoint (``jobs/dedupe_job.py``) end-to-end — package zip,
+throughput scaling efficiency >= 0.8".  This tool runs the production
+entrypoint (``jobs/dedupe_job.py``) end-to-end — package zip,
 ``spark-submit --master local[N] --py-files``, checkpointed stages
 (per-partition lineage + metrics), entity-sink MERGE — at N and 4N cores
 on the same input, and derives throughput from the job's OWN metrics
 report (score-stage rows_out / wall_ms for pairs/sec, n_docs / wall for
-e2e docs/sec).
+e2e docs/sec).  N defaults to 1 (``SPARK_GRAFT_SCALE_N``), so 4N fits a
+4-core host without oversubscribing it.
 
-Protocol mirrors bench_scaling.py: one discarded warm-up then ``--runs``
-timed runs per level, medians; shuffle width fixed (data-sized) at both
-levels; every run gets a FRESH run-dir and entity sink (no resume
-short-circuits).  Checkpoint parquet IO is part of the production job and
-is identical at both levels.
+Protocol: one discarded warm-up then ``--runs`` timed runs per level,
+medians; shuffle width fixed (data-sized) at both levels; every run gets a
+FRESH run-dir and entity sink (no resume short-circuits).  Checkpoint
+parquet IO is part of the production job and is identical at both levels.
 
-    python tools/bench_scaling_submit.py [--n-docs 500000] [--runs 2]
+    python tools/bench_scaling_submit.py [--n-docs 100000] [--runs 2]
 
-Appends a summary block to BENCH/SCALING_SUBMIT.md and prints JSON.
+Rewrites BENCH/SCALING_SUBMIT.md and prints JSON.
 """
 
 from __future__ import annotations
@@ -35,8 +34,11 @@ import tempfile
 import zipfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
-N = int(os.environ.get("SPARK_GRAFT_SCALE_N", "4"))
+from mediachain_indexer_spark.session import _default_heap  # noqa: E402
+
+N = int(os.environ.get("SPARK_GRAFT_SCALE_N", "1"))
 SHUFFLE = int(os.environ.get("SPARK_GRAFT_SCALE_SHUFFLE", "32"))
 
 
@@ -52,7 +54,9 @@ def make_zip(tmp: str) -> str:
     return zpath
 
 
-def run_once(cores: int, zpath: str, input_path: str, tmp: str, tag: str) -> dict:
+def run_once(
+    cores: int, mem: str, zpath: str, input_path: str, tmp: str, tag: str
+) -> dict:
     run_root = os.path.join(tmp, f"runs_{tag}")
     sink = os.path.join(tmp, f"entities_{tag}")
     shutil.rmtree(run_root, ignore_errors=True)
@@ -65,7 +69,6 @@ def run_once(cores: int, zpath: str, input_path: str, tmp: str, tag: str) -> dic
     # and dies of GCLocker allocation starvation at 16 cores / 500k docs
     # (measured 2026-08-17; the crashing JVM's shutdown hook then wipes its
     # blockmgr dirs, surfacing as secondary "No such file" task failures)
-    mem = os.environ.get("SPARK_DRIVER_MEM", "16g")
     cmd = [
         "spark-submit",
         "--master", f"local[{cores}]",
@@ -93,16 +96,17 @@ def run_once(cores: int, zpath: str, input_path: str, tmp: str, tag: str) -> dic
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--n-docs", type=int, default=500_000)
+    ap.add_argument("--n-docs", type=int, default=100_000)
     ap.add_argument("--runs", type=int, default=2)
     args = ap.parse_args()
 
-    sys.path.insert(0, REPO)
     from mediachain_indexer_spark.sources.fixtures import write_corpus
 
     paths = write_corpus(
         os.path.join(REPO, ".cache", f"fx{args.n_docs}"), args.n_docs
     )
+    # get_spark's host-sized heap (40% of MemTotal) unless overridden
+    mem = os.environ.get("SPARK_DRIVER_MEM") or _default_heap()
     tmp = tempfile.mkdtemp(prefix="scale_submit_")
     zpath = make_zip(tmp)
 
@@ -110,7 +114,9 @@ def main() -> None:
     raw = {}
     for cores in (N, 4 * N):
         runs = [
-            run_once(cores, zpath, paths["spans_documents"], tmp, f"c{cores}_r{i}")
+            run_once(
+                cores, mem, zpath, paths["spans_documents"], tmp, f"c{cores}_r{i}"
+            )
             for i in range(args.runs + 1)
         ]
         timed = runs[1:] if len(runs) > 1 else runs
@@ -145,12 +151,15 @@ def main() -> None:
     ) as f:
         json.dump({"summary": summary, "raw": {str(k): v for k, v in raw.items()}}, f, indent=1)
 
+    mem_gib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / 2**30
     md = f"""# BENCH/SCALING_SUBMIT — spark-submit job-path scaling (latest run)
 
 North-rule-literal protocol: the production ``spark-submit --py-files``
 entrypoint (checkpointed stages, entity-sink MERGE) at local[{N}] vs
 local[{4 * N}], {args.runs} timed runs per level after a discarded warm-up,
-shuffle {SHUFFLE} at both levels, {args.n_docs:,} seeded spans docs.
+shuffle {SHUFFLE} at both levels, {args.n_docs:,} seeded spans docs,
+driver heap {mem},
+on a host with {os.cpu_count()} CPUs and {mem_gib:.1f} GiB of RAM.
 Throughput comes from the job's own metrics report.
 
 | Level | median job wall | docs/sec | score pairs/sec |
