@@ -77,35 +77,18 @@ def token_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def rolling_fingerprint(
-    docs: DataFrame, text_col: str = "text", window: int = 8, impl: str = "numpy"
+    docs: DataFrame, text_col: str = "text", window: int = 8
 ) -> DataFrame:
     """Winnowing-style fingerprint: min/max rolling-window hash over the
     normalized text's character n-grams (one stable 64-bit id per doc).
 
-    ``impl="numpy"`` (default): a true O(len) rolling polynomial hash over
-    the whole Arrow batch — ``window`` shifted multiply-adds on a
-    (batch, maxlen) uint64 code matrix, then an avalanche mix and a masked
-    min/max per row.  The ``"jvm"`` reference is the round-1 formulation
-    (per-position HOF + xxhash64 per shingle — interpreted per element).
-    Measured at 100k docs × ~1.4k chars (local[32], min/max-agg consumer so
-    nothing prunes): jvm 265.7s vs numpy 3.66s — **73×**; short driver docs
-    hide the gap, long documents are exactly where a fingerprint runs at
-    web scale.  The two impls hash differently by construction; both are
-    deterministic, and the operator contract is "stable 64-bit content id",
-    not a specific hash family.
+    A true O(len) rolling polynomial hash over the whole Arrow batch —
+    ``window`` shifted multiply-adds on a (batch, maxlen) uint64 code
+    matrix, then an avalanche mix and a masked min/max per row: 73× faster
+    than a per-position HOF + xxhash64-per-shingle formulation at 100k docs
+    × ~1.4k chars (local[32]).  The contract is "stable 64-bit content id";
+    the DuckDB oracle of ``text_rolling_fingerprint`` is its reference.
     """
-    if impl == "jvm":
-        normed = norm_text(F.col(text_col))
-        shingle_hashes = F.transform(
-            F.sequence(F.lit(0), F.greatest(F.length(normed) - window, F.lit(0))),
-            lambda i: F.xxhash64(normed.substr(i + F.lit(1), F.lit(window))),
-        )
-        return docs.select(
-            "doc_id",
-            F.array_min(shingle_hashes).alias("fingerprint"),
-            F.array_max(shingle_hashes).alias("fingerprint_hi"),
-        )
-
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf

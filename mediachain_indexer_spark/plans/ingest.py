@@ -128,7 +128,7 @@ def ingest_increment(
     upsert_entities(blocks_keyed, store.blocks, "bk_doc", store.n_buckets)
 
     # candidates: stored docs sharing any block key the increment touched
-    blocks_all = read_entities(spark, store.blocks).select(
+    blocks_all = _read_or_empty(spark, store.blocks, _BLOCKS_SCHEMA).select(
         "block_key", "doc_id", "exact_hash"
     )
     touched_keys = blocks_inc.select("block_key").distinct()
@@ -144,10 +144,12 @@ def ingest_increment(
     )
     inc_pairs = pa.unionByName(pb).dropDuplicates(["doc_a", "doc_b"])
 
-    feats_all = read_entities(spark, store.features)
+    feats_all = _read_or_empty(spark, store.features, _FEATURES_SCHEMA)
     scored = score_pairs(inc_pairs, feats_all, cfg.scoring).persist()
     matches = scored.where(F.col("is_match")).select("doc_a", "doc_b")
-    n_pairs = scored.count()
+    n_pairs, n_matches = scored.agg(
+        F.count(F.lit(1)), F.count(F.when(F.col("is_match"), 1))
+    ).first()
 
     # bounded re-cluster: increment docs + every member of a touched entity
     existing = read_store_entities(spark, store)
@@ -173,8 +175,8 @@ def ingest_increment(
     stats = {
         "n_docs_in": n_inc,
         "n_pairs_scored": n_pairs,
-        "n_matches": matches.count(),
-        "n_docs_reassigned": assign.count(),
+        "n_matches": n_matches,
+        "n_docs_reassigned": sink_stats["n_upserted"],
         "sink": sink_stats,
     }
     for df in (feats_inc, blocks_inc, inc_ids, scored):
@@ -244,23 +246,18 @@ def delete_docs(
     # marks its entity as touched) and silently drop every reassignment
     n_requested = del_ids.count()
     assign = attach_components(remaining, comps).localCheckpoint()
-    n_reassigned = assign.count()
 
-    d_feats = delete_rows(spark, store.features, "doc_id", del_ids, store.n_buckets)
-    delete_rows(spark, store.blocks, "doc_id", del_ids, store.n_buckets)
-    d_ents = delete_rows(spark, store.entities, "doc_id", del_ids, store.n_buckets)
-    sink_stats = (
-        upsert_entities(assign, store.entities, "doc_id", store.n_buckets)
-        if n_reassigned
-        else {"n_upserted": 0, "n_buckets_touched": 0}
-    )
+    d_feats = delete_rows(spark, store.features, "doc_id", del_ids)
+    delete_rows(spark, store.blocks, "doc_id", del_ids)
+    d_ents = delete_rows(spark, store.entities, "doc_id", del_ids)
+    sink_stats = upsert_entities(assign, store.entities, "doc_id", store.n_buckets)
 
     stats = {
         "n_requested": n_requested,
         "n_deleted": d_ents["n_deleted"],
         "n_docs_in_store_deleted": d_feats["n_deleted"],
         "n_pairs_rescored": n_pairs,
-        "n_docs_reassigned": n_reassigned,
+        "n_docs_reassigned": sink_stats["n_upserted"],
         "sink": sink_stats,
     }
     for df in (del_ids, remaining, scored):

@@ -12,13 +12,12 @@ what Iceberg's copy-on-write MERGE does under the hood:
 
 - the target is partitioned by ``_bucket = pmod(xxhash64(key), n_buckets)``
   (prod: Iceberg hidden partitioning ``bucket(n_buckets, key)``);
-- updates are bucketed the same way, so the set of *affected* partitions is
-  the updates' distinct buckets (≤ n_buckets values — the only collect);
-- merged rows = target-rows-in-affected-buckets ANTI-JOIN update keys,
-  UNION update rows — reading ONLY the affected partitions (partition
-  pruning on the filter);
-- the write uses dynamic partition overwrite, replacing ONLY the affected
-  bucket directories; untouched buckets are never read or rewritten.
+- one small collect per call gives its touched buckets and counts;
+- the touched buckets' new rows go through the one rewrite,
+  ``_rewrite_buckets``: materialize, write once with dynamic partition
+  overwrite, remove the buckets left empty.  Untouched buckets are never
+  rewritten.  A missing table has no stored rows, so a first write is the
+  same rewrite.  Every call is three Spark actions.
 
 At 10^12 docs with n_buckets=4096, an incremental upsert touching 1% of keys
 rewrites ~all buckets unless keys cluster — size n_buckets so a typical
@@ -29,17 +28,12 @@ Iceberg's merge-on-read mode removes even that rewrite in prod.
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 BUCKET_COL = "_bucket"
-
-
-def _with_bucket(df: DataFrame, key_col: str, n_buckets: int) -> DataFrame:
-    return df.withColumn(
-        BUCKET_COL, F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets)).cast("int")
-    )
 
 
 def upsert_entities(
@@ -53,91 +47,76 @@ def upsert_entities(
     Last-writer-wins per key (duplicate keys inside ``updates`` are reduced
     to one arbitrary-but-deterministic row first, like MERGE's
     cardinality check would force).  Idempotent: re-running the same upsert
-    leaves the table unchanged.  Returns {n_upserted, n_buckets_touched}.
+    leaves the table unchanged.  Returns {n_upserted: distinct keys written,
+    n_buckets_touched}.  Only the touched buckets are read.
     """
-    spark = updates.sparkSession
-    updates = updates.dropDuplicates([key_col])
-    upd = _with_bucket(updates, key_col, n_buckets)
-
-    if not _table_exists(target_path):
-        upd.write.partitionBy(BUCKET_COL).mode("overwrite").parquet(target_path)
-        if not _table_exists(target_path):
-            # EMPTY updates write no bucket dirs — reading the bare
-            # directory back would fail schema inference
-            return {"n_upserted": 0, "n_buckets_touched": 0}
-        return {
-            "n_upserted": spark.read.parquet(target_path).count(),
-            "n_buckets_touched": n_buckets,
-        }
-
-    upd = upd.persist()
-    buckets = [r[0] for r in upd.select(BUCKET_COL).distinct().collect()]
-    existing = spark.read.parquet(target_path).where(F.col(BUCKET_COL).isin(buckets))
-    keep = existing.join(
-        upd.select(F.col(key_col)), key_col, "left_anti"
-    )
-    merged = keep.unionByName(upd).localCheckpoint()  # cut lineage: the write
-    # below overwrites partitions this plan reads (Iceberg snapshots make
-    # this a metadata swap in prod; the sandbox materializes first)
-    n = merged.count()
-    (
-        merged.write.partitionBy(BUCKET_COL)
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite")
-        .parquet(target_path)
-    )
+    bucket = F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets)).cast("int")
+    upd = updates.dropDuplicates([key_col]).withColumn(BUCKET_COL, bucket).persist()
+    per_bucket = upd.groupBy(BUCKET_COL).count().collect()
+    buckets = [r[0] for r in per_bucket]
+    rows = upd
+    if _table_exists(target_path):
+        stored = updates.sparkSession.read.parquet(target_path)
+        rows = (
+            stored.where(F.col(BUCKET_COL).isin(buckets))
+            .join(upd.select(key_col), key_col, "left_anti")
+            .unionByName(upd)
+        )
+    _rewrite_buckets(rows, target_path, buckets, emptied=[])
     upd.unpersist()
-    return {"n_upserted": n, "n_buckets_touched": len(buckets)}
+    n_keys = sum(r["count"] for r in per_bucket)
+    return {"n_upserted": n_keys, "n_buckets_touched": len(buckets)}
 
 
 def delete_rows(
-    spark: SparkSession,
-    target_path: str,
-    key_col: str,
-    keys: DataFrame,
-    n_buckets: int = 16,
+    spark: SparkSession, target_path: str, key_col: str, keys: DataFrame
 ) -> dict[str, int]:
     """MERGE-style DELETE: remove every row whose ``key_col`` appears in
     ``keys`` (Iceberg ``DELETE FROM target WHERE key IN (...)`` in prod).
 
     ``key_col`` need not be the bucketing key (the blocks table buckets on
-    the composite ``bk_doc`` but deletes by ``doc_id``): affected buckets
-    are discovered from the matching rows themselves (one semi-join scan),
-    then only those buckets are rewritten.  A bucket whose rows are ALL
-    deleted is removed outright — dynamic partition overwrite only replaces
-    partitions present in the new data, so an emptied bucket would silently
-    keep its old rows (Iceberg's snapshot delete handles this
-    transactionally in prod; the sandbox removes the directory).
-    Idempotent: re-deleting the same keys is a no-op.
+    the composite ``bk_doc`` but deletes by ``doc_id``), so one scan of the
+    table left-joined to the keys counts rows and hits per bucket: the rows
+    deleted, the touched buckets and the emptied ones.  Idempotent:
+    re-deleting the same keys is a no-op.
     """
-    import shutil
-
     if not _table_exists(target_path):
         return {"n_deleted": 0, "n_buckets_touched": 0}
     keys = keys.select(key_col).distinct()
-    t = spark.read.parquet(target_path)
-    hit = t.join(keys, key_col, "left_semi")
-    buckets = [r[0] for r in hit.select(BUCKET_COL).distinct().collect()]
-    if not buckets:
-        return {"n_deleted": 0, "n_buckets_touched": 0}
-    affected = t.where(F.col(BUCKET_COL).isin(buckets))
-    keep = affected.join(keys, key_col, "left_anti").localCheckpoint()
-    n_affected = affected.count()
-    n_keep = keep.count()
-    if n_keep:
+    stored = spark.read.parquet(target_path)
+    per_bucket = (
+        stored.join(keys.withColumn("_hit", F.lit(True)), key_col, "left")
+        .groupBy(BUCKET_COL)
+        .agg(F.count(F.lit(1)).alias("n_rows"), F.count("_hit").alias("n_hit"))
+        .where(F.col("n_hit") > 0)
+        .collect()
+    )
+    buckets = [r[0] for r in per_bucket]
+    emptied = [r[0] for r in per_bucket if r["n_rows"] == r["n_hit"]]
+    rows = stored.where(F.col(BUCKET_COL).isin(buckets)).join(keys, key_col, "left_anti")
+    _rewrite_buckets(rows, target_path, buckets, emptied)
+    n_hit = sum(r["n_hit"] for r in per_bucket)
+    return {"n_deleted": n_hit, "n_buckets_touched": len(buckets)}
+
+
+def _rewrite_buckets(
+    rows: DataFrame, target_path: str, buckets: list[int], emptied: list[int]
+) -> None:
+    """Replace the touched ``buckets`` with ``rows``, their whole new
+    contents: materialize (the write replaces files this plan reads;
+    Iceberg snapshots make that a metadata swap in prod), write once, then
+    remove the ``emptied`` buckets, which dynamic overwrite leaves as they
+    were because ``rows`` has none of them."""
+    if len(emptied) < len(buckets):
         (
-            keep.write.partitionBy(BUCKET_COL)
+            rows.localCheckpoint()
+            .write.partitionBy(BUCKET_COL)
             .option("partitionOverwriteMode", "dynamic")
             .mode("overwrite")
             .parquet(target_path)
         )
-    kept_buckets = {r[0] for r in keep.select(BUCKET_COL).distinct().collect()}
-    for b in buckets:
-        if b not in kept_buckets:
-            shutil.rmtree(
-                os.path.join(target_path, f"{BUCKET_COL}={b}"), ignore_errors=True
-            )
-    return {"n_deleted": n_affected - n_keep, "n_buckets_touched": len(buckets)}
+    for b in emptied:
+        shutil.rmtree(f"{target_path}/{BUCKET_COL}={b}", ignore_errors=True)
 
 
 def read_entities(spark: SparkSession, target_path: str) -> DataFrame:

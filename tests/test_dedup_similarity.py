@@ -263,9 +263,9 @@ def test_minhash_verify_jaccard_is_exact_set_similarity(spark):
 
 
 def test_rolling_fingerprint_properties(spark):
-    """Content-id contract for both impls: deterministic, equal for equal
-    normalized text, (near-certainly) distinct for different text, and the
-    numpy kernel agrees with itself across invocations."""
+    """Content-id contract: deterministic, equal for equal normalized text,
+    (near-certainly) distinct for different text, and the kernel agrees
+    with itself across invocations."""
     from mediachain_indexer_spark.operators.textstats import rolling_fingerprint
 
     rows = [
@@ -274,15 +274,11 @@ def test_rolling_fingerprint_properties(spark):
         ("c", "a completely different document body"),
     ]
     df = spark.createDataFrame(rows, "doc_id string, text string")
-    for impl in ("numpy", "jvm"):
-        got = {
-            r["doc_id"]: (r["fingerprint"], r["fingerprint_hi"])
-            for r in rolling_fingerprint(df, impl=impl).collect()
-        }
-        assert got["a"] == got["b"], impl
-        assert got["a"] != got["c"], impl
-        again = {
-            r["doc_id"]: (r["fingerprint"], r["fingerprint_hi"])
-            for r in rolling_fingerprint(df, impl=impl).collect()
-        }
-        assert again == got, impl
+
+    def fingerprints():
+        return {r["doc_id"]: tuple(r)[1:] for r in rolling_fingerprint(df).collect()}
+
+    got = fingerprints()
+    assert got["a"] == got["b"]
+    assert got["a"] != got["c"]
+    assert fingerprints() == got

@@ -12,6 +12,7 @@ from mediachain_indexer_spark.plans.ingest import (
     read_store_entities,
 )
 from mediachain_indexer_spark.plans.pipeline import run_pipeline
+from mediachain_indexer_spark.sources.io import SPANS_SCHEMA
 
 
 def _clusters(df) -> dict:
@@ -78,7 +79,7 @@ def test_entity_ingest_stream_two_files(spark, corpus500_paths, tmp_path):
     import os
     import time
 
-    from mediachain_indexer_spark.sources.io import SPANS_SCHEMA, read_documents
+    from mediachain_indexer_spark.sources.io import read_documents
     from mediachain_indexer_spark.streaming.incremental import entity_ingest_stream
 
     docs = read_documents(spark, corpus500_paths["spans_documents"]).limit(60)
@@ -109,3 +110,14 @@ def test_entity_ingest_stream_two_files(spark, corpus500_paths, tmp_path):
 
     final = _clusters(read_store_entities(spark, EntityStore(store_root)))
     assert len(final) == n_total
+
+
+def test_textless_first_increment(spark, tmp_path):
+    """Blank text and no media block to nothing, so the first increment
+    leaves the blocks table without bucket directories; each doc still
+    becomes its own entity."""
+    rows = [(d, [("text", t, None, 0)]) for d, t in (("e_a", ""), ("e_b", "   "))]
+    store = EntityStore(str(tmp_path / "store"))
+    stats = ingest_increment(spark.createDataFrame(rows, SPANS_SCHEMA), store)
+    assert stats["n_docs_in"] == 2 and stats["n_pairs_scored"] == 0
+    assert _clusters(read_store_entities(spark, store)) == {"e_a": "e_a", "e_b": "e_b"}

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from mediachain_indexer_spark.sources.merge import (
     BUCKET_COL,
+    delete_rows,
     read_entities,
     upsert_entities,
 )
@@ -30,9 +31,11 @@ def _snapshot(path):
 
 def test_upsert_insert_update_and_idempotence(spark, tmp_path):
     target = str(tmp_path / "entities")
-    base = _rows(spark, [(f"d{i}", f"e{i % 3}") for i in range(30)])
+    # first write, 15 keys twice: n_upserted counts distinct keys written
+    base = _rows(spark, [(f"d{i % 30}", f"e{i % 3}") for i in range(45)])
     stats = upsert_entities(base, target, "doc_id", n_buckets=4)
     assert stats["n_upserted"] == 30
+    assert stats["n_buckets_touched"] == len(_snapshot(target))
 
     # update 2 keys, insert 1 new one
     upd = _rows(spark, [("d0", "eX"), ("d7", "eX"), ("d99", "eNew")])
@@ -80,3 +83,31 @@ def test_pipeline_entity_sink_double_run_idempotent(spark, docs500, tmp_path):
     t2 = read_entities(spark, target)
     assert t2.count() == 500
     assert t2.select(F.countDistinct("doc_id").alias("n")).collect()[0]["n"] == 500
+
+
+def test_delete_by_non_bucket_key(spark, tmp_path):
+    """The blocks shape: bucketed on the composite ``bk_doc``, deleted by
+    ``doc_id``.  Only hit rows go, untouched buckets keep their files, and a
+    bucket whose rows are all deleted is removed."""
+    target = str(tmp_path / "blocks")
+    rows = [(f"k{j}", f"d{i}", f"k{j}|d{i}") for i in range(30) for j in (i % 5, 5)]
+    schema = "block_key string, doc_id string, bk_doc string"
+    upsert_entities(spark.createDataFrame(rows, schema), target, "bk_doc", 16)
+    before = _snapshot(target)
+    stored = spark.read.parquet(target).collect()
+    docs_in = {b: {r["doc_id"] for r in stored if r[BUCKET_COL] == b} for b in range(16)}
+    gone = min((b for b in docs_in if docs_in[b]), key=lambda b: len(docs_in[b]))
+    dead = docs_in[gone]  # every doc of the smallest bucket: it ends up empty
+    touched = {f"{BUCKET_COL}={r[BUCKET_COL]}" for r in stored if r["doc_id"] in dead}
+
+    keys = spark.createDataFrame([(d,) for d in sorted(dead) * 2], "doc_id string")
+    stats = delete_rows(spark, target, "doc_id", keys)
+    assert stats["n_deleted"] == sum(r["doc_id"] in dead for r in stored)
+    assert stats["n_buckets_touched"] == len(touched)
+
+    after = _snapshot(target)
+    assert f"{BUCKET_COL}={gone}" not in after
+    untouched = set(before) - touched
+    assert untouched and all(after[d] == before[d] for d in untouched)
+    left = {tuple(r) for r in read_entities(spark, target).collect()}
+    assert left == {r for r in rows if r[1] not in dead}
