@@ -12,7 +12,7 @@ against the existing index and upserted with their entity assignment.  Here:
         [--available-now]
 
 Each micro-batch runs plans/ingest.ingest_increment against the persistent
-store (features / blocks / entities, MERGE-upserted); streaming checkpoint +
+store (features / entities, MERGE-upserted); streaming checkpoint +
 per-key MERGE idempotence give effectively-once ingest under at-least-once
 replay.  ``--available-now`` drains what exists and exits (backfill mode);
 without it the query runs until signalled.

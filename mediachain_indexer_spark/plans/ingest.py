@@ -7,18 +7,19 @@ mc_ingest.py`` streaming ingest + ``mc_dedupe.py`` neighbor match).  The
 batch pipeline (plans/pipeline.py) rebuilds the world; this module folds an
 increment in WITHOUT re-scoring the existing corpus:
 
-store layout (each table MERGE-upserted via sources/merge.py — Iceberg
-tables in prod):
-    <root>/features  (doc_id, norm_text, phashes)
-    <root>/blocks    (block_key, doc_id, exact_hash, bk_doc)
-                     bk_doc = composite key; exact_hash as build_blocks emits
-                     it, so the pair stage sees the batch block-table shape
+store layout (one row per doc_id in each table, MERGE-upserted by doc_id
+via sources/merge.py — Iceberg tables in prod):
+    <root>/features  (doc_id, norm_text, phashes, exact_hash, block_keys)
+                     keys and hash as build_blocks emits them, so exploding
+                     block_keys gives the batch block-table shape
     <root>/entities  (doc_id, entity_id)
 
 per increment:
-1. normalize the new docs → upsert features;
+1. normalize the new docs; a doc stored with a different norm_text or
+   phashes is CHANGED and goes through ``delete_docs`` first;
 2. block the new docs (band keys depend only on the doc itself, so they
-   equal the batch pipeline's keys) → upsert blocks;
+   equal the batch pipeline's keys) → upsert one row per doc, which
+   replaces a changed doc's text, hash and keys together;
 3. candidate pairs: all stored docs sharing a block key TOUCHED by the
    increment (left-semi prune), capped/salted by the same pair machinery,
    then filtered to pairs with ≥1 increment endpoint — old↔old pairs were
@@ -28,21 +29,17 @@ per increment:
    member→entity edges of every entity touched by a match or containing an
    increment doc.  entity_id = min(doc_id) of the component, so merging two
    old entities through a new bridge doc yields exactly the id a full batch
-   run would — verified by the split-corpus ≡ one-shot equivalence test
-   (tests/test_ingest_increment.py);
+   run would (tests/test_ingest_increment.py);
 6. upsert the affected assignments into the entity table.
 
-Deletions (``delete_docs``) are first-class: the affected entities are
-re-resolved from stored features/blocks so bridge-doc removals SPLIT
-entities and min-doc removals re-root them — equivalent to a from-scratch
-batch run on the remaining corpus (tests/test_delete.py).
+Deletions (``delete_docs``) re-resolve the affected entities from the
+stored features, so bridge-doc removals SPLIT entities and min-doc removals
+re-root them, as a from-scratch batch run would (tests/test_delete.py).
 
-Scale: each step touches O(increment + blast radius), never the corpus —
-the semi-joins prune at the block level, the CC runs on the bounded
-subgraph, and the MERGE rewrites only affected buckets.  Caveat: block-size
-caps sample by xxhash rank over whichever docs are PRESENT, so over-cap
-blocks may sample differently than a from-scratch batch run (same cap
-semantics, different sample) — under-cap corpora are bit-equivalent.
+Scale: each step touches O(increment + blast radius), never the corpus.
+Caveat: block-size caps sample by xxhash rank over whichever docs are
+PRESENT, so over-cap blocks may sample differently than a from-scratch
+batch run — under-cap corpora are bit-equivalent.
 """
 
 from __future__ import annotations
@@ -80,16 +77,14 @@ class EntityStore:
         return os.path.join(self.root, "features")
 
     @property
-    def blocks(self) -> str:
-        return os.path.join(self.root, "blocks")
-
-    @property
     def entities(self) -> str:
         return os.path.join(self.root, "entities")
 
 
-_BLOCKS_SCHEMA = "block_key string, doc_id string, exact_hash long, bk_doc string"
-_FEATURES_SCHEMA = "doc_id string, norm_text string, phashes array<long>"
+_FEATURES_SCHEMA = (
+    "doc_id string, norm_text string, phashes array<long>, "
+    "exact_hash long, block_keys array<string>"
+)
 
 
 def _read_or_empty(spark: SparkSession, path: str, schema: str) -> DataFrame:
@@ -98,6 +93,11 @@ def _read_or_empty(spark: SparkSession, path: str, schema: str) -> DataFrame:
     if not _table_exists(path):
         return spark.createDataFrame([], schema)
     return read_entities(spark, path)
+
+
+def _block_table(feats: DataFrame) -> DataFrame:
+    """Stored rows → the batch block table (block_key, doc_id, exact_hash)."""
+    return feats.select(F.explode("block_keys").alias("block_key"), "doc_id", "exact_hash")
 
 
 def read_store_entities(spark: SparkSession, store: EntityStore) -> DataFrame:
@@ -116,35 +116,42 @@ def ingest_increment(
     feats_inc = (
         normalize_documents(docs_inc)
         .select("doc_id", "norm_text", "phashes")
+        .dropDuplicates(["doc_id"])
         .persist()
     )
-    n_inc = feats_inc.count()
-    upsert_entities(feats_inc, store.features, "doc_id", store.n_buckets)
+
+    # a doc stored with other content is CHANGED: it leaves the store first,
+    # its ids PINNED before any write (delete_docs rewrites what this reads)
+    stored = _read_or_empty(spark, store.features, _FEATURES_SCHEMA)
+    same = [feats_inc[c].eqNullSafe(stored[c]) for c in ("norm_text", "phashes")]
+    is_changed = stored.doc_id.isNotNull() & ~(same[0] & same[1])
+    flagged = feats_inc.join(stored, feats_inc.doc_id == stored.doc_id, "left")
+    n_inc, n_changed = flagged.agg(F.count(F.lit(1)), F.count(F.when(is_changed, 1))).first()
+    if n_changed:
+        changed = flagged.where(is_changed).select(feats_inc.doc_id).localCheckpoint()
+        delete_docs(changed, store, cfg)
 
     blocks_inc = build_blocks(feats_inc, cfg.blocking).persist()
-    blocks_keyed = blocks_inc.withColumn(
-        "bk_doc", F.concat_ws("|", "block_key", "doc_id")
+    keys = blocks_inc.groupBy("doc_id").agg(
+        F.first("exact_hash").alias("exact_hash"),
+        F.collect_list("block_key").alias("block_keys"),
     )
-    upsert_entities(blocks_keyed, store.blocks, "bk_doc", store.n_buckets)
+    rows = feats_inc.join(keys, "doc_id", "left").withColumn(
+        "block_keys", F.coalesce("block_keys", F.array().cast("array<string>"))
+    )
+    upsert_entities(rows, store.features, "doc_id", store.n_buckets)
 
     # candidates: stored docs sharing any block key the increment touched
-    blocks_all = _read_or_empty(spark, store.blocks, _BLOCKS_SCHEMA).select(
-        "block_key", "doc_id", "exact_hash"
-    )
+    feats_all = _read_or_empty(spark, store.features, _FEATURES_SCHEMA)
     touched_keys = blocks_inc.select("block_key").distinct()
-    cand_blocks = blocks_all.join(touched_keys, "block_key", "left_semi")
+    cand_blocks = _block_table(feats_all).join(touched_keys, "block_key", "left_semi")
     pairs = candidate_pairs(cand_blocks, cfg.pairs)
 
     inc_ids = feats_inc.select("doc_id").persist()
-    pa = pairs.join(
-        inc_ids.withColumnRenamed("doc_id", "doc_a"), "doc_a", "left_semi"
-    )
-    pb = pairs.join(
-        inc_ids.withColumnRenamed("doc_id", "doc_b"), "doc_b", "left_semi"
-    )
+    pa = pairs.join(inc_ids.withColumnRenamed("doc_id", "doc_a"), "doc_a", "left_semi")
+    pb = pairs.join(inc_ids.withColumnRenamed("doc_id", "doc_b"), "doc_b", "left_semi")
     inc_pairs = pa.unionByName(pb).dropDuplicates(["doc_a", "doc_b"])
 
-    feats_all = _read_or_empty(spark, store.features, _FEATURES_SCHEMA)
     scored = score_pairs(inc_pairs, feats_all, cfg.scoring).persist()
     matches = scored.where(F.col("is_match")).select("doc_a", "doc_b")
     n_pairs, n_matches = scored.agg(
@@ -174,6 +181,7 @@ def ingest_increment(
 
     stats = {
         "n_docs_in": n_inc,
+        "n_docs_changed": n_changed,
         "n_pairs_scored": n_pairs,
         "n_matches": n_matches,
         "n_docs_reassigned": sink_stats["n_upserted"],
@@ -199,22 +207,19 @@ def delete_docs(
 
     1. affected entities = entities containing any deleted doc;
     2. remaining members = their members minus the deleted docs;
-    3. candidate pairs among the remaining members only (their stored block
-       keys, same cap/salt machinery), re-scored from stored features —
-       deletion can't create edges to UNtouched entities (any such match
-       would already have merged them), so the blast radius is exactly the
-       touched entities;
+    3. candidate pairs among the remaining members only (the block keys of
+       their stored rows, same cap/salt machinery), re-scored from those
+       rows — deletion can't create edges to UNtouched entities (any such
+       match would already have merged them);
     4. connected components over the surviving matches → new assignments
        (entity_id = min(doc_id) re-roots automatically);
-    5. store mutations: rows deleted from features/blocks/entities
+    5. store mutations: rows deleted from features and entities
        (bucket-scoped MERGE DELETE), new assignments upserted.
 
     Equivalence contract (tests/test_delete.py): after any delete, the
     store's entity table equals the one-shot batch pipeline on the
-    remaining corpus — exact ids, including splits.  Same over-cap caveat
-    as ``ingest_increment``: block-size caps sample by xxhash rank over the
-    docs PRESENT, so over-cap blocks may sample differently than a
-    from-scratch run; under-cap corpora are bit-equivalent.
+    remaining corpus — exact ids, including splits (same over-cap caveat
+    as ``ingest_increment``).
     """
     spark = del_ids.sparkSession
     del_ids = del_ids.select("doc_id").distinct().persist()
@@ -224,31 +229,23 @@ def delete_docs(
         "entity_id"
     ).distinct()
     members = existing.join(touched_ents, "entity_id", "left_semi")
-    remaining = (
-        members.join(del_ids, "doc_id", "left_anti").select("doc_id").persist()
-    )
+    remaining = members.join(del_ids, "doc_id", "left_anti").select("doc_id").persist()
 
-    blocks_all = _read_or_empty(spark, store.blocks, _BLOCKS_SCHEMA).select(
-        "block_key", "doc_id", "exact_hash"
-    )
-    rem_blocks = blocks_all.join(remaining, "doc_id", "left_semi")
-    pairs = candidate_pairs(rem_blocks, cfg.pairs)
     feats_all = _read_or_empty(spark, store.features, _FEATURES_SCHEMA)
+    rem_blocks = _block_table(feats_all).join(remaining, "doc_id", "left_semi")
+    pairs = candidate_pairs(rem_blocks, cfg.pairs)
     scored = score_pairs(pairs, feats_all, cfg.scoring).persist()
     matches = scored.where(F.col("is_match")).select("doc_a", "doc_b")
     n_pairs = scored.count()
 
     comps = connected_components(matches)
     # PIN the new assignments BEFORE any store mutation: assign reads the
-    # entities/blocks/features parquet through remaining/comps, and the
-    # delete_rows calls below REWRITE those very tables — an unmaterialized
-    # assign would re-read post-delete state (the deleted doc no longer
-    # marks its entity as touched) and silently drop every reassignment
+    # tables the delete_rows calls below REWRITE, and post-delete state (the
+    # deleted doc no longer marks its entity) would drop every reassignment
     n_requested = del_ids.count()
     assign = attach_components(remaining, comps).localCheckpoint()
 
     d_feats = delete_rows(spark, store.features, "doc_id", del_ids)
-    delete_rows(spark, store.blocks, "doc_id", del_ids)
     d_ents = delete_rows(spark, store.entities, "doc_id", del_ids)
     sink_stats = upsert_entities(assign, store.entities, "doc_id", store.n_buckets)
 

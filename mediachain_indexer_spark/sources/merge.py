@@ -74,8 +74,8 @@ def delete_rows(
     """MERGE-style DELETE: remove every row whose ``key_col`` appears in
     ``keys`` (Iceberg ``DELETE FROM target WHERE key IN (...)`` in prod).
 
-    ``key_col`` need not be the bucketing key (the blocks table buckets on
-    the composite ``bk_doc`` but deletes by ``doc_id``), so one scan of the
+    ``key_col`` need not be the bucketing key (a table bucketed on a
+    composite key can be deleted by one of its parts), so one scan of the
     table left-joined to the keys counts rows and hits per bucket: the rows
     deleted, the touched buckets and the emptied ones.  Idempotent:
     re-deleting the same keys is a no-op.

@@ -163,7 +163,7 @@ def entity_ingest_stream(
 ):
     """The full incremental-ER ingest as a stream: each micro-batch of
     spans documents runs plans/ingest.ingest_increment against the
-    persistent store (features/blocks/entities, MERGE-upserted), so the
+    persistent store (features/entities, MERGE-upserted), so the
     entity table converges to exactly the batch pipeline's answer as
     increments arrive (equivalence: tests/test_ingest_increment.py).
     Streaming checkpoint + per-key MERGE idempotence together give

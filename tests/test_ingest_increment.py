@@ -4,8 +4,11 @@ including entity merges bridged by a later increment."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
+from mediachain_indexer_spark.operators.blocking import build_blocks
+from mediachain_indexer_spark.operators.normalize import normalize_documents
 from mediachain_indexer_spark.plans.ingest import (
     EntityStore,
     ingest_increment,
@@ -13,6 +16,7 @@ from mediachain_indexer_spark.plans.ingest import (
 )
 from mediachain_indexer_spark.plans.pipeline import run_pipeline
 from mediachain_indexer_spark.sources.io import SPANS_SCHEMA
+from mediachain_indexer_spark.sources.merge import read_entities
 
 
 def _clusters(df) -> dict:
@@ -51,24 +55,36 @@ def test_increment_idempotent_replay(spark, docs500, tmp_path):
     store = EntityStore(str(tmp_path / "store"))
     ingest_increment(docs500, store)
     first = _clusters(read_store_entities(spark, store))
-    ingest_increment(docs500, store)
+    stats = ingest_increment(docs500, store)
     again = _clusters(read_store_entities(spark, store))
     assert again == first
+    assert stats["n_docs_changed"] == 0
+
+
+def _stored_blocks(spark, store) -> set:
+    """The features table's block_keys exploded to (block_key, doc_id,
+    exact_hash) rows."""
+    feats = read_entities(spark, store.features)
+    return {
+        tuple(r)
+        for r in feats.select(F.explode("block_keys"), "doc_id", "exact_hash").collect()
+    }
+
+
+def _built_blocks(docs) -> set:
+    blocks = build_blocks(normalize_documents(docs))
+    return {tuple(r) for r in blocks.select("block_key", "doc_id", "exact_hash").collect()}
 
 
 def test_store_blocks_keep_exact_hash(spark, docs500, tmp_path):
-    """The stored block table carries the exact_hash build_blocks gives, so
-    ingest and delete hand candidate_pairs the batch block-table shape."""
-    from mediachain_indexer_spark.operators.blocking import build_blocks
-    from mediachain_indexer_spark.operators.normalize import normalize_documents
-    from mediachain_indexer_spark.sources.merge import read_entities
-
+    """The stored rows carry the block keys and exact_hash build_blocks
+    gives, so ingest and delete hand candidate_pairs the batch block-table
+    shape."""
     docs = docs500.where(F.xxhash64("doc_id") % 8 == 0)
     store = EntityStore(str(tmp_path / "store"))
     ingest_increment(docs, store)
-    cols = ["block_key", "doc_id", "exact_hash"]
-    stored = {tuple(r) for r in read_entities(spark, store.blocks).select(*cols).collect()}
-    want = {tuple(r) for r in build_blocks(normalize_documents(docs)).select(*cols).collect()}
+    stored = _stored_blocks(spark, store)
+    want = _built_blocks(docs)
     assert stored == want
     assert any(r[2] is not None for r in stored)
 
@@ -113,11 +129,40 @@ def test_entity_ingest_stream_two_files(spark, corpus500_paths, tmp_path):
 
 
 def test_textless_first_increment(spark, tmp_path):
-    """Blank text and no media block to nothing, so the first increment
-    leaves the blocks table without bucket directories; each doc still
-    becomes its own entity."""
+    """Blank text and no media block to nothing: each doc keeps its store
+    row with no block keys, and still becomes its own entity."""
     rows = [(d, [("text", t, None, 0)]) for d, t in (("e_a", ""), ("e_b", "   "))]
     store = EntityStore(str(tmp_path / "store"))
     stats = ingest_increment(spark.createDataFrame(rows, SPANS_SCHEMA), store)
     assert stats["n_docs_in"] == 2 and stats["n_pairs_scored"] == 0
     assert _clusters(read_store_entities(spark, store)) == {"e_a": "e_a", "e_b": "e_b"}
+    feats = read_entities(spark, store.features).collect()
+    assert {r["doc_id"]: r["block_keys"] for r in feats} == {"e_a": [], "e_b": []}
+
+
+_SHARED = "the quick brown fox jumps over the lazy dog beside the quiet river bank"
+_UNRELATED = "seventeen violet umbrellas drifted across an empty parking garage at noon"
+
+
+def _text_docs(spark, texts: dict):
+    rows = [(d, [("text", t, None, 0)]) for d, t in sorted(texts.items())]
+    return spark.createDataFrame(rows, SPANS_SCHEMA)
+
+
+@pytest.mark.parametrize("changed", ["ch_b", "ch_a"])  # a member; the min doc
+def test_changed_doc_reingest_equals_batch(spark, tmp_path, changed):
+    """Re-ingesting a doc with new content replaces its row and keys and
+    re-resolves its old entity: the store equals batch on the final
+    corpus, whether the changed doc is a member or the entity's root."""
+    store = EntityStore(str(tmp_path / "store"))
+    ingest_increment(_text_docs(spark, {"ch_a": _SHARED, "ch_b": _SHARED}), store)
+    assert _clusters(read_store_entities(spark, store)) == {"ch_a": "ch_a", "ch_b": "ch_a"}
+
+    new = _text_docs(spark, {changed: _UNRELATED})
+    stats = ingest_increment(new, store)
+
+    final = {"ch_a": _SHARED, "ch_b": _SHARED, changed: _UNRELATED}
+    batch = _clusters(run_pipeline(_text_docs(spark, final)).clusters)
+    assert _clusters(read_store_entities(spark, store)) == batch
+    assert {r for r in _stored_blocks(spark, store) if r[1] == changed} == _built_blocks(new)
+    assert stats["n_docs_changed"] == 1

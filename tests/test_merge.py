@@ -86,13 +86,13 @@ def test_pipeline_entity_sink_double_run_idempotent(spark, docs500, tmp_path):
 
 
 def test_delete_by_non_bucket_key(spark, tmp_path):
-    """The blocks shape: bucketed on the composite ``bk_doc``, deleted by
-    ``doc_id``.  Only hit rows go, untouched buckets keep their files, and a
-    bucket whose rows are all deleted is removed."""
-    target = str(tmp_path / "blocks")
+    """A table bucketed on a composite key, deleted by one of its parts
+    (``doc_id``).  Only hit rows go, untouched buckets keep their files, and
+    a bucket whose rows are all deleted is removed."""
+    target = str(tmp_path / "table")
     rows = [(f"k{j}", f"d{i}", f"k{j}|d{i}") for i in range(30) for j in (i % 5, 5)]
-    schema = "block_key string, doc_id string, bk_doc string"
-    upsert_entities(spark.createDataFrame(rows, schema), target, "bk_doc", 16)
+    schema = "block_key string, doc_id string, composite string"
+    upsert_entities(spark.createDataFrame(rows, schema), target, "composite", 16)
     before = _snapshot(target)
     stored = spark.read.parquet(target).collect()
     docs_in = {b: {r["doc_id"] for r in stored if r[BUCKET_COL] == b} for b in range(16)}
