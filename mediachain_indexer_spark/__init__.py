@@ -10,16 +10,15 @@ Architecture (Spark-first, NOT a port):
 - ``sources``   — parquet/iceberg readers with explicit schemas; deterministic
                   spans-corpus fixture generator (seed=42).
 - ``functions`` — column-expression builders: text normalization chains,
-                  JVM-side MinHash via higher-order array functions,
-                  perceptual-hash stand-ins, vectorized Arrow pandas_udfs
-                  (Jaro-Winkler) — the ONLY Python in any hot path.
+                  perceptual-hash stand-ins, and the vectorized Arrow
+                  pandas_udfs (numpy MinHash kernel, Jaro-Winkler).
 - ``operators`` — blocking (LSH bands + pHash buckets, salting + size cap),
                   candidate-pair generation, pairwise scoring, large-star /
                   small-star connected components, dedup / similarity /
                   text-analysis operators over the driver tables.
 - ``plans``     — end-to-end pipeline orchestration, checkpoint/lineage
                   tables, resume logic, evaluation (pairwise P/R/F1).
-- ``streaming`` — Structured Streaming incremental-ingest surface.
+- ``streaming`` — Structured Streaming ``foreachBatch`` incremental ingest.
 """
 
 __version__ = "0.1.0"

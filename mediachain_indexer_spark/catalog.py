@@ -820,8 +820,8 @@ def date_extract_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def sessionization_gap30(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch sessionization (gap > 30 min) via lag + cumulative flags — the
-    SQL-expressible twin of the streaming session_window operator."""
+    """Batch sessionization (gap > 30 min) via lag + new-session flags,
+    summed per user."""
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     prev_ts = F.lag("ts").over(w)
     # full microsecond precision: the oracle compares ts - LAG(ts) > INTERVAL

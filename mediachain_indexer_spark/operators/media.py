@@ -1,4 +1,4 @@
-"""Multimodal column plumbing: opaque binary media + typed metadata.
+"""Media perceptual hashing: opaque binary media → 64-bit DCT pHash.
 
 Parity: the reference attaches a base64 thumbnail to each doc at ingest and
 computes its perceptual hash with PIL + imagehash
@@ -9,9 +9,9 @@ in pure numpy (``decode_image``), compressed containers (JPEG/PNG/GIF/WEBP
 magics) remain the one prod-needs-PIL stub (a loud ``NotImplementedError``
 the workers record as decode_ok=false), and unrecognized bytes fall back to
 a deterministic fake so arbitrary sandbox fixtures still flow end-to-end.
-The DCT pHash itself is the real imagehash.phash algorithm, and everything
-Spark-side — schema, Arrow batch shape, ``mapInPandas`` plumbing,
-partition sizing — is real and tested.
+The DCT pHash itself is the real imagehash.phash algorithm.  The one Spark
+operator is ``compute_media_phashes``, an Arrow-batched ``mapInPandas``
+crossing that ships only (media_ref, content) to the workers.
 
 Media table shape:
 
@@ -26,7 +26,6 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 MEDIA_SCHEMA = T.StructType(
@@ -208,13 +207,13 @@ def _gray_to_32(img: np.ndarray) -> np.ndarray:
     return out
 
 
-def _decode_any(content: bytes, to32: bool = True) -> np.ndarray:
+def _decode_any(content: bytes) -> np.ndarray:
     """Worker-side decode policy: REAL decode for parseable containers,
     the deterministic fake for anything else (so sandbox fixtures with
-    arbitrary bytes still flow end-to-end).  ``to32`` applies the pHash
-    front-end resize; compressed containers surface the prod-only PIL stub
-    as NotImplementedError, which the callers' skip-don't-crash handlers
-    record as decode_ok=false."""
+    arbitrary bytes still flow end-to-end), then the pHash front-end resize
+    to 32×32.  Compressed containers surface the prod-only PIL stub as
+    NotImplementedError, which the caller's skip-don't-crash handler
+    records as decode_ok=false."""
     try:
         img = decode_image(content)
     except (NotImplementedError, CorruptMediaError):
@@ -223,7 +222,7 @@ def _decode_any(content: bytes, to32: bool = True) -> np.ndarray:
         raise
     except ValueError:
         img = _decode_image_stub(content)
-    return _gray_to_32(img) if to32 else img
+    return _gray_to_32(img)
 
 
 # 32×32 DCT-II basis, built once per worker: M[k, n] = 2·cos(π·k·(2n+1)/2N)
@@ -287,143 +286,14 @@ def phash_media_batches(
         )
 
 
-def compute_media_phashes(media: DataFrame, partitions: int | None = None) -> DataFrame:
+def compute_media_phashes(media: DataFrame) -> DataFrame:
     """Distributed media hashing: binary column → 64-bit phash.
 
-    Repartitions by media_ref so hot refs spread evenly; the heavy work runs
-    in Arrow-batched Python with only (media_ref, content) shipped across —
-    metadata columns are pruned before the Python exchange.
+    The heavy work runs in Arrow-batched Python with only (media_ref,
+    content) shipped across — metadata columns are pruned before the
+    Python exchange.  Partitioning is the caller's: the output per row does
+    not depend on it.
     """
-    slim = media.select("media_ref", "content")
-    if partitions:
-        slim = slim.repartition(partitions, "media_ref")
-    return slim.mapInPandas(phash_media_batches, PHASH_RESULT_SCHEMA)
-
-
-RESIZE_RESULT_SCHEMA = (
-    "media_ref string, content binary, width int, height int, decode_ok boolean"
-)
-
-
-def make_resize_batches(width: int, height: int):
-    """mapInPandas worker factory: (media_ref, content) → re-encoded bytes at
-    (width, height).  Production: PIL decode → resize → encode.  Sandbox: the
-    stub decoder's fake pixel array is bilinearly block-averaged to the
-    target grid and re-encoded as raw bytes — deterministic, correct batch
-    shape, real Arrow plumbing; rows whose decode fails pass through with
-    decode_ok=false and the original bytes (the standard skip-don't-crash
-    policy for corrupt media at scale)."""
-
-    def resize_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_bytes, ws, hs, oks = [], [], [], []
-            for content in pdf["content"]:
-                try:
-                    img = _decode_any(content, to32=False)  # (H, W) float64
-                    # block-average "resize" onto the target grid
-                    yi = (np.arange(height) * img.shape[0] // height).clip(
-                        0, img.shape[0] - 1
-                    )
-                    xi = (np.arange(width) * img.shape[1] // width).clip(
-                        0, img.shape[1] - 1
-                    )
-                    small = img[np.ix_(yi, xi)].astype(np.uint8)
-                    out_bytes.append(small.tobytes())
-                    ws.append(width)
-                    hs.append(height)
-                    oks.append(True)
-                except Exception:  # skip-don't-crash on ANY corrupt payload
-                    out_bytes.append(content)
-                    ws.append(None)
-                    hs.append(None)
-                    oks.append(False)
-            yield pd.DataFrame(
-                {
-                    "media_ref": pdf["media_ref"],
-                    "content": out_bytes,
-                    "width": pd.array(ws, dtype="Int32"),
-                    "height": pd.array(hs, dtype="Int32"),
-                    "decode_ok": oks,
-                }
-            )
-
-    return resize_batches
-
-
-def resize_media(
-    media: DataFrame, width: int = 8, height: int = 8, partitions: int | None = None
-) -> DataFrame:
-    """Distributed media resize: binary in, resized binary out (1→1 rows)."""
-    slim = media.select("media_ref", "content")
-    if partitions:
-        slim = slim.repartition(partitions, "media_ref")
-    return slim.mapInPandas(
-        make_resize_batches(width, height), RESIZE_RESULT_SCHEMA
-    )
-
-
-FRAME_RESULT_SCHEMA = (
-    "media_ref string, frame_idx int, frame binary, decode_ok boolean"
-)
-
-
-def make_frame_sample_batches(n_frames: int):
-    """mapInPandas worker factory for 1→N frame sampling: each video asset
-    expands into n_frames rows.  Production: container demux + keyframe
-    sampling; sandbox: the stub derives frame f deterministically as a
-    rotated view of the fake pixel buffer.  The Spark-side contract under
-    test is the ROW EXPANSION (output cardinality != input — the shape a
-    video pipeline actually needs), the Arrow batch schema, and the
-    skip-don't-crash policy."""
-
-    def frame_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            refs, idxs, frames, oks = [], [], [], []
-            for ref, content in zip(pdf["media_ref"], pdf["content"]):
-                try:
-                    img = _decode_any(content)
-                    buf = img.astype(np.uint8).ravel()
-                    for f in range(n_frames):
-                        refs.append(ref)
-                        idxs.append(f)
-                        frames.append(np.roll(buf, f * 17).tobytes())
-                        oks.append(True)
-                except Exception:  # skip-don't-crash on ANY corrupt payload
-                    refs.append(ref)
-                    idxs.append(0)
-                    frames.append(None)
-                    oks.append(False)
-            yield pd.DataFrame(
-                {
-                    "media_ref": refs,
-                    "frame_idx": pd.array(idxs, dtype="Int32"),
-                    "frame": frames,
-                    "decode_ok": oks,
-                }
-            )
-
-    return frame_batches
-
-
-def sample_media_frames(
-    media: DataFrame, n_frames: int = 4, partitions: int | None = None
-) -> DataFrame:
-    """Distributed frame sampling: each asset expands to n_frames rows."""
-    slim = media.select("media_ref", "content")
-    if partitions:
-        slim = slim.repartition(partitions, "media_ref")
-    return slim.mapInPandas(make_frame_sample_batches(n_frames), FRAME_RESULT_SCHEMA)
-
-
-def media_meta_stats(media: DataFrame) -> DataFrame:
-    """Typed-metadata rollup — runs fully JVM-side off the meta struct,
-    never touching the binary payload (column pruning keeps the scan slim)."""
-    return (
-        media.select("meta.mime", "meta.n_bytes")
-        .groupBy("mime")
-        .agg(
-            F.count("*").alias("n_assets"),
-            F.sum("n_bytes").alias("total_bytes"),
-            F.avg("n_bytes").alias("avg_bytes"),
-        )
+    return media.select("media_ref", "content").mapInPandas(
+        phash_media_batches, PHASH_RESULT_SCHEMA
     )

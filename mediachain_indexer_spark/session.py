@@ -59,6 +59,22 @@ def _heap_gb(heap: str) -> float:
     return 0.0
 
 
+def _shm_local_dir(heap: str) -> str | None:
+    """Spark's local dir on the RAM-backed ``/dev/shm`` when it is writable
+    and its free space is at least the driver heap, else None (Spark's
+    default under java.io.tmpdir).  A container's default 64 MB ``/dev/shm``
+    is writable but too small to hold a shuffle spill."""
+    shm = "/dev/shm"
+    try:
+        st = os.statvfs(shm)
+    except OSError:
+        return None
+    room = st.f_bavail * st.f_frsize >= _heap_gb(heap) * 2**30
+    if room and os.access(shm, os.W_OK):
+        return os.path.join(shm, "spark-local")
+    return None
+
+
 def get_spark(
     app_name: str = "mediachain-indexer-spark",
     cores: int | None = None,
@@ -136,7 +152,8 @@ def get_spark(
             "spark.driver.extraJavaOptions", f"-Xms{heap} -XX:+AlwaysPreTouch"
         )
     # shuffle spill dir: prefer RAM-backed tmpfs over the shared root disk —
-    # the sandbox analog of the fast local NVMe a real executor would have.
+    # the sandbox analog of the fast local NVMe a real executor would have —
+    # when it has room for a heap's worth of spill (_shm_local_dir).
     # Concurrent shuffle writers on a slow disk anti-scale with core count.
     # SPARK_GRAFT_LOCAL_DIR overrides (comma-separated list round-robins
     # block files across dirs) — needed when a single-box probe's shuffle
@@ -144,13 +161,9 @@ def get_spark(
     # at 16M docs the tmpfs shuffle peaked >59 GB alongside a 60 GB heap
     # and the kernel OOM-killed the JVM; splitting tmpfs+disk halves the
     # RAM-resident share.
-    local_dir = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
+    local_dir = os.environ.get("SPARK_GRAFT_LOCAL_DIR") or _shm_local_dir(heap)
     if local_dir:
         builder = builder.config("spark.local.dir", local_dir)
-    else:
-        shm = "/dev/shm"
-        if os.path.isdir(shm) and os.access(shm, os.W_OK):
-            builder = builder.config("spark.local.dir", os.path.join(shm, "spark-local"))
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

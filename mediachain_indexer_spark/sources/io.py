@@ -173,25 +173,3 @@ def read_documents(
         )
     return spark.read.schema(schema).parquet(path)
 
-
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    bucket_col: str,
-    n_buckets: int = 16,
-    sorted_by: str | None = None,
-) -> None:
-    """Persist a table bucketed (and optionally sorted) by a join key.
-
-    The 100TB join strategy: two tables bucketed into the same (col, n)
-    layout join with NO exchange — each task reads matching bucket files
-    from both sides (SortMergeJoin over pre-sorted buckets skips the sort
-    too).  In prod this is Iceberg's ``bucket(n, col)`` hidden partition
-    transform; the sandbox uses the session catalog's bucketed parquet.
-    """
-    writer = df.write.mode("overwrite").format("parquet").bucketBy(
-        n_buckets, bucket_col
-    )
-    if sorted_by:
-        writer = writer.sortBy(sorted_by)
-    writer.saveAsTable(table_name)

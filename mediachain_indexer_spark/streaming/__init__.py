@@ -1,7 +1,3 @@
 from mediachain_indexer_spark.streaming.incremental import (  # noqa: F401
-    events_session_window,
-    events_sliding_counts,
-    events_tumbling_counts,
     incremental_dedupe_stream,
-    stream_dedup_within_watermark,
 )

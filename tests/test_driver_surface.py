@@ -121,3 +121,32 @@ def test_heap_gb_parsing_edge_cases():
     assert _heap_gb("g") == 0.0
     assert _heap_gb("1,5g") == 0.0
     assert _heap_gb("16") == 0.0
+
+
+def test_shm_local_dir_needs_room_for_the_heap(monkeypatch):
+    """/dev/shm becomes Spark's local dir only when its free space covers
+    the driver heap: a container's default 64 MB tmpfs is writable but
+    would fail the first shuffle spill.  statvfs is faked; no session."""
+    import types
+
+    from mediachain_indexer_spark import session
+
+    def free(n_bytes):
+        st = types.SimpleNamespace(f_bavail=n_bytes // 4096, f_frsize=4096)
+        return lambda path: st
+
+    monkeypatch.setattr(session.os, "access", lambda path, mode: True)
+    monkeypatch.setattr(session.os, "statvfs", free(64 * 2**20))
+    assert session._shm_local_dir("3g") is None
+    monkeypatch.setattr(session.os, "statvfs", free(3 * 2**30))
+    assert session._shm_local_dir("3g") == "/dev/shm/spark-local"
+    assert session._shm_local_dir("3072m") == "/dev/shm/spark-local"
+    assert session._shm_local_dir("4g") is None
+    monkeypatch.setattr(session.os, "access", lambda path, mode: False)
+    assert session._shm_local_dir("3g") is None
+
+    def missing(path):
+        raise FileNotFoundError(path)
+
+    monkeypatch.setattr(session.os, "statvfs", missing)
+    assert session._shm_local_dir("3g") is None

@@ -1,4 +1,4 @@
-"""Multimodal plumbing (mapInPandas over binary media) + streaming surface."""
+"""Media pHash (mapInPandas over binary media) + the foreachBatch ingest stream."""
 
 from __future__ import annotations
 
@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 from mediachain_indexer_spark.operators.media import (
     MEDIA_SCHEMA,
     compute_media_phashes,
-    media_meta_stats,
 )
 
 
@@ -28,12 +27,12 @@ def _media_df(spark, n=20):
 
 def test_media_phash_mapinpandas(spark):
     media = _media_df(spark)
-    out = compute_media_phashes(media, partitions=4)
+    out = compute_media_phashes(media.repartition(4, "media_ref"))
     rows = out.collect()
     assert len(rows) == 20
     assert all(r["decode_ok"] for r in rows)
     assert all(isinstance(r["phash"], int) for r in rows)
-    # deterministic across runs
+    # deterministic across runs and partitionings
     again = {r["media_ref"]: r["phash"] for r in compute_media_phashes(media).collect()}
     assert {r["media_ref"]: r["phash"] for r in rows} == again
 
@@ -49,11 +48,6 @@ def test_media_corrupt_bytes_flagged_not_crashed(spark):
     """Non-None corrupt payloads (empty bytes) must ALSO skip-don't-crash:
     the decode stub raises ValueError (size-0 reshape) for b'', which used
     to kill the whole task because only NotImplementedError was caught."""
-    from mediachain_indexer_spark.operators.media import (
-        resize_media,
-        sample_media_frames,
-    )
-
     rows = [
         ("bad", b"", {"mime": "image/png", "width": 1, "height": 1, "n_bytes": 0}),
         ("ok", bytes(range(200)), {"mime": "image/png", "width": 8, "height": 8,
@@ -64,103 +58,6 @@ def test_media_corrupt_bytes_flagged_not_crashed(spark):
     ph = {r["media_ref"]: r for r in compute_media_phashes(media).collect()}
     assert ph["bad"]["decode_ok"] is False and ph["bad"]["phash"] is None
     assert ph["ok"]["decode_ok"] is True
-
-    rz = {r["media_ref"]: r for r in resize_media(media, 8, 8).collect()}
-    assert rz["bad"]["decode_ok"] is False
-    assert rz["ok"]["decode_ok"] is True and len(rz["ok"]["content"]) == 64
-
-    fr = [r for r in sample_media_frames(media, n_frames=3).collect()]
-    by_ref = {}
-    for r in fr:
-        by_ref.setdefault(r["media_ref"], []).append(r)
-    assert len(by_ref["ok"]) == 3 and all(r["decode_ok"] for r in by_ref["ok"])
-    assert len(by_ref["bad"]) == 1 and by_ref["bad"][0]["decode_ok"] is False
-
-
-def test_media_meta_stats_prunes_binary(spark, tmp_path):
-    _media_df(spark).write.mode("overwrite").parquet(str(tmp_path / "media"))
-    media = spark.read.parquet(str(tmp_path / "media"))
-    stats = media_meta_stats(media)
-    got = {r["mime"]: r["n_assets"] for r in stats.collect()}
-    assert got == {"image/png": 10, "image/jpeg": 10}
-    # binary column must not be read: the parquet ReadSchema excludes it
-    plan = stats._jdf.queryExecution().executedPlan().toString()
-    read_schema = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
-    assert read_schema and all("content" not in ln for ln in read_schema)
-
-
-def test_streaming_tumbling_counts_rate_source(spark):
-    """Drive the streaming surface with the rate source → memory sink."""
-    from mediachain_indexer_spark.streaming.incremental import events_tumbling_counts
-
-    stream = (
-        spark.readStream.format("rate").option("rowsPerSecond", 200).load()
-        .select(
-            F.col("timestamp").alias("ts"),
-            (F.col("value") % 3).cast("string").alias("event_type"),
-        )
-    )
-    q = (
-        events_tumbling_counts(stream, minutes=1)
-        .writeStream.format("memory")
-        .queryName("tumbling_test")
-        .outputMode("update")
-        .start()
-    )
-    try:
-        # rate source emits nothing in its first instants — poll like the
-        # other rate-source tests (single-shot was flaky under suite load)
-        import time
-
-        rows = []
-        for _ in range(20):
-            q.processAllAvailable()
-            rows = spark.sql("select * from tumbling_test").collect()
-            if rows:
-                break
-            time.sleep(0.5)
-    finally:
-        q.stop()
-    assert {c for c in ["window_start", "window_end", "event_type", "n_events"]} <= set(
-        spark.sql("select * from tumbling_test").columns
-    )
-    assert len(rows) >= 1
-
-
-def test_streaming_session_window(spark):
-    from mediachain_indexer_spark.streaming.incremental import events_session_window
-
-    stream = (
-        spark.readStream.format("rate").option("rowsPerSecond", 100).load()
-        .select(
-            F.col("timestamp").alias("ts"),
-            F.col("value").alias("user_id"),  # unique → 1-event sessions close fast
-        )
-    )
-    q = (
-        # session aggs support APPEND only; tiny gap/watermark so sessions
-        # close within the test's runtime
-        events_session_window(stream, gap="1 second", watermark="0 seconds")
-        .writeStream.format("memory")
-        .queryName("session_test")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        import time
-
-        for _ in range(20):
-            q.processAllAvailable()
-            if spark.sql("select * from session_test").count() > 0:
-                break
-            time.sleep(0.5)
-        rows = spark.sql("select * from session_test").collect()
-    finally:
-        q.stop()
-    assert len(rows) >= 1
-    assert set(spark.sql("select * from session_test").columns) == {
-        "session_start", "session_end", "user_id", "n_events",
-    }
 
 
 def test_streaming_foreachbatch_increment(spark, docs500):
@@ -202,163 +99,6 @@ def test_streaming_foreachbatch_increment(spark, docs500):
         finally:
             q.stop()
     assert seen["batches"] >= 1 and seen["rows"] >= 1
-
-
-def test_stream_dedup_within_watermark(spark):
-    """Duplicate doc_ids within the watermark horizon are dropped."""
-    from mediachain_indexer_spark.streaming.incremental import (
-        stream_dedup_within_watermark,
-    )
-
-    stream = (
-        spark.readStream.format("rate").option("rowsPerSecond", 200).load()
-        .select(
-            F.col("timestamp").alias("ts"),
-            (F.col("value") % 7).cast("string").alias("doc_id"),  # heavy dupes
-        )
-    )
-    q = (
-        stream_dedup_within_watermark(stream)
-        .writeStream.format("memory")
-        .queryName("dedup_test")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        import time
-
-        for _ in range(20):
-            q.processAllAvailable()
-            if spark.sql("select * from dedup_test").count() >= 1:
-                break
-            time.sleep(0.5)
-        rows = spark.sql("select doc_id, count(*) c from dedup_test group by doc_id having count(*) > 1").collect()
-    finally:
-        q.stop()
-    assert rows == []  # each doc_id at most once within the watermark
-
-
-def test_streaming_sliding_counts(spark):
-    from mediachain_indexer_spark.streaming.incremental import events_sliding_counts
-
-    stream = (
-        spark.readStream.format("rate").option("rowsPerSecond", 100).load()
-        .select(F.col("timestamp").alias("ts"), F.col("value").alias("user_id"))
-    )
-    q = (
-        events_sliding_counts(stream, length_min=1, slide_min=1)
-        .writeStream.format("memory")
-        .queryName("sliding_test")
-        .outputMode("update")
-        .start()
-    )
-    try:
-        import time
-
-        for _ in range(20):
-            q.processAllAvailable()
-            if spark.sql("select * from sliding_test").count() > 0:
-                break
-            time.sleep(0.5)
-        rows = spark.sql("select * from sliding_test").collect()
-    finally:
-        q.stop()
-    assert len(rows) >= 1 and all(r["approx_users"] >= 1 for r in rows)
-
-
-def test_stream_exact_dedup_counts_stateful(spark, tmp_path):
-    """applyInPandasWithState: per-text-key state (first_doc_id, n_seen)
-    accumulates ACROSS micro-batches — the second file's repeat of doc a1's
-    text must raise that key's running count, not start over."""
-    import os
-    import time
-
-    from mediachain_indexer_spark.streaming.incremental import (
-        stream_exact_dedup_counts,
-    )
-
-    src = tmp_path / "src"
-    os.makedirs(src)
-    schema = "doc_id string, text string"
-    batch1 = spark.createDataFrame(
-        [("a1", "same text"), ("b1", "same text"), ("c1", "other text")], schema
-    )
-    batch1.coalesce(1).write.mode("overwrite").parquet(str(src / "f1"))
-
-    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(
-        str(src / "*")
-    )
-    q = (
-        stream_exact_dedup_counts(stream)
-        .writeStream.format("memory")
-        .queryName("dedup_state_test")
-        .outputMode("update")
-        .start()
-    )
-    try:
-        for _ in range(20):
-            q.processAllAvailable()
-            if spark.sql("select * from dedup_state_test").count() >= 2:
-                break
-            time.sleep(0.5)
-        batch2 = spark.createDataFrame([("a2", "same text")], schema)
-        batch2.coalesce(1).write.mode("overwrite").parquet(str(src / "f2"))
-        for _ in range(20):
-            q.processAllAvailable()
-            if spark.sql(
-                "select max(n_seen) as m from dedup_state_test"
-            ).collect()[0]["m"] >= 3:
-                break
-            time.sleep(0.5)
-        rows = spark.sql("select * from dedup_state_test").collect()
-    finally:
-        q.stop()
-
-    by_key = {}
-    for r in rows:  # update mode emits one row per key per touching batch
-        by_key.setdefault(r["text_key"], []).append((r["n_seen"], r["first_doc_id"]))
-    counts = {max(v)[0] for v in by_key.values()}
-    assert counts == {3, 1}  # 'same text' seen 3×, 'other text' once
-    same_key = [k for k, v in by_key.items() if max(v)[0] == 3][0]
-    assert max(by_key[same_key])[1] == "a1"  # first-seen representative kept
-
-
-def test_media_resize_mapinpandas(spark):
-    """1→1 resize plumbing: resized bytes have the target pixel count,
-    deterministic across runs; null content passes through flagged."""
-    from mediachain_indexer_spark.operators.media import resize_media
-
-    rows = [
-        ("m1", b"abcdefgh" * 10, ("image/png", 32, 32, 80)),
-        ("m2", None, ("image/png", None, None, 0)),
-    ]
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    got = {r["media_ref"]: r for r in resize_media(media, 8, 8).collect()}
-    assert got["m1"]["decode_ok"] and len(got["m1"]["content"]) == 64
-    assert got["m1"]["width"] == 8 and got["m1"]["height"] == 8
-    assert not got["m2"]["decode_ok"] and got["m2"]["content"] is None
-    again = {r["media_ref"]: r for r in resize_media(media, 8, 8).collect()}
-    assert again["m1"]["content"] == got["m1"]["content"]  # deterministic
-
-
-def test_media_frame_sampling_expands_rows(spark):
-    """1→N frame sampling: each decodable asset expands to n_frames rows
-    with distinct frame bytes; failed decode yields one flagged row."""
-    from mediachain_indexer_spark.operators.media import sample_media_frames
-
-    rows = [
-        ("v1", b"framedata" * 20, ("video/mp4", None, None, 180)),
-        ("v2", None, ("video/mp4", None, None, 0)),
-    ]
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    out = sample_media_frames(media, n_frames=4).collect()
-    v1 = sorted(
-        (r for r in out if r["media_ref"] == "v1"), key=lambda r: r["frame_idx"]
-    )
-    assert [r["frame_idx"] for r in v1] == [0, 1, 2, 3]
-    assert len({bytes(r["frame"]) for r in v1}) == 4  # frames differ
-    v2 = [r for r in out if r["media_ref"] == "v2"]
-    assert len(v2) == 1 and not v2[0]["decode_ok"]
 
 
 def test_dct_phash_matches_naive_dct_reference():

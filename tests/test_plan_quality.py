@@ -84,30 +84,6 @@ def test_pair_generation_partitions_by_block_key(spark, corpus500_paths):
     assert "hashpartitioning(block_key" in plan
 
 
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    """Co-located join: two tables bucketed on the same key join with NO
-    shuffle — the bucketing IS the partitioning (Iceberg bucket() in prod)."""
-    from mediachain_indexer_spark.sources.io import write_bucketed
-
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        orders = load_table(spark, SF_DIR, "orders")
-        lineitem = load_table(spark, SF_DIR, "lineitem")
-        write_bucketed(orders, "orders_b", "o_orderkey", 8, sorted_by="o_orderkey")
-        write_bucketed(lineitem, "lineitem_b", "l_orderkey", 8, sorted_by="l_orderkey")
-        joined = spark.table("orders_b").join(
-            spark.table("lineitem_b"),
-            F.col("o_orderkey") == F.col("l_orderkey"),
-        )
-        plan = _executed(joined)
-        assert "Exchange" not in plan, plan[:2000]
-        assert joined.count() > 0
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "128m")
-        spark.sql("DROP TABLE IF EXISTS orders_b")
-        spark.sql("DROP TABLE IF EXISTS lineitem_b")
-
-
 def test_verify_tier_broadcasts_gram_sides(spark, corpus500_paths):
     """MinHash verify tier under the broadcast threshold: the gram arrays
     must attach via BroadcastHashJoin (never re-serialized through a

@@ -10,15 +10,12 @@ acceptance views of quality:
 - **pairwise F1 on labeled pairs at shared blocking keys** (the north-rule
   acceptance metric, plans/eval.pairwise_f1).
 
-The original round-4 artifact (two configs compared at 2M) was produced by
-a scratch script that the 2026-08-17 sandbox VM restart wiped along with
-the rest of the pre-restart ``.cache``; this committed tool regenerates the
-evidence for the ADOPTED config on demand:
+This committed tool regenerates the evidence for the ADOPTED config on
+demand; the default size fits a 4-core / 15 GB host:
 
-    python tools/validate_thresholds.py [n_docs]   # default 2,000,000
+    python tools/validate_thresholds.py [n_docs]   # default 100,000
 
-Writes ``.cache/validate_thresholds_2m.json`` (or ``..._<n>.json`` for
-other sizes) and prints the JSON.
+Writes ``BENCH/VALIDATE_THRESHOLDS_<n_docs>.json`` and prints the JSON.
 """
 
 from __future__ import annotations
@@ -65,7 +62,7 @@ def cluster_pairwise_f1(pred, truth) -> dict:
 
 
 def main() -> None:
-    n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 2_000_000
+    n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 100_000
     from pyspark.sql import functions as F
 
     from mediachain_indexer_spark.plans.eval import pairwise_f1
@@ -105,8 +102,7 @@ def main() -> None:
         "labeled_pairwise": {k: float(v) for k, v in pw.items()},
         "wall_sec": round(wall, 1),
     }
-    tag = "2m" if n_docs == 2_000_000 else str(n_docs)
-    path = os.path.join(REPO, ".cache", f"validate_thresholds_{tag}.json")
+    path = os.path.join(REPO, "BENCH", f"VALIDATE_THRESHOLDS_{n_docs}.json")
     with open(path, "w") as f:
         json.dump(out, f, indent=1)
     print(json.dumps(out))
