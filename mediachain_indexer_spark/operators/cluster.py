@@ -29,7 +29,6 @@ Critical scale details:
 
 from __future__ import annotations
 
-import threading
 from collections.abc import Iterator
 
 import numpy as np
@@ -37,18 +36,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# the converged per-node aggregate backing the most recent
-# connected_components result stays cached until the NEXT call (the caller
-# materializes the returned projection lazily); bounded to one call's worth.
-# _CC_LOCK serializes the unpersist/append hand-off: without it, concurrent
-# calls from multiple driver threads could interleave the sequence and leak
-# (or double-release) a frame.  Contract for callers: materialize a result
-# BEFORE issuing the next connected_components call if you want the final
-# projection to be a cache read — a later call may evict the aggregate, in
-# which case the projection recomputes through the held checkpoint blocks
-# (correct, just slower).
-_CC_LOCK = threading.Lock()
-_CC_FINAL_CACHES: list[DataFrame] = []
+from mediachain_indexer_spark.operators._cache import hold_until_next_call
 
 
 def _local_roots(edges: pd.DataFrame) -> pd.DataFrame:
@@ -274,23 +262,18 @@ def connected_components(
             if _non_star_nodes(stats).count() == 0:
                 # stats has every node exactly once; members (mn < u) carry
                 # their root in mn, roots (mn > u) map to themselves.  The
-                # result is a narrow projection of the cached aggregate:
-                # ownership of that cache moves to the last-call registry
-                # (released at the NEXT call) so the caller's first
-                # materialization is a cache read, with no extra job here.
-                # If a later call evicts it first, the projection recomputes
-                # as one groupBy over the held checkpoint blocks — correct,
-                # just slower.
+                # result is a narrow projection of the cached aggregate,
+                # held until the next call (operators/_cache.py) so the
+                # caller's first materialization is a cache read, with no
+                # extra job here.  If a later call evicts it first, the
+                # projection recomputes as one groupBy over the held
+                # checkpoint blocks.
                 comp = stats.select(
                     F.col("u").alias("doc_id"),
                     F.least("u", "mn").alias("entity_id"),
                 )
                 _cached.remove(stats)
-                with _CC_LOCK:
-                    for _old in _CC_FINAL_CACHES:
-                        _old.unpersist()
-                    _CC_FINAL_CACHES.clear()
-                    _CC_FINAL_CACHES.append(stats)
+                hold_until_next_call("connected_components", stats)
                 break
             if op_large:
                 und = e.select("u", "v").unionByName(

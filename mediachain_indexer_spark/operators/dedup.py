@@ -19,8 +19,6 @@ Parity anchor: the reference's dedupe candidate models
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -29,15 +27,7 @@ from mediachain_indexer_spark.functions.minhash import (
     make_minhash_udf,
 )
 from mediachain_indexer_spark.functions.text import norm_text, tokens
-
-# frames persisted by the most recent verify-tier call (see ownership note
-# in minhash_near_duplicates): released at the NEXT call so a session that
-# sweeps many entries retains at most one call's worth of cache.  The lock
-# serializes the release/append hand-off against concurrent driver threads;
-# callers must materialize a result before the next call to keep the
-# cache-read fast path (a later call may evict first — recompute, correct).
-_VERIFY_TIER_LOCK = threading.Lock()
-_VERIFY_TIER_CACHES: list[DataFrame] = []
+from mediachain_indexer_spark.operators._cache import hold_until_next_call
 
 
 def exact_duplicates(
@@ -179,31 +169,19 @@ def minhash_near_duplicates(
             )
         )
     )
-    # Cache ownership: the returned DataFrame's lineage still traverses
-    # cand (1×) and grams (4×: sza/szb/ga/gb — each including the banding
-    # self-join via the participant prune), so they must stay persisted
-    # until the CALLER materializes the result.  A plain persist leaks for
-    # the app's lifetime when one session sweeps many entries; instead the
-    # previous call's frames are released here, bounding retained cache to
-    # the most recent call.
-    with _VERIFY_TIER_LOCK:
-        for _old in _VERIFY_TIER_CACHES:
-            _old.unpersist()
-        _VERIFY_TIER_CACHES.clear()
-        cand = cand.persist()  # feeds the participant prune AND the verify join
-        _VERIFY_TIER_CACHES.append(cand)
+    # The returned DataFrame's lineage still traverses cand (1×, it also
+    # feeds the participant prune) and grams (4×: sza/szb/ga/gb — each
+    # including the banding self-join via the participant prune), so both
+    # stay cached until this function's next call (operators/_cache.py).
     participants = (
         cand.select(F.col("doc_a").alias("doc_id"))
         .unionByName(cand.select(F.col("doc_b").alias("doc_id")))
         .distinct()
     )
-    grams = (
-        docs.join(participants, "doc_id", "left_semi")
-        .select("doc_id", gram_hashes.alias("g"))
-        .persist()
+    grams = docs.join(participants, "doc_id", "left_semi").select(
+        "doc_id", gram_hashes.alias("g")
     )
-    with _VERIFY_TIER_LOCK:
-        _VERIFY_TIER_CACHES.append(grams)
+    hold_until_next_call("minhash_near_duplicates", cand, grams)
     total_grams = grams.agg(F.sum(F.size("g"))).collect()[0][0] or 0
 
     # JVM size-ratio gate (exact upper bound, narrow columns only)

@@ -26,25 +26,12 @@ Scale design (BASELINE.json north_star, verbatim requirements):
 
 from __future__ import annotations
 
-import threading
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-# the staged (capped) block table backing the most recent candidate_pairs
-# call stays cached until the NEXT call — same last-call-registry contract as
-# cluster._CC_FINAL_CACHES: the caller materializes the returned pairs frame
-# (which reads the cache) before issuing another call, and a later call
-# releases the previous frame so repeated pipeline runs hold O(1) staged
-# caches.  The cache (not a localCheckpoint) is the round-6 change: an
-# InMemoryRelation PRESERVES the cap window's hashpartitioning(block_key)
-# and (block_key, xxhash64, doc_id) sort order, so the small-block self-join
-# runs as a zero-exchange zero-sort SortMergeJoin over the cache, where the
-# checkpoint's UnknownPartitioning forced the planner to broadcast-build a
-# ~1M-row hash relation per run (measured: see OPTIMIZATION_r06.md).
-_STAGED_LOCK = threading.Lock()
-_STAGED_CACHES: list[DataFrame] = []
+from mediachain_indexer_spark.operators._cache import hold_until_next_call
 
 # largest cap whose unsalted blocks stay healthy tasks (1024²/2 ≈ 5×10⁵ pairs)
 SALT_REQUIRED_ABOVE = 1024
@@ -279,16 +266,14 @@ def candidate_pairs(blocks: DataFrame, cfg: PairsConfig = PairsConfig()) -> Data
     # inputs (left/right × plain/salted) and Spark's exchange reuse does NOT
     # fire across them (verified on the executed plan: 4 full recomputations
     # of scan→MinHash→window, zero ReusedExchange) — measured 9.4s → 5.3s
-    # for the pairs stage at the 100k bench.  A persist() (last-call
-    # registry, see _STAGED_CACHES), not a localCheckpoint: the cache keeps
-    # the cap window's partitioning + sort, so the self-join needs no
-    # exchange, no sort and no broadcast build.
-    staged = cap_blocks(blocks, cfg.max_block_size).persist()
-    with _STAGED_LOCK:
-        for _old in _STAGED_CACHES:
-            _old.unpersist()
-        _STAGED_CACHES.clear()
-        _STAGED_CACHES.append(staged)
+    # for the pairs stage at the 100k bench.  A cache held until the next
+    # call (operators/_cache.py), not a localCheckpoint: an InMemoryRelation
+    # keeps the cap window's hashpartitioning(block_key) and sort order, so
+    # the small-block self-join runs with no exchange, no sort and no
+    # broadcast build, where the checkpoint's UnknownPartitioning made the
+    # planner broadcast-build a ~1M-row hash relation (OPTIMIZATION_r06.md).
+    staged = cap_blocks(blocks, cfg.max_block_size)
+    hold_until_next_call("candidate_pairs", staged)
     # None → "= cap": post-cap block size never exceeds max_block_size, so
     # the salted branch is provably empty — elide the whole subtree (and
     # the routing filter) instead of planning dead scans/joins over it

@@ -13,6 +13,7 @@ with the same ``run_id`` reads completed stages back instead of recomputing
 Lineage schema (FIXTURES.md B4):
     run_id, stage, partition_id, key_lo, key_hi, rows_in, rows_out,
     wall_ms, status
+(``rows_in`` is written null: a stage's build function does not report it.)
 """
 
 from __future__ import annotations
@@ -76,7 +77,6 @@ class StageRunner:
         stage: str,
         fn: Callable[[], DataFrame],
         key_col: str | None = None,
-        rows_in: int | None = None,
     ) -> DataFrame:
         path = self._stage_path(stage)
         if self.completed(stage):
@@ -99,7 +99,7 @@ class StageRunner:
             F.col("partition_id"),
             F.col("key_lo"),
             F.col("key_hi"),
-            F.lit(rows_in).cast("long").alias("rows_in"),
+            F.lit(None).cast("long").alias("rows_in"),
             F.col("rows_out").cast("long"),
             F.lit(wall_ms).cast("long").alias("wall_ms"),
             F.lit("ok").alias("status"),

@@ -88,11 +88,11 @@ _FEATURES_SCHEMA = (
 
 
 def _read_or_empty(spark: SparkSession, path: str, schema: str) -> DataFrame:
-    """Schema-safe store read: a fully-deleted table has no bucket dirs left
-    and parquet schema inference would fail on the bare directory."""
+    """Store read with the table's declared schema: no inference job, and a
+    fully-deleted table (no bucket dirs left) reads as an empty frame."""
     if not _table_exists(path):
         return spark.createDataFrame([], schema)
-    return read_entities(spark, path)
+    return read_entities(spark, path, schema)
 
 
 def _block_table(feats: DataFrame) -> DataFrame:

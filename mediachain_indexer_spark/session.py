@@ -10,7 +10,10 @@ Scale rationale (tuned for a 1000-executor cluster, tested on local[N]):
   caches), so each cached ER stage runs at a width sized to its data
   rather than at ``spark.sql.shuffle.partitions``.
 - Driver heap sized from the host: about 40% of MemTotal, capped at 16g
-  (``SPARK_DRIVER_MEM`` overrides).
+  (``SPARK_DRIVER_MEM`` overrides).  The JVM grows it on demand.
+- Shuffle spill dir on the RAM-backed ``/dev/shm`` when its free space
+  covers the heap, else Spark's default; Spark's ``SPARK_LOCAL_DIRS``
+  overrides either.
 - Arrow everything: the pipeline's only JVM→Python crossings are
   Arrow-batched — the MinHash and Jaro-Winkler pandas_udfs and the CC
   contraction's mapInPandas union-find — never row-at-a-time Python.
@@ -32,9 +35,8 @@ MAX_DEFAULT_HEAP_GB = 16
 def _default_heap() -> str:
     """About 40% of physical RAM, capped at 16g, as a JVM memory spec.
 
-    A fixed 16g pre-touched heap cannot start on a 15 GB host (the JVM
-    fails to map it); 40% leaves room for the Python workers and the
-    RAM-backed shuffle dir.  Without /proc/meminfo the cap is used.
+    40% leaves room for the Python workers and the RAM-backed shuffle dir
+    on a small host.  Without /proc/meminfo the cap is used.
     """
     try:
         with open("/proc/meminfo") as f:
@@ -45,10 +47,11 @@ def _default_heap() -> str:
 
 
 def _heap_gb(heap: str) -> float:
-    """Parse a JVM memory spec ('16g', '16384m') to GB for the pretouch
-    heuristic.  Unknown/malformed specs (empty env var, '1,5g', bare 'g')
-    return 0.0 — pretouch stays off and Spark's own config validation
-    reports the bad value with its usual error."""
+    """Parse a JVM memory spec ('16g', '16384m') to GB for the /dev/shm
+    room check (_shm_local_dir).  Unknown/malformed specs (empty env var,
+    '1,5g', bare 'g') return 0.0 — the check then asks for no room, and
+    Spark's own config validation reports the bad value with its usual
+    error."""
     try:
         if heap and heap[-1] in "gG":
             return float(heap[:-1])
@@ -136,32 +139,10 @@ def get_spark(
         .config("spark.driver.memory", heap)
         .config("spark.ui.enabled", "false")
     )
-    # Pre-size (and pre-fault) the driver/executor heap the way a production
-    # executor runs (-Xms == -Xmx): lazy heap growth turns the first timed
-    # reps into kernel page-zeroing storms on this sandbox's VM (measured
-    # 2026-08-17: vmstat `sy` 40-78% during rep 1-2, first-rep e2e 24.6s vs
-    # 12.4s warm without the flags; 17.3s vs 12.0s with them — BENCH/
-    # BASELINE.md "host-state" note).  AlwaysPreTouch moves the fault-in to
-    # JVM startup, outside any timed region.  Auto-disabled for large-heap
-    # probes where the shuffle tmpfs and the heap share physical RAM and an
-    # eagerly resident heap would add OOM pressure (the 16M-doc probe).
-    pretouch = os.environ.get("SPARK_GRAFT_PRETOUCH", "auto")
-    heap_gb = _heap_gb(heap)
-    if pretouch == "1" or (pretouch == "auto" and 0 < heap_gb <= 24):
-        builder = builder.config(
-            "spark.driver.extraJavaOptions", f"-Xms{heap} -XX:+AlwaysPreTouch"
-        )
-    # shuffle spill dir: prefer RAM-backed tmpfs over the shared root disk —
-    # the sandbox analog of the fast local NVMe a real executor would have —
-    # when it has room for a heap's worth of spill (_shm_local_dir).
-    # Concurrent shuffle writers on a slow disk anti-scale with core count.
-    # SPARK_GRAFT_LOCAL_DIR overrides (comma-separated list round-robins
-    # block files across dirs) — needed when a single-box probe's shuffle
-    # footprint would compete with the JVM heap for the same physical RAM:
-    # at 16M docs the tmpfs shuffle peaked >59 GB alongside a 60 GB heap
-    # and the kernel OOM-killed the JVM; splitting tmpfs+disk halves the
-    # RAM-resident share.
-    local_dir = os.environ.get("SPARK_GRAFT_LOCAL_DIR") or _shm_local_dir(heap)
+    # shuffle spill dir: RAM-backed /dev/shm when it has room for a heap's
+    # worth of spill (_shm_local_dir) — concurrent shuffle writers on a slow
+    # shared disk anti-scale with core count.  SPARK_LOCAL_DIRS wins over it.
+    local_dir = _shm_local_dir(heap)
     if local_dir:
         builder = builder.config("spark.local.dir", local_dir)
     for k, v in (extra_conf or {}).items():

@@ -119,10 +119,15 @@ def _rewrite_buckets(
         shutil.rmtree(f"{target_path}/{BUCKET_COL}={b}", ignore_errors=True)
 
 
-def read_entities(spark: SparkSession, target_path: str) -> DataFrame:
-    """Read back the upsert target without the internal bucket column."""
-    df = spark.read.parquet(target_path)
-    return df.drop(BUCKET_COL)
+def read_entities(
+    spark: SparkSession, target_path: str, schema: str | None = None
+) -> DataFrame:
+    """Read back the upsert target without the internal bucket column.
+
+    A declared ``schema`` (the table's columns, without the bucket column)
+    skips parquet schema inference, a Spark job per read."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(target_path).drop(BUCKET_COL)
 
 
 def _table_exists(path: str) -> bool:

@@ -3,8 +3,10 @@ cap/salt invariants, cross-band dedup."""
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
+from mediachain_indexer_spark.operators import _cache
 from mediachain_indexer_spark.operators.blocking import build_blocks
 from mediachain_indexer_spark.operators.normalize import normalize_documents
 from mediachain_indexer_spark.operators.pairs import PairsConfig, candidate_pairs
@@ -37,6 +39,19 @@ def test_pairs_canonical_and_unique(spark, docs500):
     n = pairs.count()
     assert pairs.where(F.col("doc_a") >= F.col("doc_b")).count() == 0
     assert pairs.dropDuplicates(["doc_a", "doc_b"]).count() == n
+
+
+def test_repeat_call_keeps_its_staged_cache(spark, docs500):
+    """A second call over the same blocks builds the same staged plan, and
+    Spark caches by plan: the first call's cache is released before the
+    second persists, so the second call's pairs still read a cache."""
+    blocks = build_blocks(normalize_documents(docs500))
+    candidate_pairs(blocks).count()
+    pairs = candidate_pairs(blocks)
+    pairs.count()
+    (staged,) = _cache._HELD["candidate_pairs"]
+    assert staged.storageLevel != StorageLevel.NONE
+    assert "InMemoryTableScan" in pairs._jdf.queryExecution().executedPlan().toString()
 
 
 def test_salted_path_equals_plain_path(spark, docs500):

@@ -109,9 +109,9 @@ def test_entry_registration_window():
 
 
 def test_heap_gb_parsing_edge_cases():
-    """The pretouch heuristic's memory-spec parser must never crash
+    """The /dev/shm room check's memory-spec parser must never crash
     get_spark: empty env var, bare suffix, comma decimals, and megabyte
-    specs all resolve (unknown -> 0.0 -> pretouch off, Spark validates)."""
+    specs all resolve (unknown -> 0.0 -> no room asked, Spark validates)."""
     from mediachain_indexer_spark.session import _heap_gb
 
     assert _heap_gb("16g") == 16.0

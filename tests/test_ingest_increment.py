@@ -16,7 +16,7 @@ from mediachain_indexer_spark.plans.ingest import (
 )
 from mediachain_indexer_spark.plans.pipeline import run_pipeline
 from mediachain_indexer_spark.sources.io import SPANS_SCHEMA
-from mediachain_indexer_spark.sources.merge import read_entities
+from mediachain_indexer_spark.sources.merge import read_entities, upsert_entities
 
 
 def _clusters(df) -> dict:
@@ -59,6 +59,24 @@ def test_increment_idempotent_replay(spark, docs500, tmp_path):
     again = _clusters(read_store_entities(spark, store))
     assert again == first
     assert stats["n_docs_changed"] == 0
+
+
+def test_store_read_runs_no_job(spark, tmp_path):
+    """A store read declares the table's schema, so building the frame
+    runs no Spark job (no parquet schema inference)."""
+    store = EntityStore(str(tmp_path / "store"))
+    rows = spark.createDataFrame([("d1", "e1"), ("d2", "e1")], "doc_id string, entity_id string")
+    upsert_entities(rows, store.entities, n_buckets=store.n_buckets)
+    sc = spark.sparkContext
+    group = "store-read-jobs"
+    sc.setJobGroup(group, "read_store_entities")
+    try:
+        ents = read_store_entities(spark, store)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert ents.columns == ["doc_id", "entity_id"]
+    assert _clusters(ents) == {"d1": "e1", "d2": "e1"}
 
 
 def _stored_blocks(spark, store) -> set:

@@ -73,7 +73,6 @@ def run_once(
         "spark-submit",
         "--master", f"local[{cores}]",
         "--driver-memory", mem,
-        "--conf", f"spark.driver.extraJavaOptions=-Xms{mem} -XX:+AlwaysPreTouch",
         "--py-files", zpath,
         os.path.join(REPO, "mediachain_indexer_spark", "jobs", "dedupe_job.py"),
         "--input", input_path,
