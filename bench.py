@@ -93,7 +93,12 @@ def bench_er(
 def _bench_er_once(spark, n_docs: int) -> dict:
     """One timed end-to-end rep (see bench_er): ``run_pipeline`` with a stage
     hook that persists each stage's frame and counts it before the next
-    stage starts, so every stage wall measures exactly one stage's work."""
+    stage starts, so every stage wall measures exactly one stage's work.
+
+    Over the same window the rep records the JVM's JIT compile time
+    (``jit_compile_s``, CompilationMXBean, summed over compiler threads) and
+    the classes Spark's code generator compiled (``codegen_compiles``:
+    generated-code cache misses)."""
     from mediachain_indexer_spark.plans.pipeline import run_pipeline
     from mediachain_indexer_spark.sources.io import read_documents
 
@@ -110,10 +115,16 @@ def _bench_er_once(spark, n_docs: int) -> dict:
         walls[name] = round(time.monotonic() - t, 3)
         return df
 
+    jit = spark._jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    jit0 = jit.getTotalCompilationTime()
+    compiles0 = codegen.METRIC_COMPILATION_TIME().getCount()
     t0 = time.monotonic()
     res = run_pipeline(docs, stage=timed)
     n_matches = res.matches.count()
     wall = time.monotonic() - t0
+    jit_ms = jit.getTotalCompilationTime() - jit0
+    compiles = codegen.METRIC_COMPILATION_TIME().getCount() - compiles0
     n_clustered = counts.pop("cluster")
     for df in cached:
         df.unpersist()
@@ -131,6 +142,8 @@ def _bench_er_once(spark, n_docs: int) -> dict:
         "cluster_wall_sec": walls["cluster"],
         "e2e_wall_sec": round(wall, 3),
         "pairs_scored_per_sec": round(n_pairs / t_score, 1) if t_score > 0 else None,
+        "jit_compile_s": round(jit_ms / 1000, 3),
+        "codegen_compiles": compiles,
     }
 
 

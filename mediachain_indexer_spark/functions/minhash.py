@@ -32,6 +32,8 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from mediachain_indexer_spark.session import per_context
+
 MERSENNE_P = (1 << 31) - 1
 
 
@@ -78,8 +80,16 @@ def make_minhash_udf(num_hashes: int = 64, n: int = 3, seed: int = 42):
     """Factory: Arrow pandas_udf computing MinHash signatures (array<long>).
 
     Empty/null text → null signature (those docs skip text blocking; they
-    may still block via media hashes).
+    may still block via media hashes).  One UDF object per argument tuple
+    and SparkContext (session.per_context).
     """
+    return per_context(
+        ("make_minhash_udf", num_hashes, n, seed),
+        lambda: _minhash_udf(num_hashes, n, seed),
+    )
+
+
+def _minhash_udf(num_hashes: int, n: int, seed: int):
     a_coef, b_coef = _coefficients(num_hashes, seed)
     a_np = np.array(a_coef, dtype=np.uint64)
     b_np = np.array(b_coef, dtype=np.uint64)

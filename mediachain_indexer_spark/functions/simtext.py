@@ -26,6 +26,8 @@ import pandas as pd
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType
 
+from mediachain_indexer_spark.session import per_context
+
 MAXLEN = 64  # titles/artists; longer strings are truncated (similarity-stable)
 _PAD = -1
 WINKLER_P = 0.1
@@ -119,6 +121,15 @@ def _gather_b(B: np.ndarray, b_pos: np.ndarray, maxlen: int) -> np.ndarray:
 
 
 def make_gated_jw(hamming_radius: int, text_floor: float, text_only: float):
+    """The gated JW UDF (``_gated_jw``), one object per argument tuple and
+    SparkContext (session.per_context)."""
+    return per_context(
+        ("make_gated_jw", hamming_radius, text_floor, text_only),
+        lambda: _gated_jw(hamming_radius, text_floor, text_only),
+    )
+
+
+def _gated_jw(hamming_radius: int, text_floor: float, text_only: float):
     """Cascade-scoring JW: compute Jaro-Winkler ONLY where it can flip the
     match decision; other rows return NaN (→ null).
 

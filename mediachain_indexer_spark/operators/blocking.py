@@ -27,10 +27,12 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.udf import UserDefinedFunction
 
 from mediachain_indexer_spark.functions.minhash import lsh_band_keys, make_minhash_udf
+from mediachain_indexer_spark.session import per_context
 
 PHASH_BANDS = 3  # see BlockingConfig.phash_bands
 
@@ -106,13 +108,20 @@ def build_blocks(norm_df: DataFrame, cfg: BlockingConfig = BlockingConfig()) -> 
     ``explode`` flattens it — Catalyst keeps this in a single codegen stage
     up to the downstream shuffle.
     """
-    sig_expr = make_minhash_udf(cfg.num_hashes, cfg.shingle_n, cfg.seed)(
-        F.col("norm_text")
-    )
-    # project the signature once before fanning out into band keys
-    norm_df = norm_df.select(
-        "doc_id", "norm_text", "phashes", sig_expr.alias("minhash_sig")
-    )
+    minhash, block_cols = per_context(("build_blocks", cfg), lambda: _columns(cfg))
+    # project the signature once before fanning out into band keys; the
+    # UDF is applied per call, so every plan gets its own PythonUDF
+    return norm_df.select(
+        "doc_id",
+        "norm_text",
+        "phashes",
+        minhash(F.col("norm_text")).alias("minhash_sig"),
+    ).select(*block_cols).select("block_key", "doc_id", "exact_hash")
+
+
+def _columns(cfg: BlockingConfig) -> tuple[UserDefinedFunction, tuple[Column, ...]]:
+    """(MinHash UDF, build_blocks' output columns over its signature)."""
+    minhash = make_minhash_udf(cfg.num_hashes, cfg.shingle_n, cfg.seed)
     sig = F.col("minhash_sig")
     text_keys = F.when(
         sig.isNotNull(),
@@ -147,8 +156,8 @@ def build_blocks(norm_df: DataFrame, cfg: BlockingConfig = BlockingConfig()) -> 
     # signatures) plus the e: key, so without suppression it enters the raw
     # pair table ~(1 + bands) times and dominates the cross-band dedup
     # shuffle (operators/pairs.candidate_pairs).
-    return norm_df.select(
+    return minhash, (
         F.col("doc_id"),
         F.explode(keys).alias("block_key"),
         exact_hash.alias("exact_hash"),
-    ).select("block_key", "doc_id", "exact_hash")
+    )

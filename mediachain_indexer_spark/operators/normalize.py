@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from mediachain_indexer_spark.functions.phash import phash_of_media_ref
 from mediachain_indexer_spark.functions.text import norm_text
+from mediachain_indexer_spark.session import per_context
 
 _FS = chr(31)  # field separator in the span signature
 _NULL = chr(30)  # null sentinel — cannot appear in real span values
@@ -102,7 +103,17 @@ def normalize_documents(df: DataFrame) -> DataFrame:
     """
     # schema-aware: a source-pruned scan (io.read_documents spans_fields=…)
     # may omit span fields entirely — emit empty arrays for missing families
-    span_fields = {f.name for f in df.schema["spans"].dataType.elementType.fields}
+    span_fields = frozenset(
+        f.name for f in df.schema["spans"].dataType.elementType.fields
+    )
+    return df.select(
+        *per_context(("normalize_documents", span_fields), lambda: _columns(span_fields))
+    )
+
+
+def _columns(span_fields: frozenset[str]) -> tuple[Column, ...]:
+    """normalize_documents' output columns for a spans struct with these
+    fields."""
     if "text" in span_fields:
         text_concat = F.concat_ws(
             " ", _ordered_values(F.col("spans"), "text", "text")
@@ -116,7 +127,7 @@ def normalize_documents(df: DataFrame) -> DataFrame:
         )
     else:
         phashes = F.array().cast("array<long>")
-    return df.select(
+    return (
         F.col("doc_id"),
         sorted_spans("spans", span_fields).alias("spans"),
         norm_text(text_concat).alias("norm_text"),

@@ -20,11 +20,14 @@ the pipeline when reused across stages.
 from __future__ import annotations
 
 from dataclasses import dataclass
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.udf import UserDefinedFunction
 
 from mediachain_indexer_spark.functions.simtext import make_gated_jw
+from mediachain_indexer_spark.session import per_context
 
 HAMMING_FAR = 64  # sentinel when either side has no media
 
@@ -86,6 +89,7 @@ def score_pairs(
     is cascade-gated (functions/simtext.make_gated_jw): null on rows where
     no jw value could change ``is_match``.
     """
+    c = per_context(("score_pairs", cfg), lambda: _columns(cfg))
     # No entry repartition (round-5 A/B, 2M docs / 24.9M pairs, 2
     # alternating reps each): a round-robin repartition(2×parallelism) was
     # wall-neutral (47.5/48.3 s with vs 49.3/47.8 s without, outputs
@@ -93,17 +97,62 @@ def score_pairs(
     # key immediately, so the round-robin exchange balances nothing the join
     # exchange doesn't, and on a real cluster it is a full network pass
     # over the biggest table in the pipeline.
-    fa = features.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("norm_text").alias("text_a"),
-        F.col("phashes").alias("phashes_a"),
+    df = pairs.join(features.select(*c.side_a), "doc_a").join(
+        features.select(*c.side_b), "doc_b"
     )
-    fb = features.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("norm_text").alias("text_b"),
-        F.col("phashes").alias("phashes_b"),
+    scored = (
+        # min_hamming FIRST: the lev cascade conditions reference it
+        df.withColumn("min_hamming", c.min_hamming)
+        .withColumn("_sa", c.sorted_a)
+        .withColumn("_sb", c.sorted_b)
+        .withColumn("lev_sim", c.lev_sim)
+        .withColumn("lev_sim_sorted", c.lev_sim_sorted)
+        # cascade: JW computed only where it can flip the decision (null
+        # elsewhere).  Single pass — a filter-split union was measured
+        # slower (it recomputes the feature joins per branch).  The UDF is
+        # applied per call, so every plan gets its own PythonUDF.
+        .withColumn("jw", c.gated_jw(*c.jw_args))
+        .withColumn("text_sim", c.text_sim)
     )
-    df = pairs.join(fa, "doc_a").join(fb, "doc_b")
+    scored = scored.withColumn("score", c.score).withColumn("is_match", c.is_match)
+    return scored.select(
+        "doc_a",
+        "doc_b",
+        "jw",
+        "lev_sim",
+        "lev_sim_sorted",
+        "text_sim",
+        "min_hamming",
+        "score",
+        "is_match",
+    )
+
+
+class _Columns(NamedTuple):
+    side_a: tuple[Column, ...]
+    side_b: tuple[Column, ...]
+    min_hamming: Column
+    sorted_a: Column
+    sorted_b: Column
+    lev_sim: Column
+    lev_sim_sorted: Column
+    gated_jw: UserDefinedFunction
+    jw_args: tuple[Column, ...]
+    text_sim: Column
+    score: Column
+    is_match: Column
+
+
+def _columns(cfg: ScoringConfig) -> _Columns:
+    """score_pairs' expressions for ``cfg`` (the gated JW UDF unapplied)."""
+    side_a, side_b = (
+        (
+            F.col("doc_id").alias(f"doc_{s}"),
+            F.col("norm_text").alias(f"text_{s}"),
+            F.col("phashes").alias(f"phashes_{s}"),
+        )
+        for s in "ab"
+    )
 
     # ---- Levenshtein cascade: O(1) length-difference upper bounds gate the
     # O(m·n) DP.  lev_sim ≤ 1 - |Δlen|/maxlen always, so when the bound
@@ -189,61 +238,31 @@ def score_pairs(
         ).otherwise(sorted_ub)
     )
 
-    gated_jw = make_gated_jw(
-        cfg.hamming_radius, cfg.text_floor, cfg.text_only_threshold
-    )
-    scored = (
-        # min_hamming FIRST: the lev cascade conditions reference it
-        df.withColumn(
-            "min_hamming", min_hamming(F.col("phashes_a"), F.col("phashes_b"))
-        )
-        .withColumn("_sa", _tok_sorted("text_a"))
-        .withColumn("_sb", _tok_sorted("text_b"))
-        .withColumn("lev_sim", lev_sim)
-        .withColumn("lev_sim_sorted", lev_sim_sorted)
-        # cascade: JW computed only where it can flip the decision (null
-        # elsewhere).  Single pass — a filter-split union was measured
-        # slower (it recomputes the feature joins per branch).
-        .withColumn(
-            "jw",
-            gated_jw(
-                F.col("text_a"),
-                F.col("text_b"),
-                F.col("lev_sim"),
-                F.col("lev_sim_sorted"),
-                F.col("min_hamming"),
-            ),
-        )
-        .withColumn(
-            "text_sim",
-            F.greatest(
-                F.coalesce(
-                    (F.col("jw") + F.col("lev_sim")) / 2.0, F.col("lev_sim")
-                ),
-                F.col("lev_sim_sorted"),
-            ),
-        )
+    text_sim = F.greatest(
+        F.coalesce((F.col("jw") + F.col("lev_sim")) / 2.0, F.col("lev_sim")),
+        F.col("lev_sim_sorted"),
     )
     media_sim = 1.0 - F.least(F.col("min_hamming"), F.lit(16)) / 16.0
-    scored = scored.withColumn(
-        "score", 0.6 * F.col("text_sim") + 0.4 * media_sim
-    ).withColumn(
-        "is_match",
-        (
+    return _Columns(
+        side_a=side_a,
+        side_b=side_b,
+        min_hamming=min_hamming(F.col("phashes_a"), F.col("phashes_b")),
+        sorted_a=_tok_sorted("text_a"),
+        sorted_b=_tok_sorted("text_b"),
+        lev_sim=lev_sim,
+        lev_sim_sorted=lev_sim_sorted,
+        gated_jw=make_gated_jw(
+            cfg.hamming_radius, cfg.text_floor, cfg.text_only_threshold
+        ),
+        jw_args=tuple(
+            F.col(name)
+            for name in ("text_a", "text_b", "lev_sim", "lev_sim_sorted", "min_hamming")
+        ),
+        text_sim=text_sim,
+        score=0.6 * F.col("text_sim") + 0.4 * media_sim,
+        is_match=(
             (F.col("min_hamming") <= cfg.hamming_radius)
             & (F.col("text_sim") >= cfg.text_floor)
         )
         | (F.col("text_sim") >= cfg.text_only_threshold),
     )
-    return scored.select(
-        "doc_a",
-        "doc_b",
-        "jw",
-        "lev_sim",
-        "lev_sim_sorted",
-        "text_sim",
-        "min_hamming",
-        "score",
-        "is_match",
-    )
-

@@ -18,6 +18,8 @@ def test_bench_er_once_reports_every_key(spark):
         "cluster_wall_sec",
         "e2e_wall_sec",
         "pairs_scored_per_sec",
+        "jit_compile_s",
+        "codegen_compiles",
     }
     assert er["n_docs"] == er["n_docs_clustered"] == 500
     assert set(er["stage_counts"]) == {"normalize", "block", "pairs", "score"}
@@ -25,3 +27,5 @@ def test_bench_er_once_reports_every_key(spark):
     assert er["stage_counts"]["normalize"] == 500
     assert er["stage_counts"]["score"] == er["pairs_scored"]
     assert 0 < er["n_matches"] <= er["pairs_scored"]
+    assert er["jit_compile_s"] >= 0
+    assert er["codegen_compiles"] >= 0
