@@ -322,7 +322,7 @@ def cascade_scored_ctes() -> str:
     lev_sim / lev_sim_sorted emit the O(1) length-difference upper BOUND on
     rows where the exact DP cannot change any decision (the bound itself is
     the column value Spark ships), and jw is computed — and non-null — only
-    on rows where it can flip ``is_match`` (make_gated_jw's gate).  The
+    on rows where it can flip ``is_match`` (score_pairs' ``need_jw``).  The
     thresholds appear in their original expression shapes (``2.0*0.99-1.0``
     et al., all ::DOUBLE) so the folded constants match Spark's bit-for-bit."""
     return f"""lv AS (

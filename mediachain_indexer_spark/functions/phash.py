@@ -3,8 +3,8 @@
 Parity: the reference computes a 64-bit pHash/dHash of each image thumbnail
 with the ``imagehash`` library (``mediachain/indexer/mc_dedupe.py`` hash
 helpers) and compares via Hamming distance.  In production this engine does
-the same through an Arrow ``pandas_udf`` over image bytes
-(``streaming/media.py`` stub).  In the sandbox (no PIL/imagehash) the fixture
+the same from image bytes (``operators/media.py``: an Arrow-batched
+``mapInPandas`` DCT pHash).  In the sandbox (no PIL/imagehash) the fixture
 embeds the 64-bit hash in the media ref itself (``m:<16-hex>``), so the
 derivation below is exact *and* Hamming-local; any other ref string falls
 back to ``xxhash64`` (deterministic, but avalanche — no locality).

@@ -120,51 +120,21 @@ def _gather_b(B: np.ndarray, b_pos: np.ndarray, maxlen: int) -> np.ndarray:
     return np.where(b_pos < maxlen, gathered, _PAD)
 
 
-def make_gated_jw(hamming_radius: int, text_floor: float, text_only: float):
-    """The gated JW UDF (``_gated_jw``), one object per argument tuple and
-    SparkContext (session.per_context)."""
-    return per_context(
-        ("make_gated_jw", hamming_radius, text_floor, text_only),
-        lambda: _gated_jw(hamming_radius, text_floor, text_only),
-    )
+def make_jw():
+    """The scorer's JW UDF (``_jw``), one object per SparkContext
+    (session.per_context)."""
+    return per_context("make_jw", _jw)
 
 
-def _gated_jw(hamming_radius: int, text_floor: float, text_only: float):
-    """Cascade-scoring JW: compute Jaro-Winkler ONLY where it can flip the
-    match decision; other rows return NaN (→ null).
+def _jw():
+    """Jaro-Winkler over (a, b) string pairs; a null pair returns NaN (→ null).
 
-    With text_sim = max((jw + lev)/2, lev_sorted) and the decision
-    (hamming ≤ r ∧ text_sim ≥ floor) ∨ (text_sim ≥ τ), JW is decision-
-    relevant iff:
-      (hamming ≤ r ∧ lev_sorted < floor)   — jw could lift past the floor
-      ∨ (lev ≥ 2τ − 1)                     — jw could lift past τ
-    Everywhere else the outcome is invariant for any jw ∈ [0,1] (the
-    (jw+lev)/2 term is bounded by (1+lev)/2 < τ, and accepted rows stay
-    accepted via lev_sorted alone).  This is the classic cheap-filter →
-    expensive-refine cascade: at the measured corpus it skips ~90% of the
-    Python string work without changing a single match bit.
+    operators/scoring.py passes both sides through its JW gate, so only the
+    rows where jw can flip the match decision arrive non-null.
     """
 
-    def gated(
-        a: pd.Series,
-        b: pd.Series,
-        lev_sim: pd.Series,
-        lev_sorted: pd.Series,
-        hamming: pd.Series,
-    ) -> pd.Series:
-        a = a.fillna("")
-        b = b.fillna("")
-        need = (
-            (hamming.to_numpy() <= hamming_radius)
-            & (lev_sorted.to_numpy() < text_floor)
-        ) | (lev_sim.to_numpy() >= 2.0 * text_only - 1.0)
-        # equality short-circuit: a == b ⇒ jw = 1 and lev_sim = 1, so
-        # (jw+lev)/2 = 1 = the coalesce fallback — value-invariant for
-        # text_sim, and the scorer's jw(null) path handles it.  At the
-        # measured bench corpus 14% of candidate pairs are exact-text dupes
-        # and ALL of them pass the thresholds above; skipping them halves
-        # the Python string work.
-        need &= a.to_numpy() != b.to_numpy()
+    def jw(a: pd.Series, b: pd.Series) -> pd.Series:
+        need = (a.notna() & b.notna()).to_numpy()
         out = pd.Series(np.full(len(a), np.nan))
         if need.any():
             idx = np.nonzero(need)[0]
@@ -178,12 +148,12 @@ def _gated_jw(hamming_radius: int, text_floor: float, text_only: float):
     # .asNondeterministic(): the UDF IS deterministic in fact, but the marker
     # is the standard barrier against CollapseProject / filter pushdown.
     # Without it, a consumer like score_pairs(...).where("is_match") lets
-    # Catalyst inline is_match → text_sim → gated(...) into a pushed-down
-    # join filter that ExtractPythonUDFs cannot lift, and whole-stage codegen
-    # dies with INTERNAL_ERROR "Cannot evaluate expression: gated(...)"
-    # (round-1 driver failure on er_matches; regression: tests/test_simtext.py
+    # Catalyst inline is_match → text_sim → jw(...) into a pushed-down join
+    # filter that ExtractPythonUDFs cannot lift, and whole-stage codegen dies
+    # with INTERNAL_ERROR "Cannot evaluate expression" (round-1 driver
+    # failure on er_matches; regression: tests/test_simtext.py
     # ::test_filter_unpersisted_scores).
-    return pandas_udf(gated, returnType=DoubleType()).asNondeterministic()
+    return pandas_udf(jw, returnType=DoubleType()).asNondeterministic()
 
 
 # ---------------------------------------------------------------------------

@@ -37,9 +37,10 @@ def run(spark, args) -> dict:
     management, so tests drive it with their own session)."""
     from pyspark.sql import functions as F
 
+    from mediachain_indexer_spark.operators.pairs import PairsConfig
     from mediachain_indexer_spark.plans.checkpoint import StageRunner
     from mediachain_indexer_spark.plans.eval import pairwise_f1
-    from mediachain_indexer_spark.plans.pipeline import PipelineConfig, run_pipeline
+    from mediachain_indexer_spark.plans.pipeline import run_pipeline
     from mediachain_indexer_spark.sources.io import read_documents
 
     t0 = time.monotonic()
@@ -49,14 +50,9 @@ def run(spark, args) -> dict:
         if args.run_dir and args.run_id
         else None
     )
-    from mediachain_indexer_spark.operators.pairs import PairsConfig
-
-    cfg = PipelineConfig(
-        pairs=PairsConfig(exact_strategy=getattr(args, "exact_strategy", "clique")),
-    )
     res = run_pipeline(
         docs,
-        cfg,
+        PairsConfig(exact_strategy=getattr(args, "exact_strategy", "clique")),
         stage=runner.run if runner is not None else None,
         entity_sink=args.entity_sink,
     )

@@ -25,8 +25,6 @@ pair-join shuffle.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.udf import UserDefinedFunction
@@ -34,53 +32,45 @@ from pyspark.sql.udf import UserDefinedFunction
 from mediachain_indexer_spark.functions.minhash import lsh_band_keys, make_minhash_udf
 from mediachain_indexer_spark.session import per_context
 
-PHASH_BANDS = 3  # see BlockingConfig.phash_bands
+# MinHash-LSH banding (b=12, r=6): S-curve 50%-threshold at
+# (1/12)^(1/6) ≈ 0.66.  Junk collisions grow superlinearly with corpus size
+# (measured: t-band raw pairs 16.9M @500k → 116M @2M docs under r=5), and at
+# 10^12 docs wasted candidate pairs ARE the dominant cost.  Measured at 2M
+# docs with the full pipeline + pairwise-F1 eval (see BENCH/BASELINE.md):
+#   r=5: 85.5M pairs, score 241 s, F1 0.9997
+#   r=6: 24.9M pairs (−71%), score 65 s (3.7×), F1 0.9997 (same P AND R)
+#   r=7: 14.4M pairs (−83%), score 32 s (7.5×), F1 0.9998
+# r=6 is the setting — identical quality, 3.7× cheaper scoring at 2M, and the
+# margin widens with corpus size; move to r=7 at 10^8+ docs (together with
+# er_oracle's banding literals, which re-derive these keys).  True dupes are
+# additionally covered by the exact (e:) and media (p:) families, which is
+# why recall holds as the text curve steepens.
+MINHASH_BANDS = 12
+MINHASH_ROWS = 6  # signature length = bands * rows
+SHINGLE_N = 3
+MINHASH_SEED = 42
+# pHash banding: PHASH_BANDS contiguous bit ranges of the 64-bit hash.
+# Collision is GUARANTEED when pairwise Hamming < PHASH_BANDS, and the
+# junk-collision rate is n² / (2 · 2^(64/bands)) per band — band width must
+# grow with corpus size.  3 bands × 21 bits (2M buckets) keeps random
+# collisions negligible at 10^6 docs; at 10^9+ move to 2×32 (text LSH covers
+# the larger-radius media pairs — true duplicates share text too).  The old
+# 4×16 layout collided quadratically: measured 17M junk media pairs at 500k
+# docs.
+PHASH_BANDS = 3
 
 
-@dataclass(frozen=True)
-class BlockingConfig:
-    # (b=12, r=6): S-curve 50%-threshold at (1/12)^(1/6) ≈ 0.66.  Junk
-    # collisions grow superlinearly with corpus size (measured: t-band raw
-    # pairs 16.9M @500k → 116M @2M docs under r=5), and at 10^12 docs wasted
-    # candidate pairs ARE the dominant cost.  Measured at 2M docs with the
-    # full pipeline + pairwise-F1 eval (see BENCH/BASELINE.md):
-    #   r=5: 85.5M pairs, score 241 s, F1 0.9997
-    #   r=6: 24.9M pairs (−71%), score 65 s (3.7×), F1 0.9997 (same P AND R)
-    #   r=7: 14.4M pairs (−83%), score 32 s (7.5×), F1 0.9998
-    # r=6 is the default — identical quality, 3.7× cheaper scoring at 2M,
-    # and the margin widens with corpus size; move to r=7 at 10^8+ docs.
-    # True dupes are additionally covered by the exact (e:) and media (p:)
-    # families, which is why recall holds as the text curve steepens.
-    minhash_bands: int = 12
-    minhash_rows: int = 6  # signature length = bands * rows
-    shingle_n: int = 3
-    seed: int = 42
-    # pHash banding: `phash_bands` contiguous bit ranges of the 64-bit hash.
-    # Collision is GUARANTEED when pairwise Hamming < phash_bands, and the
-    # junk-collision rate is n² / (2 · 2^(64/bands)) per band — band width
-    # must grow with corpus size.  3 bands × 21 bits (2M buckets) keeps
-    # random collisions negligible at 10^6 docs; at 10^9+ move to 2×32
-    # (text LSH covers the larger-radius media pairs — true duplicates share
-    # text too).  The old 4×16 layout collided quadratically: measured 17M
-    # junk media pairs at 500k docs.
-    phash_bands: int = PHASH_BANDS
-
-    @property
-    def num_hashes(self) -> int:
-        return self.minhash_bands * self.minhash_rows
-
-
-def phash_band_keys(phashes_col, bands: int = PHASH_BANDS) -> "F.Column":
+def phash_band_keys(phashes_col) -> "F.Column":
     """array<string> of band keys for every phash in an array<long> column.
 
-    The 64 bits are split into ``bands`` contiguous ranges (width = 64//bands,
-    remainder to the last band; band 0 is the hash *prefix* bucket).  Key =
-    'p<b>:<band value>'.  Pure JVM bit ops.
+    The 64 bits are split into ``PHASH_BANDS`` contiguous ranges (width =
+    64 // PHASH_BANDS, remainder to the last band; band 0 is the hash
+    *prefix* bucket).  Key = 'p<b>:<band value>'.  Pure JVM bit ops.
     """
-    width = 64 // bands
+    width = 64 // PHASH_BANDS
     keys_per_hash = []
-    for b in range(bands):
-        lo = 64 - (b + 1) * width if b < bands - 1 else 0
+    for b in range(PHASH_BANDS):
+        lo = 64 - (b + 1) * width if b < PHASH_BANDS - 1 else 0
         hi = 64 - b * width  # exclusive
         mask = (1 << (hi - lo)) - 1
         keys_per_hash.append(
@@ -97,7 +87,7 @@ def phash_band_keys(phashes_col, bands: int = PHASH_BANDS) -> "F.Column":
     )
 
 
-def build_blocks(norm_df: DataFrame, cfg: BlockingConfig = BlockingConfig()) -> DataFrame:
+def build_blocks(norm_df: DataFrame) -> DataFrame:
     """(doc_id, norm_text, phashes) → (block_key, doc_id, exact_hash), distinct.
 
     ``exact_hash`` is xxhash64 of ``norm_text`` (null for empty text) — the
@@ -108,7 +98,7 @@ def build_blocks(norm_df: DataFrame, cfg: BlockingConfig = BlockingConfig()) -> 
     ``explode`` flattens it — Catalyst keeps this in a single codegen stage
     up to the downstream shuffle.
     """
-    minhash, block_cols = per_context(("build_blocks", cfg), lambda: _columns(cfg))
+    minhash, block_cols = per_context("build_blocks", _columns)
     # project the signature once before fanning out into band keys; the
     # UDF is applied per call, so every plan gets its own PythonUDF
     return norm_df.select(
@@ -119,18 +109,18 @@ def build_blocks(norm_df: DataFrame, cfg: BlockingConfig = BlockingConfig()) -> 
     ).select(*block_cols).select("block_key", "doc_id", "exact_hash")
 
 
-def _columns(cfg: BlockingConfig) -> tuple[UserDefinedFunction, tuple[Column, ...]]:
+def _columns() -> tuple[UserDefinedFunction, tuple[Column, ...]]:
     """(MinHash UDF, build_blocks' output columns over its signature)."""
-    minhash = make_minhash_udf(cfg.num_hashes, cfg.shingle_n, cfg.seed)
+    minhash = make_minhash_udf(MINHASH_BANDS * MINHASH_ROWS, SHINGLE_N, MINHASH_SEED)
     sig = F.col("minhash_sig")
     text_keys = F.when(
         sig.isNotNull(),
-        lsh_band_keys(sig, cfg.minhash_bands, cfg.minhash_rows),
+        lsh_band_keys(sig, MINHASH_BANDS, MINHASH_ROWS),
     ).otherwise(F.array().cast("array<string>"))
 
     media_keys = F.when(
         F.col("phashes").isNotNull(),
-        phash_band_keys(F.col("phashes"), cfg.phash_bands),
+        phash_band_keys(F.col("phashes")),
     ).otherwise(F.array().cast("array<string>"))
 
     has_text = F.col("norm_text").isNotNull() & (F.length("norm_text") > 0)

@@ -19,36 +19,34 @@ the pipeline when reused across stages.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
 from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.udf import UserDefinedFunction
 
-from mediachain_indexer_spark.functions.simtext import make_gated_jw
+from mediachain_indexer_spark.functions.simtext import make_jw
 from mediachain_indexer_spark.session import per_context
 
 HAMMING_FAR = 64  # sentinel when either side has no media
 
 
-@dataclass(frozen=True)
-class ScoringConfig:
-    # accept iff (min_hamming <= hamming_radius AND text_sim >= text_floor)
-    #         OR text_sim >= text_only_threshold
-    #
-    # Defaults re-tuned round 4 under the corrected dominance rule: the
-    # old (8, 0.50, 0.96) cell ranked 19/36 on a 2M-doc pair-level sweep;
-    # the adopted (8, 0.40, 0.99) cell was sweep-optimal and cut the score
-    # wall 68.6 → 46.1 s there (the lower floor seals more rows before the
-    # JW cascade; the higher τ tightens the text-only channel).  Cluster-
-    # level evidence on a 4-core / 15 GB host is
-    # BENCH/VALIDATE_THRESHOLDS_100000.json (tools/validate_thresholds.py,
-    # 100k docs): cluster P/R/F1 1.0 / 0.999988 / 0.999994 against the
-    # generative truth, labeled pairwise F1 0.999994 (0 FP, 4 FN).
-    hamming_radius: int = 8
-    text_floor: float = 0.40
-    text_only_threshold: float = 0.99
+# accept iff (min_hamming <= HAMMING_RADIUS AND text_sim >= TEXT_FLOOR)
+#         OR text_sim >= TEXT_ONLY_THRESHOLD
+#
+# Re-tuned round 4 under the corrected dominance rule: the old
+# (8, 0.50, 0.96) cell ranked 19/36 on a 2M-doc pair-level sweep; the
+# adopted (8, 0.40, 0.99) cell was sweep-optimal and cut the score wall
+# 68.6 → 46.1 s there (the lower floor seals more rows before the JW
+# cascade; the higher τ tightens the text-only channel).  Cluster-level
+# evidence on a 4-core / 15 GB host is BENCH/VALIDATE_THRESHOLDS_100000.json
+# (tools/validate_thresholds.py, 100k docs): cluster P/R/F1
+# 1.0 / 0.999988 / 0.999994 against the generative truth, labeled pairwise
+# F1 0.999994 (0 FP, 4 FN).  er_oracle's SQL re-derives the scores with
+# these values as literals; change both together.
+HAMMING_RADIUS = 8
+TEXT_FLOOR = 0.40
+TEXT_ONLY_THRESHOLD = 0.99
 
 
 def min_hamming(a_hashes, b_hashes) -> "F.Column":
@@ -72,11 +70,7 @@ def min_hamming(a_hashes, b_hashes) -> "F.Column":
     return F.coalesce(F.array_min(cross), F.lit(HAMMING_FAR)).cast("int")
 
 
-def score_pairs(
-    pairs: DataFrame,
-    features: DataFrame,
-    cfg: ScoringConfig = ScoringConfig(),
-) -> DataFrame:
+def score_pairs(pairs: DataFrame, features: DataFrame) -> DataFrame:
     """pairs(doc_a, doc_b) × features(doc_id, norm_text, phashes) → scored.
 
     Output: (doc_a, doc_b, jw, lev_sim, lev_sim_sorted, text_sim,
@@ -86,10 +80,10 @@ def score_pairs(
     average damps the Winkler prefix boost on near-miss titles sharing a
     long prefix (where JW alone over-scores); the token-sorted Levenshtein
     channel catches "artist — title" vs "title — artist" renditions.  ``jw``
-    is cascade-gated (functions/simtext.make_gated_jw): null on rows where
-    no jw value could change ``is_match``.
+    is cascade-gated: null on rows where no jw value could change
+    ``is_match``.
     """
-    c = per_context(("score_pairs", cfg), lambda: _columns(cfg))
+    c = per_context("score_pairs", _columns)
     # No entry repartition (round-5 A/B, 2M docs / 24.9M pairs, 2
     # alternating reps each): a round-robin repartition(2×parallelism) was
     # wall-neutral (47.5/48.3 s with vs 49.3/47.8 s without, outputs
@@ -111,7 +105,7 @@ def score_pairs(
         # elsewhere).  Single pass — a filter-split union was measured
         # slower (it recomputes the feature joins per branch).  The UDF is
         # applied per call, so every plan gets its own PythonUDF.
-        .withColumn("jw", c.gated_jw(*c.jw_args))
+        .withColumn("jw", c.jw(*c.jw_args))
         .withColumn("text_sim", c.text_sim)
     )
     scored = scored.withColumn("score", c.score).withColumn("is_match", c.is_match)
@@ -136,15 +130,15 @@ class _Columns(NamedTuple):
     sorted_b: Column
     lev_sim: Column
     lev_sim_sorted: Column
-    gated_jw: UserDefinedFunction
+    jw: UserDefinedFunction
     jw_args: tuple[Column, ...]
     text_sim: Column
     score: Column
     is_match: Column
 
 
-def _columns(cfg: ScoringConfig) -> _Columns:
-    """score_pairs' expressions for ``cfg`` (the gated JW UDF unapplied)."""
+def _columns() -> _Columns:
+    """score_pairs' expressions (the JW UDF unapplied)."""
     side_a, side_b = (
         (
             F.col("doc_id").alias(f"doc_{s}"),
@@ -167,14 +161,14 @@ def _columns(cfg: ScoringConfig) -> _Columns:
     max_len = F.greatest(F.length("text_a"), F.length("text_b"))
     len_gap = F.abs(F.length("text_a") - F.length("text_b"))
     lev_ub = F.when(max_len == 0, F.lit(1.0)).otherwise(1.0 - len_gap / max_len)
-    in_radius = F.col("min_hamming") <= cfg.hamming_radius
+    in_radius = F.col("min_hamming") <= HAMMING_RADIUS
     # equality short-circuit first: exact-text dupes (14% of bench pairs)
-    # skip both O(m·n) DPs and (via the matching gate in make_gated_jw) the
+    # skip both O(m·n) DPs and (via the matching term of need_jw) the
     # Python JW kernel — all three are exactly 1.0 for equal strings
     eq_text = F.col("text_a") == F.col("text_b")
     lev_sim = F.when(eq_text | (max_len == 0), F.lit(1.0)).otherwise(
         F.when(
-            in_radius | (lev_ub >= 2.0 * cfg.text_only_threshold - 1.0),
+            in_radius | (lev_ub >= 2.0 * TEXT_ONLY_THRESHOLD - 1.0),
             1.0 - F.levenshtein("text_a", "text_b") / max_len,
         ).otherwise(lev_ub)
     )
@@ -214,14 +208,15 @@ def _columns(cfg: ScoringConfig) -> _Columns:
     # hash-match; decision-invariance suite).
     # A null text counts as '' here, as concat_ws made it before the gating:
     # a null side scores lev_sim_sorted 0.0 (1.0 if both are null), not NULL.
-    la = F.length(F.coalesce(F.col("text_a"), F.lit("")))
-    lb = F.length(F.coalesce(F.col("text_b"), F.lit("")))
+    ta, tb = (F.coalesce(F.col(c), F.lit("")) for c in ("text_a", "text_b"))
+    la = F.length(ta)
+    lb = F.length(tb)
     smax_len = F.greatest(la, lb)
     slen_gap = F.abs(la - lb)
     sorted_ub = F.when(smax_len == 0, F.lit(1.0)).otherwise(
         1.0 - slen_gap / smax_len
     )
-    need_sorted_dp = in_radius | (sorted_ub >= cfg.text_only_threshold)
+    need_sorted_dp = in_radius | (sorted_ub >= TEXT_ONLY_THRESHOLD)
 
     def _tok_sorted(c: str) -> "F.Column":
         return F.when(eq_text | ~need_sorted_dp, F.lit("")).otherwise(
@@ -238,6 +233,26 @@ def _columns(cfg: ScoringConfig) -> _Columns:
         ).otherwise(sorted_ub)
     )
 
+    # ---- JW gate: the Python kernel runs only where jw can flip is_match.
+    # With text_sim = max((jw + lev)/2, lev_sorted) and the match rule, jw
+    # is decision-relevant iff
+    #   (hamming ≤ r ∧ lev_sorted < floor)   — jw could lift past the floor
+    #   ∨ (lev ≥ 2τ − 1)                     — jw could lift past τ
+    # Everywhere else the outcome is invariant for any jw ∈ [0,1] (the
+    # (jw+lev)/2 term is bounded by (1+lev)/2 < τ, and accepted rows stay
+    # accepted via lev_sorted alone): at the measured corpus this skips ~90%
+    # of the Python string work without changing a single match bit.  Equal
+    # texts skip it too: jw = lev_sim = 1 there, which is the coalesce
+    # fallback's text_sim.  A null text counts as '' (so a null side in
+    # radius scores jw 0.0), and the null lev_sim such a pair gets counts as
+    # below the 2τ − 1 cut.
+    need_jw = (
+        (in_radius & (F.col("lev_sim_sorted") < TEXT_FLOOR))
+        | F.coalesce(
+            F.col("lev_sim") >= 2.0 * TEXT_ONLY_THRESHOLD - 1.0, F.lit(False)
+        )
+    ) & (ta != tb)
+
     text_sim = F.greatest(
         F.coalesce((F.col("jw") + F.col("lev_sim")) / 2.0, F.col("lev_sim")),
         F.col("lev_sim_sorted"),
@@ -251,18 +266,10 @@ def _columns(cfg: ScoringConfig) -> _Columns:
         sorted_b=_tok_sorted("text_b"),
         lev_sim=lev_sim,
         lev_sim_sorted=lev_sim_sorted,
-        gated_jw=make_gated_jw(
-            cfg.hamming_radius, cfg.text_floor, cfg.text_only_threshold
-        ),
-        jw_args=tuple(
-            F.col(name)
-            for name in ("text_a", "text_b", "lev_sim", "lev_sim_sorted", "min_hamming")
-        ),
+        jw=make_jw(),
+        jw_args=(F.when(need_jw, ta), F.when(need_jw, tb)),
         text_sim=text_sim,
         score=0.6 * F.col("text_sim") + 0.4 * media_sim,
-        is_match=(
-            (F.col("min_hamming") <= cfg.hamming_radius)
-            & (F.col("text_sim") >= cfg.text_floor)
-        )
-        | (F.col("text_sim") >= cfg.text_only_threshold),
+        is_match=(in_radius & (F.col("text_sim") >= TEXT_FLOOR))
+        | (F.col("text_sim") >= TEXT_ONLY_THRESHOLD),
     )

@@ -2,8 +2,9 @@
 blocking keys — the acceptance metric (BASELINE.json metric field).
 
 Parity: the reference evaluates predicted duplicates against labeled
-ground-truth pairs with precision/recall and hyperparameter sweeps
-(``mediachain/indexer/mc_eval.py``).  Same spirit here: labels join the
+ground-truth pairs with precision/recall (``mediachain/indexer/
+mc_eval.py``; its hyperparameter sweeps have no counterpart here, as the
+scorer's thresholds are constants).  Same spirit here: labels join the
 pipeline's block assignments (the metric's own "shared blocking key"
 condition), predictions are "same final entity_id", TP/FP/FN come from one
 aggregate.
@@ -58,94 +59,6 @@ def pairwise_f1(
         "recall": recall,
         "f1": f1,
     }
-
-
-def grid_search_thresholds(
-    labels: DataFrame,
-    scored: DataFrame,
-    hamming_radii: tuple[int, ...] = (4, 6, 8, 10),
-    text_floors: tuple[float, ...] = (0.4, 0.5, 0.6),
-    text_onlys: tuple[float, ...] = (0.93, 0.96, 0.99),
-    scored_cfg=None,
-) -> list[dict]:
-    """Decision-threshold sweep on already-scored pairs (mc_eval parity).
-
-    One pass: labels join scored once, then every (radius, floor, only)
-    combo is evaluated as a conditional aggregate in a single wide agg —
-    |grid| extra columns, zero extra shuffles or rescoring.  Pair-level F1
-    (pre-clustering) — the cluster step can only merge, so this bounds the
-    pipeline's precision.
-
-    **Gating coupling**: ``score_pairs`` cascade-gates its text channels —
-    jw is null and lev_sim/lev_sim_sorted are upper *bounds* wherever the
-    exact value cannot flip the decision *at the scoring config's own
-    thresholds*.  Sweeping combos outside that envelope would evaluate
-    degraded text_sim and report F1 the pipeline would not actually produce.
-    Pass ``scored_cfg`` (the ScoringConfig the ``scored`` frame was produced
-    with) and the sweep asserts dominance per threshold, in the direction
-    each gate actually opens:
-
-    - radius: scored ≥ every swept radius (JW + exact-lev computed for every
-      hamming any swept radius admits);
-    - floor: scored ≥ every swept **floor** — the JW gate *skips* rows with
-      lev_sorted ≥ scored floor (their decision is already sealed at that
-      floor), so a HIGHER swept floor would need JW on rows where only the
-      lev fallback was stored and F1 would silently misreport (a scored
-      floor of 0.4 swept at 0.6 calls a ham=2/lev_sorted=0.45/jw=0.95 row a
-      non-match that the real 0.6-configured pipeline accepts);
-    - τ: scored ≤ every swept τ (the lev/JW τ-gates use ≥ 2τ−1 lower cuts).
-
-    I.e. score once at (max radius, max floor, min τ), then sweep.
-    """
-    if scored_cfg is not None:
-        assert scored_cfg.hamming_radius >= max(hamming_radii), (
-            "scored_cfg.hamming_radius must dominate the sweep: gated rows "
-            f"assume radius {scored_cfg.hamming_radius} < swept {max(hamming_radii)}"
-        )
-        assert scored_cfg.text_floor >= max(text_floors), (
-            "scored_cfg.text_floor must be >= every swept floor: the JW gate "
-            "skips rows with lev_sorted >= the scored floor, so a higher "
-            "swept floor would evaluate the lev fallback instead of true jw"
-        )
-        assert scored_cfg.text_only_threshold <= min(text_onlys), (
-            "scored_cfg.text_only_threshold must be <= every swept tau"
-        )
-    # project the scored side to its decision inputs: a full score_pairs
-    # frame carries its own is_match/score, which would collide with the
-    # labels' ground-truth is_match in the join
-    j = labels.select("doc_a", "doc_b", "is_match").join(
-        scored.select("doc_a", "doc_b", "text_sim", "min_hamming"),
-        ["doc_a", "doc_b"],
-        "inner",
-    )
-    aggs = []
-    combos = []
-    for r in hamming_radii:
-        for fl in text_floors:
-            for to in text_onlys:
-                pred = (
-                    (F.col("min_hamming") <= r) & (F.col("text_sim") >= fl)
-                ) | (F.col("text_sim") >= to)
-                i = len(combos)
-                combos.append({"hamming_radius": r, "text_floor": fl, "text_only": to})
-                aggs.append(
-                    F.sum((F.col("is_match") & pred).cast("long")).alias(f"tp_{i}")
-                )
-                aggs.append(
-                    F.sum((~F.col("is_match") & pred).cast("long")).alias(f"fp_{i}")
-                )
-                aggs.append(
-                    F.sum((F.col("is_match") & ~pred).cast("long")).alias(f"fn_{i}")
-                )
-    row = j.agg(*aggs).collect()[0]
-    out = []
-    for i, combo in enumerate(combos):
-        tp, fp, fn = int(row[f"tp_{i}"]), int(row[f"fp_{i}"]), int(row[f"fn_{i}"])
-        p = tp / (tp + fp) if tp + fp else 1.0
-        r_ = tp / (tp + fn) if tp + fn else 1.0
-        f1 = 2 * p * r_ / (p + r_) if p + r_ else 0.0
-        out.append({**combo, "tp": tp, "fp": fp, "fn": fn, "precision": p, "recall": r_, "f1": f1})
-    return sorted(out, key=lambda d: -d["f1"])
 
 
 def blocking_recall(labels: DataFrame, blocks: DataFrame) -> float:

@@ -58,7 +58,6 @@ from mediachain_indexer_spark.operators.cluster import (
 from mediachain_indexer_spark.operators.normalize import normalize_documents
 from mediachain_indexer_spark.operators.pairs import candidate_pairs
 from mediachain_indexer_spark.operators.scoring import score_pairs
-from mediachain_indexer_spark.plans.pipeline import PipelineConfig
 from mediachain_indexer_spark.sources.merge import (
     _table_exists,
     delete_rows,
@@ -105,11 +104,7 @@ def read_store_entities(spark: SparkSession, store: EntityStore) -> DataFrame:
     return _read_or_empty(spark, store.entities, "doc_id string, entity_id string")
 
 
-def ingest_increment(
-    docs_inc: DataFrame,
-    store: EntityStore,
-    cfg: PipelineConfig = PipelineConfig(),
-) -> dict:
+def ingest_increment(docs_inc: DataFrame, store: EntityStore) -> dict:
     """Fold one increment of spans-shaped documents into the store."""
     spark = docs_inc.sparkSession
 
@@ -129,9 +124,9 @@ def ingest_increment(
     n_inc, n_changed = flagged.agg(F.count(F.lit(1)), F.count(F.when(is_changed, 1))).first()
     if n_changed:
         changed = flagged.where(is_changed).select(feats_inc.doc_id).localCheckpoint()
-        delete_docs(changed, store, cfg)
+        delete_docs(changed, store)
 
-    blocks_inc = build_blocks(feats_inc, cfg.blocking).persist()
+    blocks_inc = build_blocks(feats_inc).persist()
     keys = blocks_inc.groupBy("doc_id").agg(
         F.first("exact_hash").alias("exact_hash"),
         F.collect_list("block_key").alias("block_keys"),
@@ -145,14 +140,14 @@ def ingest_increment(
     feats_all = _read_or_empty(spark, store.features, _FEATURES_SCHEMA)
     touched_keys = blocks_inc.select("block_key").distinct()
     cand_blocks = _block_table(feats_all).join(touched_keys, "block_key", "left_semi")
-    pairs = candidate_pairs(cand_blocks, cfg.pairs)
+    pairs = candidate_pairs(cand_blocks)
 
     inc_ids = feats_inc.select("doc_id").persist()
     pa = pairs.join(inc_ids.withColumnRenamed("doc_id", "doc_a"), "doc_a", "left_semi")
     pb = pairs.join(inc_ids.withColumnRenamed("doc_id", "doc_b"), "doc_b", "left_semi")
     inc_pairs = pa.unionByName(pb).dropDuplicates(["doc_a", "doc_b"])
 
-    scored = score_pairs(inc_pairs, feats_all, cfg.scoring).persist()
+    scored = score_pairs(inc_pairs, feats_all).persist()
     matches = scored.where(F.col("is_match")).select("doc_a", "doc_b")
     n_pairs, n_matches = scored.agg(
         F.count(F.lit(1)), F.count(F.when(F.col("is_match"), 1))
@@ -192,11 +187,7 @@ def ingest_increment(
     return stats
 
 
-def delete_docs(
-    del_ids: DataFrame,
-    store: EntityStore,
-    cfg: PipelineConfig = PipelineConfig(),
-) -> dict:
+def delete_docs(del_ids: DataFrame, store: EntityStore) -> dict:
     """Remove documents from the store and re-resolve the affected entities.
 
     Deletion is the HARD mutation for transitive clustering: removing a
@@ -233,8 +224,8 @@ def delete_docs(
 
     feats_all = _read_or_empty(spark, store.features, _FEATURES_SCHEMA)
     rem_blocks = _block_table(feats_all).join(remaining, "doc_id", "left_semi")
-    pairs = candidate_pairs(rem_blocks, cfg.pairs)
-    scored = score_pairs(pairs, feats_all, cfg.scoring).persist()
+    pairs = candidate_pairs(rem_blocks)
+    scored = score_pairs(pairs, feats_all).persist()
     matches = scored.where(F.col("is_match")).select("doc_a", "doc_b")
     n_pairs = scored.count()
 

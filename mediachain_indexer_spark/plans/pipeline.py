@@ -12,19 +12,19 @@ data, no per-row Python.
 from __future__ import annotations
 
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from mediachain_indexer_spark.operators.blocking import BlockingConfig, build_blocks
+from mediachain_indexer_spark.operators.blocking import build_blocks
 from mediachain_indexer_spark.operators.cluster import (
     attach_components,
     connected_components,
 )
 from mediachain_indexer_spark.operators.normalize import normalize_documents
 from mediachain_indexer_spark.operators.pairs import PairsConfig, candidate_pairs
-from mediachain_indexer_spark.operators.scoring import ScoringConfig, score_pairs
+from mediachain_indexer_spark.operators.scoring import score_pairs
 
 # stage(name, build, key_col) -> frame; StageRunner.run has this shape
 StageHook = Callable[[str, Callable[[], DataFrame], str], DataFrame]
@@ -32,13 +32,6 @@ StageHook = Callable[[str, Callable[[], DataFrame], str], DataFrame]
 
 def _build(name: str, build: Callable[[], DataFrame], key_col: str) -> DataFrame:
     return build()
-
-
-@dataclass(frozen=True)
-class PipelineConfig:
-    blocking: BlockingConfig = field(default_factory=BlockingConfig)
-    pairs: PairsConfig = field(default_factory=PairsConfig)
-    scoring: ScoringConfig = field(default_factory=ScoringConfig)
 
 
 @dataclass
@@ -54,7 +47,7 @@ class PipelineResult:
 
 def run_pipeline(
     docs: DataFrame,
-    cfg: PipelineConfig = PipelineConfig(),
+    pairs_cfg: PairsConfig = PairsConfig(),
     stage: StageHook | None = None,
     entity_sink: str | None = None,
 ) -> PipelineResult:
@@ -71,6 +64,10 @@ def run_pipeline(
     filter and the cluster attach all re-read them, and without the cache
     the whole scan→block→pair→score DAG re-executes per action.
 
+    ``pairs_cfg`` sets the candidate-pair cap and the exact-text strategy
+    (operators/pairs.PairsConfig); blocking and scoring have no settings
+    beyond their module constants.
+
     ``entity_sink``: optional path of the canonical entity table; the final
     (doc_id, entity_id) assignments are MERGE-upserted into it by doc_id
     (sources/merge.upsert_entities — the reference's idempotent cluster
@@ -83,11 +80,9 @@ def run_pipeline(
         lambda: normalize_documents(docs).select("doc_id", "norm_text", "phashes"),
         "doc_id",
     ).persist()
-    blocks = stage("block", lambda: build_blocks(features, cfg.blocking), "block_key")
-    pairs = stage("pairs", lambda: candidate_pairs(blocks, cfg.pairs), "doc_a")
-    scored = stage(
-        "score", lambda: score_pairs(pairs, features, cfg.scoring), "doc_a"
-    ).persist()
+    blocks = stage("block", lambda: build_blocks(features), "block_key")
+    pairs = stage("pairs", lambda: candidate_pairs(blocks, pairs_cfg), "doc_a")
+    scored = stage("score", lambda: score_pairs(pairs, features), "doc_a").persist()
     matches = scored.where(F.col("is_match"))
     clusters = stage(
         "cluster",

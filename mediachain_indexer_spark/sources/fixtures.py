@@ -387,19 +387,3 @@ def write_corpus(
     with open(marker, "w") as f:
         f.write("ok\n")
     return paths
-
-
-def shuffled_spans_variant(corpus: Corpus, seed: int = SEED) -> Corpus:
-    """Same docs with each spans array permuted (offsets intact).
-
-    Feeds the span-sequence-invariant property test: normalization must
-    reproduce (kind, text, media_ref) in offset order regardless of the
-    physical array order.
-    """
-    rng = random.Random(seed * 1_000_003 + 777)
-    docs = []
-    for doc_id, spans in corpus.docs:
-        s = list(spans)
-        rng.shuffle(s)
-        docs.append((doc_id, s))
-    return Corpus(docs, corpus.labeled_pairs, corpus.expected_clusters, corpus.entities)

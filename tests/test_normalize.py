@@ -3,6 +3,8 @@ feature extraction correctness."""
 
 from __future__ import annotations
 
+import random
+
 from pyspark.sql import functions as F
 
 from mediachain_indexer_spark.operators.normalize import (
@@ -22,11 +24,26 @@ def _df_from_corpus(spark, corpus):
     return spark.createDataFrame(rows, SPANS_SCHEMA)
 
 
+def _shuffled_spans_variant(
+    corpus: fixtures.Corpus, seed: int = fixtures.SEED
+) -> fixtures.Corpus:
+    """Same docs with each spans array permuted (offsets intact)."""
+    rng = random.Random(seed * 1_000_003 + 777)
+    docs = []
+    for doc_id, spans in corpus.docs:
+        s = list(spans)
+        rng.shuffle(s)
+        docs.append((doc_id, s))
+    return fixtures.Corpus(
+        docs, corpus.labeled_pairs, corpus.expected_clusters, corpus.entities
+    )
+
+
 def test_span_sequence_invariant_under_shuffle(spark):
     """Normalization must reproduce (kind, text, media_ref) in offset order
     regardless of the physical array order — the per-row invariant."""
     corpus = fixtures.generate_corpus(300)
-    shuffled = fixtures.shuffled_spans_variant(corpus)
+    shuffled = _shuffled_spans_variant(corpus)
     a = _df_from_corpus(spark, corpus).select(
         "doc_id", span_signature("spans").alias("sig")
     )

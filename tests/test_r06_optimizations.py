@@ -194,11 +194,11 @@ def test_score_cascade_sorted_channel_matches_ungated_reference(spark):
     junk (far media + dissimilar lengths), and empty/missing-media rows."""
     from mediachain_indexer_spark.operators.scoring import (
         HAMMING_FAR,
-        ScoringConfig,
+        HAMMING_RADIUS,
+        TEXT_ONLY_THRESHOLD,
         score_pairs,
     )
 
-    cfg = ScoringConfig()
     near, far = [1], [1022]  # hamming(1, 1022) = popcount(1023) = 10 > radius 8
     feats_rows = [
         ("a1", "hello world", near),
@@ -237,8 +237,8 @@ def test_score_cascade_sorted_channel_matches_ungated_reference(spark):
         smax = max(len(sa), len(sb))
         if ta == tb or smax == 0:
             exp = 1.0
-        elif mh <= cfg.hamming_radius or (
-            1.0 - abs(len(sa) - len(sb)) / smax >= cfg.text_only_threshold
+        elif mh <= HAMMING_RADIUS or (
+            1.0 - abs(len(sa) - len(sb)) / smax >= TEXT_ONLY_THRESHOLD
         ):
             exp = 1.0 - _lev(sa, sb) / smax
         else:
@@ -248,13 +248,14 @@ def test_score_cascade_sorted_channel_matches_ungated_reference(spark):
         assert row["lev_sim_sorted"] == exp, (da, db, exp, row)
     # far media: only the sorted-equal ub (= 1.0 ≥ τ) lets the pair into
     # the DP-need branch, where the memcmp short-circuit answers it
-    assert got[("a1", "g1")]["min_hamming"] > cfg.hamming_radius
+    assert got[("a1", "g1")]["min_hamming"] > HAMMING_RADIUS
     assert got[("a1", "g1")]["lev_sim_sorted"] == 1.0
 
 
 def test_score_pairs_null_text_scores_as_empty(spark):
-    """A null norm_text scores every decision column as '' does — never
-    NULL — on far-media, in-radius and both-null pairs."""
+    """A null norm_text scores every decision column and jw as '' does, and
+    the decision columns are never NULL, on far-media, in-radius and
+    both-null pairs."""
     from mediachain_indexer_spark.operators.scoring import score_pairs
 
     near, far = [1], [1022]
@@ -267,7 +268,7 @@ def test_score_pairs_null_text_scores_as_empty(spark):
             [("a1", "hello world", near), ("n1", null_as, far), ("n2", null_as, near)],
             "doc_id string, norm_text string, phashes array<long>",
         )
-        cols = ["lev_sim_sorted", "text_sim", "score", "is_match"]
+        cols = ["lev_sim_sorted", "text_sim", "score", "is_match", "jw"]
         return {
             (r["doc_a"], r["doc_b"]): tuple(r[c] for c in cols)
             for r in score_pairs(pairs, feats).collect()
@@ -275,7 +276,10 @@ def test_score_pairs_null_text_scores_as_empty(spark):
 
     got, ref = scored(None), scored("")
     assert got == ref
-    assert all(v is not None for row in got.values() for v in row), got
+    assert all(v is not None for row in got.values() for v in row[:-1]), got
+    # in radius with one side null, jw can lift text_sim past the floor, so
+    # it is computed: against '' it is 0.0, not NULL
+    assert got[("a1", "n2")][-1] == 0.0, got
 
 
 def test_lsh_band_keys_match_transform_reference(spark):

@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 
 from mediachain_indexer_spark import session
 from mediachain_indexer_spark.functions.minhash import make_minhash_udf
-from mediachain_indexer_spark.functions.simtext import make_gated_jw
+from mediachain_indexer_spark.functions.simtext import make_jw
 from mediachain_indexer_spark.operators.blocking import build_blocks
 from mediachain_indexer_spark.operators.normalize import normalize_documents
 from mediachain_indexer_spark.operators.pairs import candidate_pairs
@@ -78,20 +78,20 @@ def test_memoized_outputs_in_one_plan_keep_inputs_apart(spark, docs500):
 def test_memo_is_keyed_by_spark_context(spark, monkeypatch):
     """A UDF binds to its context on first use, so another context gets its
     own objects; within one context a builder returns the same object."""
-    jw = make_gated_jw(8, 0.40, 0.99)
+    jw = make_jw()
     minhash = make_minhash_udf(72, 3, 42)
-    assert make_gated_jw(8, 0.40, 0.99) is jw
+    assert make_jw() is jw
     assert make_minhash_udf(72, 3, 42) is minhash
-    assert make_gated_jw(8, 0.50, 0.99) is not jw
+    assert make_minhash_udf(64, 5, 42) is not minhash
 
     other = object()  # stands in for a restarted session's SparkContext
     monkeypatch.setattr(session, "_active_context", lambda: other)
-    jw_other = make_gated_jw(8, 0.40, 0.99)
+    jw_other = make_jw()
     assert jw_other is not jw
     assert make_minhash_udf(72, 3, 42) is not minhash
-    assert make_gated_jw(8, 0.40, 0.99) is jw_other
+    assert make_jw() is jw_other
 
     monkeypatch.undo()
-    jw_again = make_gated_jw(8, 0.40, 0.99)
+    jw_again = make_jw()
     assert jw_again is not jw_other
-    assert make_gated_jw(8, 0.40, 0.99) is jw_again
+    assert make_jw() is jw_again

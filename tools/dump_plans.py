@@ -24,7 +24,8 @@ runtime).  What to look for:
   and both sides of the merge-hinted SortMergeJoin read that cache — no
   broadcast of the staged table;
 - score: BroadcastHashJoin for the two feature attachments (flips to SMJ at
-  scale via AQE stats), ArrowEvalPython = the gated Jaro-Winkler only;
+  scale via AQE stats), ArrowEvalPython = the Jaro-Winkler UDF only, its
+  two inputs null wherever the scorer's gate skips the pair;
 - ngram_jaccard: equi-joins only (no CartesianProduct / nested-loop);
 - ivf_topk: ArrowEvalPython cell assignment + BroadcastHashJoin probe —
   the corpus never shuffles before the per-query top-k window.

@@ -65,8 +65,9 @@ def main() -> None:
     n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 100_000
     from pyspark.sql import functions as F
 
+    from mediachain_indexer_spark.operators import scoring
     from mediachain_indexer_spark.plans.eval import pairwise_f1
-    from mediachain_indexer_spark.plans.pipeline import PipelineConfig, run_pipeline
+    from mediachain_indexer_spark.plans.pipeline import run_pipeline
     from mediachain_indexer_spark.session import get_spark
     from mediachain_indexer_spark.sources.fixtures import write_corpus
     from mediachain_indexer_spark.sources.io import read_documents
@@ -76,10 +77,9 @@ def main() -> None:
 
     paths = write_corpus(os.path.join(REPO, ".cache", f"fx{n_docs}"), n_docs)
     docs = read_documents(spark, paths["spans_documents"])
-    cfg = PipelineConfig()
 
     t0 = time.monotonic()
-    res = run_pipeline(docs, cfg)
+    res = run_pipeline(docs)
     truth = (
         spark.read.parquet(paths["expected_clusters"])
         .withColumnRenamed("entity_id", "true_entity")
@@ -92,9 +92,9 @@ def main() -> None:
     out = {
         "n_docs": n_docs,
         "config": {
-            "hamming_radius": cfg.scoring.hamming_radius,
-            "floor": cfg.scoring.text_floor,
-            "tau": cfg.scoring.text_only_threshold,
+            "hamming_radius": scoring.HAMMING_RADIUS,
+            "floor": scoring.TEXT_FLOOR,
+            "tau": scoring.TEXT_ONLY_THRESHOLD,
         },
         "n_matches": res.matches.count(),
         "n_entities": res.clusters.select("entity_id").distinct().count(),
